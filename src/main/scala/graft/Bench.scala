@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.JsonString
 import scala.util.control.NonFatal
 
 /** Headline benchmark: times every registered query at
@@ -284,7 +285,7 @@ object Bench {
     * shape preserved; BenchSpec pins both). */
   def envJson(env: Seq[(String, String)]): String =
     if (env.isEmpty) ""
-    else env.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+    else env.map { case (k, v) => JsonString.quote(k) + ":" + JsonString.quote(v) }
       .mkString(",\"env\":{", ",", "}")
 
   /** The live env block for this process: scratch dir as resolved by

@@ -136,8 +136,13 @@ object SessionTuning {
 
   /** `SPARK_GRAFT_SQLCONF=k=v;k=v` — experiment/deployment overrides. */
   def overrides(): Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_SQLCONF").toSeq
-      .flatMap(_.split(";"))
+    sys.env.get("SPARK_GRAFT_SQLCONF").fold(Seq.empty[(String, String)])(parse)
+
+  /** `k=v;k=v` → pairs in order. Segments are trimmed; blank segments
+    * and segments without `=` are dropped; a value keeps every `=` after
+    * the first. */
+  def parse(s: String): Seq[(String, String)] =
+    s.split(";").toSeq
       .map(_.trim).filter(s => s.nonEmpty && s.contains("="))
       .map { kv =>
         val i = kv.indexOf('=')
@@ -150,6 +155,22 @@ object SessionTuning {
 
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     effective().foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+}
+
+/** JSON string literals for the hand-rendered harness artifacts. */
+object JsonString {
+  /** `s` quoted, with backslash, quote and ALL control chars (<0x20)
+    * escaped — a tab or CR in builder-authored SQL or an env value would
+    * otherwise make a consumer's json.load fail. */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }
 
 /** One operator query: a Spark plan + (optionally) DuckDB oracle SQL

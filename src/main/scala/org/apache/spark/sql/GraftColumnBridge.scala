@@ -20,4 +20,15 @@ object GraftColumnBridge {
       builder: Seq[Expression] => Expression): Unit =
     s.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** A Dataset whose logical plan IS the cache entry of the persisted
+    * `df` — a single `InMemoryRelation` leaf. Frames derived from it
+    * analyse and plan a leaf instead of re-analysing (and re-matching
+    * against the cache) the whole lineage `df` was built from. */
+  def cachedLeaf(df: DataFrame): DataFrame = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val entry = s.sharedState.cacheManager.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+      .getOrElse(throw new IllegalArgumentException("cachedLeaf needs a persisted frame"))
+    classic.Dataset.ofRows(s, entry.cachedRepresentation)
+  }
 }

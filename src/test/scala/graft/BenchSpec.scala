@@ -361,9 +361,27 @@ class BenchSpec extends SparkSpec {
   }
 
   test("SessionTuning parses SPARK_GRAFT_SQLCONF-shaped override strings") {
-    // the parser itself is env-driven; pin the defaults list shape so a
-    // default can never land without a value (silent builder no-op)
+    import graft.core.SessionTuning.parse
+    // `;` separates pairs, in order, with whitespace trimmed
+    assert(parse("a.b=1; c.d = x ;e=2") == Seq("a.b" -> "1", "c.d" -> "x", "e" -> "2"))
+    // only the first `=` splits: a value keeps the rest
+    assert(parse("spark.x=k=v;y==") == Seq("spark.x" -> "k=v", "y" -> "="))
+    // blank segments and segments without `=` are dropped
+    assert(parse(";; ;a=1;;noeq; ") == Seq("a" -> "1"))
+    assert(parse("") == Nil)
+    // a default can never land without a value (silent builder no-op)
     assert(graft.core.SessionTuning.defaults.forall { case (k, v) =>
       k.nonEmpty && v.nonEmpty })
+  }
+
+  test("env values with quote, backslash and tab render as valid JSON") {
+    import org.json4s._
+    val nasty = "say \"hi\"\tC:\\tmp"
+    val line = Bench.metricLine("/sf", 3, Seq("q1_agg" -> Seq(1.0)),
+      Map.empty, Nil, Nil, Nil, None, env = Seq("sqlconf" -> nasty))
+    assert(org.json4s.jackson.JsonMethods.parse(line) \ "env" \ "sqlconf" == JString(nasty), line)
+    // the one escaper both harness artifacts use
+    assert(graft.core.JsonString.quote(nasty) == "\"say \\\"hi\\\"\\tC:\\\\tmp\"")
+    assert(graft.core.JsonString.quote("\u0001") == "\"\\u0001\"")
   }
 }
