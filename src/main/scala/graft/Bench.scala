@@ -30,9 +30,8 @@ import scala.util.control.NonFatal
   *      samples: a contended board shows a fat `mid_hash`/`mid_spark`
   *      range in the committed JSON itself;
   *   2. every sweep's wall total, GC-time delta and codegen-compile
-  *      delta are emitted in a `sweeps` array (previously stderr-only
-  *      behind SPARK_GRAFT_PERSWEEP), so "sweep-1 cold" vs "board-wide
-  *      load" is decidable from the artifact;
+  *      delta are emitted in a `sweeps` array, so "sweep-1 cold" vs
+  *      "board-wide load" is decidable from the artifact;
   *   3. the FULL per-query record (raw per-sweep times, every calib
   *      sample with its position, per-sweep counters) is written to
   *      [[detailPath]] in the repo — the stdout line had outgrown the
@@ -157,8 +156,8 @@ object Bench {
       build: Double = 0.0, warm: Boolean = false,
       builds: Seq[(String, Double)] = Nil, calibFlag: Boolean = false,
       rerunOf: Option[Int] = None, dropped: Boolean = false,
-      // explicit sweep number (ADVICE r19: with SPARK_GRAFT_WARMSWEEP=0
-      // the array index no longer equals sweep−1, so rerun_of was
+      // explicit sweep number (ADVICE r19: replacement sweeps append
+      // after the counted ones, so the array index alone left rerun_of
       // ambiguous to consumers); −1 = not set (unit-test fixtures) →
       // field omitted from both JSON forms
       sweep: Int = -1)
@@ -454,33 +453,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine, not a fixed small number: the driver
-    // always sets SPARK_GRAFT_CPUS=32 explicitly, but round-15 lost a
-    // night of board arms to the old "4" default — local ablation
-    // boards silently ran at local[4] while the isolated QueryProbe
-    // anchors ran at local[32], manufacturing a phantom 2-7x "in-sweep
-    // regression" on every CPU-bound family. A measurement tool's
-    // default must match the measurement protocol.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.SessionTuning.configure(graft.core.LocalDirs.configure(SparkSession.builder()))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's union-preserves-partitioning feature zips co-partitioned
-      // union children; a memoized frame whose AQE-materialized partition
-      // count diverges from its claimed partitioning crashes the zip
-      // (q233 hot at clone10) -- keep the sound concatenating Union
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // the default 100-entry codegen-class LRU thrashes under a
-      // 130-query board: the r13 persweep instrument measured ~1985
-      // recompilations in EVERY sweep, not just the first — size the
-      // cache to the workload, as a long-lived service would
-      // (sweep 2+3 compile deltas drop to ~80 with this set)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val cpus = graft.core.Session.cpus()
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Registration order keeps each query family contiguous (the old
     // HashMap iteration interleaved families arbitrarily), and each
@@ -491,21 +465,10 @@ object Bench {
     // prefixes or full names); local-iteration knob, unset in driver runs.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val preselected = only match {
+    val selected = only match {
       case Some(ns) => SparkEntry.all.filter(q =>
         ns(q.name) || ns(q.name.takeWhile(_ != '_')))
       case None => SparkEntry.all
-    }
-    // SPARK_GRAFT_SKIP=q128 -> bench everything EXCEPT the named
-    // queries; the ablation knob for attributing a sweep-context
-    // regression to one query's in-sweep presence (round-13 q128
-    // experiment). Local-diagnostic knob, unset in driver runs.
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = skip match {
-      case Some(ns) => preselected.filterNot(q =>
-        ns(q.name) || ns(q.name.takeWhile(_ != '_')))
-      case None => preselected
     }
     val repeat = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt)
     val order = selected.map(_.name)
@@ -544,29 +507,23 @@ object Bench {
       // timed sweeps start; a production service would do exactly this
       // at deploy). Per-sweep memoization rebuild stays billed to each
       // sweep's first consumer — releaseAll below restores the same
-      // between-sweep state as always. SPARK_GRAFT_PREWARM=0 disables
-      // (the A/B knob).
+      // between-sweep state as always.
       //
       // NonFatal, not Throwable (ADVICE r15): a prewarm-induced
       // OutOfMemoryError must ABORT the board — timed sweeps in a
       // JVM that has already thrown OOM would be silently corrupt.
-      if (!sys.env.get("SPARK_GRAFT_PREWARM").contains("0")) {
-        val pwDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-        if (pwDir.isDirectory) {
-          selected.foreach { q =>
-            try q.run(spark, pwDir.toString).write.format("noop").mode("overwrite").save()
-            catch { case NonFatal(_) => () }
-            hooks.getOrElse(q.name, Nil).foreach(_(spark))
-          }
-          Caches.releaseAll(spark)
+      val pwDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
+      if (pwDir.isDirectory) {
+        selected.foreach { q =>
+          try q.run(spark, pwDir.toString).write.format("noop").mode("overwrite").save()
+          catch { case NonFatal(_) => () }
+          hooks.getOrElse(q.name, Nil).foreach(_(spark))
         }
+        Caches.releaseAll(spark)
       }
     } catch { case NonFatal(_) => () }
     val times = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // SPARK_GRAFT_PERSWEEP=1 -> one stderr line per sweep with every
-    // per-query time; the summary counters now always land in the JSON.
-    val perSweep = sys.env.get("SPARK_GRAFT_PERSWEEP").contains("1")
     val calib = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     val midSamples = scala.collection.mutable.ArrayBuffer[CalibSample]()
     val (h0, s0) = calibrate(spark)
@@ -576,22 +533,8 @@ object Bench {
     // sweeps), force-build each selected family's memoized frames so
     // no query's median absorbs a family build. The cost is recorded
     // per sweep under `build` in the JSON — billed openly, not hidden
-    // inside whichever query ran first. SPARK_GRAFT_FAMBUILD=0
-    // restores the pre-r17 first-consumer billing (the A/B knob).
-    val famBuild = !sys.env.get("SPARK_GRAFT_FAMBUILD").contains("0")
+    // inside whichever query ran first.
     val selectedNames = selected.map(_.name).toSet
-    // DISCARDED WARM SWEEP (round 17, VERDICT r16 item 3's second
-    // lever): even with the kernel pre-warm and the untimed family
-    // builds, sweep 1 carried a ~20% sum excess over steady state
-    // (BENCH detail: 366 vs 155 residual codegen compiles — each
-    // query's sf-specific plan variants still compile on first timed
-    // evaluation). Run one full sweep UNTIMED first (sweep 0 in the
-    // artifact, `warm: true`; its per-query times never enter the
-    // medians), so the counted sweeps all run at steady state and
-    // their sums agree. Costs one sweep of wall clock; the warm
-    // sweep's counters still land in `sweeps` so the compile mass
-    // stays visible. SPARK_GRAFT_WARMSWEEP=0 disables (the A/B knob).
-    val warmSweep = !sys.env.get("SPARK_GRAFT_WARMSWEEP").contains("0")
     // ONE sweep's full protocol (family prebuild → timed queries with
     // mid-calib samples → release), returning its per-query times and
     // errors for the CALLER to adjudicate — counted, warm and
@@ -599,8 +542,7 @@ object Bench {
     // caller does with the result.
     def runOneSweep(sweep: Int): (Map[String, Double], Map[String, String], SweepStat) = {
       val familyBuilds =
-        if (!famBuild) Nil
-        else try Caches.prebuild(spark, sfDir, selectedNames)
+        try Caches.prebuild(spark, sfDir, selectedNames)
         catch { case NonFatal(e) =>
           System.err.println(s"family prebuild failed: $e"); Nil }
       val buildSec = familyBuilds.map(_._2).sum
@@ -624,18 +566,10 @@ object Bench {
         hooks.getOrElse(q.name, Nil).foreach(_(spark))
       }
       // drop EVERY memo map entry between sweeps so each sweep rebuilds
-      // its caches from cold; by default the rebuild lands in the next
-      // sweep's NAMED untimed prebuild slot (SPARK_GRAFT_FAMBUILD=0
-      // restores the pre-r17 first-consumer billing).
+      // its caches from cold; the rebuild lands in the next sweep's
+      // NAMED untimed prebuild slot
       Caches.releaseAll(spark)
       val (cgN1, _) = codegenStats
-      if (perSweep) {
-        val qd = sweepTimes.map { case (n, t) =>
-          n.takeWhile(_ != '_') + "=" + fmt(t) }.mkString(" ")
-        System.err.println(s"[persweep] sweep=$sweep total=" +
-          fmt(sweepTimes.values.sum) + s" gc_ms=${gcMillis - gc0}" +
-          s" codegen_compiles=${cgN1 - cgN0} $qd")
-      }
       (sweepTimes.toMap, sweepErrs.toMap,
         SweepStat(sweepTimes.values.sum, gcMillis - gc0, cgN1 - cgN0,
           buildSec, warm = sweep == 0, builds = familyBuilds, sweep = sweep))
@@ -646,7 +580,18 @@ object Bench {
     val statBySweep = scala.collection.mutable.LinkedHashMap[Int, SweepStat]()
     val timesBySweep = scala.collection.mutable.LinkedHashMap[Int, Map[String, Double]]()
     val errsBySweep = scala.collection.mutable.LinkedHashMap[Int, Map[String, String]]()
-    for (sweep <- (if (warmSweep) 0 else 1) to repeat) {
+    // DISCARDED WARM SWEEP (round 17, VERDICT r16 item 3's second
+    // lever): even with the kernel pre-warm and the untimed family
+    // builds, sweep 1 carried a ~20% sum excess over steady state
+    // (BENCH detail: 366 vs 155 residual codegen compiles — each
+    // query's sf-specific plan variants still compile on first timed
+    // evaluation). Run one full sweep UNTIMED first (sweep 0 in the
+    // artifact, `warm: true`; its per-query times never enter the
+    // medians), so the counted sweeps all run at steady state and
+    // their sums agree. Costs one sweep of wall clock; the warm
+    // sweep's counters still land in `sweeps` so the compile mass
+    // stays visible.
+    for (sweep <- 0 to repeat) {
       val (st, errs, stat) = runOneSweep(sweep)
       statBySweep(sweep) = stat
       if (sweep >= 1) { timesBySweep(sweep) = st; errsBySweep(sweep) = errs }
@@ -666,8 +611,6 @@ object Bench {
     // MACHINE is busy, and endless re-runs would chase it. Replacement
     // sweeps never trigger further re-runs (bounded by construction:
     // at most one extra sweep per originally-flagged sweep).
-    // SPARK_GRAFT_RERUN=0 disables (the A/B knob).
-    val rerunOn = !sys.env.get("SPARK_GRAFT_RERUN").contains("0")
     val dropped = scala.collection.mutable.Set[Int]()
     val rerunOfMap = scala.collection.mutable.Map[Int, Int]()
     // the flag set as DECIDED at adjudication time, per sweep (ADVICE
@@ -680,21 +623,19 @@ object Bench {
     val flagDecision = scala.collection.mutable.Map[Int, Boolean]()
     val preFlags = flaggedSweeps(midSamples.toSeq)
     statBySweep.keys.foreach(no => flagDecision(no) = preFlags(no))
-    if (rerunOn) {
-      val flaggedOrig = preFlags.filter(_ >= 1).toSeq.sorted
-      var nextNo = repeat
-      flaggedOrig.foreach { orig =>
-        nextNo += 1
-        val rn = nextNo
-        System.err.println(s"[rerun] counted sweep $orig calib-flagged; running replacement sweep $rn")
-        val (st, errs, stat) = runOneSweep(rn)
-        statBySweep(rn) = stat
-        rerunOfMap(rn) = orig
-        val rnFlagged = flaggedSweeps(midSamples.toSeq).contains(rn)
-        flagDecision(rn) = rnFlagged
-        if (rnFlagged) dropped += rn
-        else { dropped += orig; timesBySweep(rn) = st; errsBySweep(rn) = errs }
-      }
+    val flaggedOrig = preFlags.filter(_ >= 1).toSeq.sorted
+    var nextNo = repeat
+    flaggedOrig.foreach { orig =>
+      nextNo += 1
+      val rn = nextNo
+      System.err.println(s"[rerun] counted sweep $orig calib-flagged; running replacement sweep $rn")
+      val (st, errs, stat) = runOneSweep(rn)
+      statBySweep(rn) = stat
+      rerunOfMap(rn) = orig
+      val rnFlagged = flaggedSweeps(midSamples.toSeq).contains(rn)
+      flagDecision(rn) = rnFlagged
+      if (rnFlagged) dropped += rn
+      else { dropped += orig; timesBySweep(rn) = st; errsBySweep(rn) = errs }
     }
     // fold the KEPT counted sweeps into the medians, in sweep order
     timesBySweep.foreach { case (no, st) =>
@@ -730,7 +671,7 @@ object Bench {
     val detailName =
       try {
         val w = new java.io.PrintWriter(detailPath, "UTF-8")
-        try w.println(detailJson(sfDir, repeat, cpus, ordered, errors.toMap,
+        try w.println(detailJson(sfDir, repeat, cpus.toString, ordered, errors.toMap,
           calib.toSeq, midSamples.toSeq, sweepStatsFlagged, anchors, env))
         finally w.close()
         Some(new java.io.File(detailPath).getName)

@@ -118,10 +118,9 @@ object Caches {
     * the peak is measured harmless (the r17 boards are the evidence);
     * a larger-SF deployment staggers instead — build each family just
     * before its FIRST consumer, still billed to this slot — which
-    * keeps the hooks' bounded-resident invariant. The dial exists
-    * (SPARK_GRAFT_FAMBUILD=0 + the hooks) rather than the staggered
-    * scheduler, because the measured fixture cost of the simple form
-    * is zero. */
+    * keeps the hooks' bounded-resident invariant. The simple form
+    * ships rather than the staggered scheduler because its measured
+    * fixture cost is zero. */
   def prebuild(s: SparkSession, dir: String, selected: Set[String]): Seq[(String, Double)] =
     families.collect {
       case (name, consumers, _, build) if consumers.exists(selected) =>

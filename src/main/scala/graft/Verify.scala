@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.core.JsonString
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,24 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.SessionTuning.configure(graft.core.LocalDirs.configure(SparkSession.builder()))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // session-wide so no per-read conf mutation (ADVICE r1): events.ts
-      // is parquet TIMESTAMP(NANOS), unsupported by the vectorized reader
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's union-preserves-partitioning feature zips co-partitioned
-      // union children; a memoized frame whose AQE-materialized partition
-      // count diverges from its claimed partitioning crashes the zip
-      // (q233 hot at clone10) -- keep the sound concatenating Union
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // sized to the full query board (see Bench) — static conf, so set
-      // at session create
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = graft.core.Session.builder(graft.core.Session.cpus()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q90,q93 -> dump only the named queries (same

@@ -157,6 +157,44 @@ object SessionTuning {
     effective().foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 }
 
+/** The one session factory: Bench, Verify, the specs and every tool
+  * main build their session from [[builder]], so the board, the
+  * correctness dump and a probe run the same engine configuration at
+  * the same width. */
+object Session {
+  /** `SPARK_GRAFT_CPUS`, else the machine's core count. A measurement
+    * tool's default must match the measurement protocol: round 15 lost
+    * a night of board arms to local boards at one width and isolated
+    * probes at another (a phantom 2-7x "regression"). */
+  def cpus(): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+
+  /** A `local[cpus]` builder carrying every engine-wide setting; the
+    * caller adds its app name (and any warehouse dir) and calls
+    * `getOrCreate`. */
+  def builder(cpus: Int): SparkSession.Builder =
+    SessionTuning.configure(LocalDirs.configure(SparkSession.builder()))
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // events.ts is parquet TIMESTAMP(NANOS), which the vectorized
+      // reader does not support; session-wide, so no per-read conf flip
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Spark 4.1's union-preserves-partitioning feature zips
+      // co-partitioned union children; a memoized frame whose
+      // AQE-materialized partition count diverges from its claimed
+      // partitioning crashes the zip with "Can't zip RDDs with unequal
+      // numbers of partitions" (q233 hot at clone10; cold runs replan
+      // and pass) -- keep the sound concatenating Union
+      .config("spark.sql.unionOutputPartitioning", "false")
+      // the default 100-entry codegen-class LRU thrashes under the
+      // query board: ~1985 recompilations in EVERY sweep, not just the
+      // first (r13); sized to the workload, sweep 2+3 compile deltas
+      // drop to ~80. Static conf, so it is set at session create.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+}
+
 /** JSON string literals for the hand-rendered harness artifacts. */
 object JsonString {
   /** `s` quoted, with backslash, quote and ALL control chars (<0x20)

@@ -3329,7 +3329,7 @@ object LlmText {
         |FROM s JOIN cum ON cum.source = s.source AND cum.ttr = s.ttr
         |       JOIN n ON n.source = s.source
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      percentileNorm(s, dir, usePersist = false)
+      percentileNorm(s, dir)
     },
 
     // ---- Contamination attribution (round 16 — the WHICH question
@@ -4226,14 +4226,19 @@ object LlmText {
     // while heavy passes are decided; MEMORY_AND_DISK degrades to
     // disk at 100 TB doc counts. The max probe materializes the
     // cache (sequential actions — no concurrent-stage race), and
-    // releaseAll drops it with the other ad-hoc frames.
-    d.persist()
-    graft.Caches.registerPersisted(d)
+    // releaseAll drops it with the other ad-hoc frames. The persisted
+    // frame is an internal alias, never the caller's `d`: releaseAll
+    // must not unpersist a frame the caller cached and still owns. The
+    // marker column is what makes it distinct: a select of the same
+    // columns (even re-aliased) canonicalizes to `d`'s plan, so its
+    // persist would be a no-op and its unpersist would drop `d`.
+    val p = d.withColumn("offsets_alias", lit(true)).persist()
+    graft.Caches.registerPersisted(p)
     // the max(doc_id) probe reads only that column
-    val maxId = Option(d.agg(max("doc_id")).first().get(0))
+    val maxId = Option(p.agg(max("doc_id")).first().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     val width = (maxId / nBuckets.max(1) + 1).max(1L)
-    val bucketed = d.withColumn("bucket", expr(s"doc_id DIV $width"))
+    val bucketed = p.withColumn("bucket", expr(s"doc_id DIV $width"))
     // tiny: one row per bucket → exclusive prefix on the driver
     val totals = bucketed.groupBy("bucket").agg(sum("n_tokens").as("tot"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
@@ -4246,7 +4251,7 @@ object LlmText {
       .withColumn("tok_offset",
         coalesce(element_at(typedLit(offsets), col("bucket")), lit(0L))
           + cum - col("n_tokens"))
-      .drop("bucket")
+      .drop("bucket", "offsets_alias")
   }
 
   /** q221's span frame, memoized + persisted per (session, dir) like
@@ -4514,28 +4519,22 @@ object LlmText {
         Seq("doc_id", "span_start", "span_len", "span_md5"), "left_anti")
   }
 
-  /** q205 body, persist-parameterized for the round-18 TripleAb
-    * adjudication (VERDICT r17 #1): the ADVICE-r16 persist landed
-    * unmeasured and q205 became a >2× board mover. Three consumers
-    * read the narrow (doc_id, source, ttr) projection; whether
-    * caching it beats recomputing the qualityStats kernel per
-    * consumer is a MEASURED decision (the q133 counter-example: an
-    * InMemoryRelation changes the optimizer's size evidence). The
-    * registered query pins the winning arm; `tools.PersistAb` runs
-    * both arms interleaved in one session. */
-  private[graft] def percentileNorm(s: SparkSession, dir: String,
-      usePersist: Boolean): DataFrame = {
+  /** q205 body. Three consumers read the narrow (doc_id, source, ttr)
+    * projection, and it is deliberately NOT persisted: the ADVICE-r16
+    * persist landed unmeasured and made q205 a >2× board mover
+    * (0.43 → 1.17 s), and the round-18 interleaved A/B (VERDICT r17
+    * #1; README "Round-18 persist adjudication") measured persist
+    * 0.86 s vs recompute 0.73 s median — an InMemoryRelation changes
+    * the optimizer's size evidence (the q133 counter-example). */
+  private[graft] def percentileNorm(s: SparkSession, dir: String): DataFrame = {
     val st = graft.plans.TextKernels.qualityStats(lower(col("text")))
-    val base = docs(s, dir)
+    val scored = docs(s, dir)
       .select(col("doc_id"), col("source"), st.as("st"))
       .select(col("doc_id"), col("source"),
         element_at(col("st"), 1).as("nt"), element_at(col("st"), 2).as("nd"))
       .filter(col("nt") > 0)
       .select(col("doc_id"), col("source"),
         expr("(1000000 * nd) div nt").cast("long").as("ttr"))
-    val scored = if (usePersist) {
-      val p = base.persist(); graft.Caches.registerPersisted(p); p
-    } else base
     val h = scored.groupBy("source", "ttr").agg(count(lit(1)).as("c"))
     val below = h.withColumn("below",
       sum("c").over(Window.partitionBy("source").orderBy("ttr")) - col("c"))

@@ -2952,7 +2952,7 @@ object TextMining {
         |       (1000::HUGEINT * (conc - disc) * 2
         |        // NULLIF(n.n::HUGEINT * (n.n - 1), 0))::BIGINT AS tau_milli
         |FROM n JOIN cd USING (source) ORDER BY source""".stripMargin) { (s, dir) =>
-      signalConcordance(s, dir, usePersist = false)
+      signalConcordance(s, dir)
     },
 
     // ---- blocklist census (round 18): the dirty-lexicon scan every
@@ -3074,27 +3074,21 @@ object TextMining {
       .orderBy("doc_id")
   }
 
-  /** q210 body, persist-parameterized for the round-18 TripleAb
-    * adjudication (VERDICT r17 #1): the ADVICE-r16 persist landed
-    * unmeasured and q210 became the board's biggest mover (0.68 →
-    * 2.18 s, flat across sweeps). Four consumers read the narrow
-    * (doc_id, source, x, y) projection; whether caching beats
-    * recomputing the qualityStats kernel per consumer is a MEASURED
-    * decision. The registered query pins the winning arm;
-    * `tools.PersistAb` runs both arms interleaved in one session. */
-  private[graft] def signalConcordance(s: SparkSession, dir: String,
-      usePersist: Boolean): DataFrame = {
+  /** q210 body. Four consumers read the narrow (doc_id, source, x, y)
+    * projection, and it is deliberately NOT persisted: the ADVICE-r16
+    * persist landed unmeasured and made q210 the board's biggest mover
+    * (0.68 → 2.18 s, flat across sweeps), and the round-18 interleaved
+    * A/B (VERDICT r17 #1; README "Round-18 persist adjudication")
+    * measured persist 4.06 s vs recompute 1.44 s median (2.8×). */
+  private[graft] def signalConcordance(s: SparkSession, dir: String): DataFrame = {
     val st = graft.plans.TextKernels.qualityStats(lower(col("text")))
-    val base = docs(s, dir)
+    val sdf = docs(s, dir)
       .select(col("doc_id"), col("source"), st.as("st"))
       .select(col("doc_id"), col("source"),
         element_at(col("st"), 1).as("nt"), element_at(col("st"), 2).as("nd"))
       .filter(col("nt") > 0)
       .select(col("doc_id"), col("source"), col("nt").as("x"),
         expr("(1000000 * nd) div nt").cast("long").as("y"))
-    val sdf =
-      if (usePersist) { val p = base.persist(); graft.Caches.registerPersisted(p); p }
-      else base
     // histograms are the ONLY corpus-scale aggregations; everything
     // else (per-source n, both decile maps) folds over these
     // value-bounded frames — 3 corpus passes total in the unpersisted

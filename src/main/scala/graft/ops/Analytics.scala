@@ -684,8 +684,11 @@ object Analytics {
 
   /** The adaptive-cell prune pass: (p_partkey, pc, sz) in, the
     * certainly-not-dominated candidate band out. Factored from
-    * `skyline` so AnalyticsSweep can measure the PRUNE RATE
-    * (|candidates| / |input|) per fixture directly.
+    * `skyline` so the PRUNE RATE (|candidates| / |input|) is a direct
+    * count; the round-13 price grid (README "Adaptive-skyline price
+    * grid") measured it distribution-determined and scale-independent
+    * — 1.56% uniform at 100k and 1M rows, 5.0% skewed, 1.50% on the
+    * part table — and SkylineSpec pins the band.
     *
     * Shape at 100 TB: the probe is one sketch aggregate (partial-
     * combined, ≤ cells values collected); the bound table is

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * [[ExtractRecord]] expression as the SQL function `extract_record`,
   * so `spark.sql("SELECT extract_record(rec).* FROM corpus")` works.
   * Install via `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  * or `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * or a session builder's `withExtensions(new GraftExtensions)`.
   * No custom Rule/Strategy is registered — nothing in the engine's
   * semantics needs planner surgery (SURVEY §4). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

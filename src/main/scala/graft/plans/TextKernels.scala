@@ -413,9 +413,9 @@ case class RepetitionStats(child: Expression) extends UnaryExpression {
   *     verify).
   * The two arms produce DIFFERENT hash values — only the candidate
   * sets differ (both supersets of truth); the verified span output is
-  * identical (SubstringDedupSpec pins arm equivalence; WindowAb
-  * asserts equal span counts). WindowAb measured the span-family
-  * build interleaved, cold medians: sf0.1 FNV 1.11 s vs rolling
+  * identical (SubstringDedupSpec pins arm equivalence; the round-19
+  * interleaved A/B also saw equal span counts). That A/B measured the
+  * span-family build, cold medians: sf0.1 FNV 1.11 s vs rolling
   * 1.02 s (5 rounds), clone100 FNV 14.32 s vs rolling 13.84 s (3
   * rounds; 500k spans) — the fold is a small slice of a candidate-
   * join-dominated build at k=8, but the rolling arm reads

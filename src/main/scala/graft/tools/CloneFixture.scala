@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builds the duplicate-heavy scale-sweep fixture behind the README's
@@ -17,17 +16,7 @@ object CloneFixture {
     require(args.length >= 2, "usage: CloneFixture <srcSfDir> <outDir> [K]")
     val Array(src, out) = args.take(2)
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's union-preserves-partitioning feature zips co-partitioned
-      // union children; a memoized frame whose AQE-materialized partition
-      // count diverges from its claimed partitioning crashes the zip
-      // (q233 hot at clone10) -- keep the sound concatenating Union
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.builder(graft.core.Session.cpus()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val copies = spark.range(k).select(col("id").as("copy"))
     val docs = spark.read.parquet(s"$src/documents.parquet")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Parse/merge throughput benchmark on a GenCorpus file — the
   * apples-to-apples comparison against the reference's single-threaded
   * scan.py on the same bytes (see README "Throughput vs reference").
@@ -9,14 +7,8 @@ import org.apache.spark.sql.SparkSession
 object CorpusBench {
   def main(args: Array[String]): Unit = {
     val path = args(0)
-    val cpus = if (args.length > 1) args(1) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.unionOutputPartitioning", "false") // see Bench.scala
-      .getOrCreate()
+    val cpus = args.lift(1).fold(graft.core.Session.cpus())(_.toInt)
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val mb = new java.io.File(path).length() / 1e6
     val t0 = System.nanoTime()

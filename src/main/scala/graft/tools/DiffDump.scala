@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Differential-validation dump (BASELINE.md protocol): parse+merge a
   * GenCorpus file in STRICT-PARITY mode and write the four relational
   * tables as parquet, for a row-level compare against the SQLite the
@@ -10,14 +8,8 @@ import org.apache.spark.sql.SparkSession
 object DiffDump {
   def main(args: Array[String]): Unit = {
     val Array(path, outDir) = args.take(2)
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.unionOutputPartitioning", "false") // see Bench.scala
-      .getOrCreate()
+    val cpus = args.lift(2).fold(graft.core.Session.cpus())(_.toInt)
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
     val merged = graft.registry.TrialMerge

@@ -1,24 +1,23 @@
 package graft.tools
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 
-/** Generic isolated-median probe — the repo's established regression
-  * triage protocol (GraphProbe for q109/q113, StreamProbe for the
-  * streaming trio, Q101Probe for BM25), generalized to ANY registered
-  * query so a fresh sweep regression (BENCH_r11: q107 0.21 → 0.91 s,
-  * 4.28×, with zero r11 change to `ingest/JsonlSource.scala`) gets an
-  * isolated number without a bespoke tool per query.
+/** The one query probe: an isolated look at any registered query in a
+  * session from [[graft.core.Session]], so its numbers and plans come
+  * from the board's own engine configuration and width.
   *
-  * Protocol matches GraphProbe: page-cache warmup of every table, then
-  * per run `Caches.releaseAll` (the bench's between-sweep state) before
-  * a COLD timing and a HOT timing in the same session. The isolated
-  * cold median is directly comparable to the sweep's per-query median;
-  * a cold median at the previous round's level names the regression
+  * Timing protocol: page-cache warmup of every table, then per run
+  * `Caches.releaseAll` (the bench's between-sweep state) before a COLD
+  * timing and a HOT timing in the same session. The isolated cold
+  * median is directly comparable to the sweep's per-query median; a
+  * cold median at the previous round's level names the regression
   * "sweep context load", a raised one names the query itself.
   *
-  * Usage:
+  * Usage (query prefixes or full names; sfDir defaults to sf0.1):
   *   `runMain graft.tools.QueryProbe q107,q109 [sfDir] [runs]`
-  *     (query prefixes or full names; defaults /root/testdata/sf0.1, 5)
+  *     cold/hot medians over `runs` (default 5) runs per query.
   *   `runMain graft.tools.QueryProbe --flagged [sfDir] [runs] [detail] [commitTag]`
   *     batch anchor-refresh mode (round 19, VERDICT r18 item 6: nine
   *     stale fast-flags needed four manual chunk sessions in r18) —
@@ -30,6 +29,16 @@ import org.apache.spark.sql.SparkSession
   *     ready to splice in. The patch is advisory — the curator still
   *     decides whether a flag was drift (patch it) or a regression
   *     (fix the query instead).
+  *   `runMain graft.tools.QueryProbe --plan qNN[,...] [sfDir] [outDir]`
+  *     the formatted plan, then the final adaptive plan after one
+  *     noop run (AQE's exchange reuse, broadcast conversions and skew
+  *     splits only appear at runtime); with `outDir`, one `qNN.txt`
+  *     per query instead of stdout.
+  *   `runMain graft.tools.QueryProbe --stages qNN[,...] [sfDir] [runs]`
+  *     `runs` (default 2) cold runs per query; the last one's stages
+  *     sorted by executor run time, with CPU, input, shuffle
+  *     read/write, fetch-wait and spill — which operator the time goes
+  *     to, without the Spark UI.
   */
 object QueryProbe {
 
@@ -57,22 +66,19 @@ object QueryProbe {
       commit: String, calib: String): String =
     f"""  "$name": {%n   "cold": $cold%.2f,%n   "hot": $hot%.2f,%n   "commit": "$commit",%n   "calib": "$calib"%n  }"""
 
-  def main(args: Array[String]): Unit = {
+  private val Usage =
+    "usage: QueryProbe [--plan|--stages] q107[,q109...]|--flagged [sfDir] [runs|outDir]"
+
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some(mode @ ("--plan" | "--stages")) => probe(mode, args.tail)
+    case _ => probe("--time", args)
+  }
+
+  /** `args` = (qNN[,...] | --flagged) [sfDir] [runs | outDir] ... */
+  private def probe(mode: String, args: Array[String]): Unit = {
     val flaggedMode = args.headOption.contains("--flagged")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val runs = args.lift(2).map(_.toInt).getOrElse(5)
-    val spark = graft.core.SessionTuning.configure(graft.core.LocalDirs.configure(SparkSession.builder())).master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's union-preserves-partitioning feature zips co-partitioned
-      // union children; a memoized frame whose AQE-materialized partition
-      // count diverges from its claimed partitioning crashes the zip
-      // (q233 hot at clone10) -- keep the sound concatenating Union
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // match Bench r13
-      .getOrCreate()
+    val spark = graft.core.Session.builder(graft.core.Session.cpus()).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val selected =
@@ -87,8 +93,7 @@ object QueryProbe {
       } else {
         val wanted = args.headOption
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-          .getOrElse(sys.error(
-            "usage: QueryProbe q107[,q109...]|--flagged [sfDir] [runs]"))
+          .getOrElse(sys.error(Usage))
         graft.SparkEntry.all.filter(q =>
           wanted(q.name) || wanted(q.name.takeWhile(_ != '_')))
       }
@@ -97,16 +102,28 @@ object QueryProbe {
       spark.stop(); return
     }
     require(selected.nonEmpty, "no query matches the request")
+    mode match {
+      case "--plan" => plans(spark, selected, sfDir, args.lift(2))
+      case "--stages" => stages(spark, selected, sfDir, args.lift(2).map(_.toInt).getOrElse(2))
+      case _ => time(spark, selected, sfDir, args.lift(2).map(_.toInt).getOrElse(5),
+        if (flaggedMode) Some(args.lift(4).getOrElse("rNN")) else None)
+    }
+    spark.stop()
+  }
 
-    def time(q: graft.core.Q): Double = {
+  private def noop(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Cold/hot medians per query; with `patchTag` (the `--flagged`
+    * mode) also the ANCHORS.json patch for them. */
+  private def time(spark: SparkSession, selected: Seq[graft.core.Q], sfDir: String,
+      runs: Int, patchTag: Option[String]): Unit = {
+    def timed(q: graft.core.Q): Double = {
       val t0 = System.nanoTime()
-      q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+      noop(q.run(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
-    // page-cache warmup (Bench does the same before timing)
-    graft.core.T.names.foreach { t =>
-      graft.core.T.df(spark, sfDir, t).write.format("noop").mode("overwrite").save()
-    }
+    warmPageCache(spark, sfDir)
     // fixed-work calibration before and after (r13: the instrument that
     // makes "machine drift" a measurement — same pair Bench emits)
     val (h0, s0) = graft.Bench.calibrate(spark)
@@ -117,8 +134,8 @@ object QueryProbe {
       val hot = Vector.newBuilder[Double]
       for (_ <- 1 to runs) {
         graft.Caches.releaseAll(spark) // the bench's between-sweep state
-        cold += time(q)
-        hot += time(q)
+        cold += timed(q)
+        hot += timed(q)
       }
       val (c, h) = (cold.result(), hot.result())
       def med(xs: Vector[Double]) = graft.Bench.median(xs)
@@ -128,7 +145,7 @@ object QueryProbe {
     }
     val (h1, s1) = graft.Bench.calibrate(spark)
     println(f"calib post: hash $h1%.3f s  spark $s1%.3f s")
-    if (flaggedMode) {
+    patchTag.foreach { commitTag =>
       // committed anchors are DEFINED as sf0.1 flat-calib medians; a
       // probe at any other SF would emit wrong-scale values in
       // splice-ready form (ADVICE r19) — print the measurements but
@@ -137,7 +154,6 @@ object QueryProbe {
         println(s"REFUSING ANCHORS_PATCH.json: sfDir '$sfDir' is not the " +
           "anchor-defining sf0.1 dataset (anchors are sf0.1 medians)")
       } else {
-        val commitTag = args.lift(4).getOrElse("rNN")
         val calibStr = f"$h0%.3f/$h1%.3f"
         val patch = results.result()
           .map { case (n, c, h) => patchEntry(n, c, h, commitTag, calibStr) }
@@ -149,6 +165,79 @@ object QueryProbe {
         try w.println("{\n" + patch + "\n}") finally w.close()
       }
     }
-    spark.stop()
+  }
+
+  /** Page-cache warmup of every table (Bench does the same before
+    * timing). */
+  private def warmPageCache(spark: SparkSession, sfDir: String): Unit =
+    graft.core.T.names.foreach(t => noop(graft.core.T.df(spark, sfDir, t)))
+
+  /** `--plan`: formatted plan, one noop run, then the final adaptive
+    * plan of the same QueryExecution. */
+  private def plans(spark: SparkSession, selected: Seq[graft.core.Q], sfDir: String,
+      outDir: Option[String]): Unit = {
+    outDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
+    selected.foreach { q =>
+      val qe = q.run(spark, sfDir).queryExecution
+      val formatted = qe.explainString(ExplainMode.fromString("formatted"))
+      qe.toRdd.foreach(_ => ()) // noop sink: AQE finalizes `qe`'s plan in place
+      val txt = s"== ${q.name} @ $sfDir (${spark.sparkContext.master}) ==\n" +
+        s"$formatted\n== final adaptive plan ==\n${qe.executedPlan}\n"
+      outDir match {
+        case Some(d) =>
+          val p = java.nio.file.Paths.get(d, s"${q.name.takeWhile(_ != '_')}.txt")
+          java.nio.file.Files.write(p, txt.getBytes("UTF-8"))
+          System.err.println(s"wrote $p")
+        case None => print(txt)
+      }
+    }
+    graft.Caches.releaseAll(spark)
+  }
+
+  final case class StageRow(id: Int, name: String, tasks: Int, runMs: Long,
+      cpuMs: Long, inB: Long, srB: Long, swB: Long, fetchMs: Long, spillB: Long)
+
+  /** `--stages`: per query, `runs` cold runs (caches released before
+    * each); the stages of the LAST run by executor run time. */
+  private def stages(spark: SparkSession, selected: Seq[graft.core.Q], sfDir: String,
+      runs: Int): Unit = {
+    import scala.jdk.CollectionConverters._
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo; val m = si.taskMetrics
+        if (m != null) rows.add(StageRow(si.stageId, si.name.takeWhile(_ != '\n'),
+          si.numTasks, m.executorRunTime, m.executorCpuTime / 1000000,
+          m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
+          m.shuffleWriteMetrics.bytesWritten, m.shuffleReadMetrics.fetchWaitTime,
+          m.memoryBytesSpilled))
+      }
+    }
+    warmPageCache(spark, sfDir)
+    def mb(b: Long) = b / 1048576.0
+    selected.foreach { q =>
+      var wall = 0.0
+      for (r <- 1 to runs) {
+        graft.Caches.releaseAll(spark)
+        // profile only the LAST run
+        if (r == runs) { rows.clear(); spark.sparkContext.addSparkListener(listener) }
+        val t0 = System.nanoTime()
+        noop(q.run(spark, sfDir))
+        wall = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"${q.name} run $r: $wall%.2f s")
+      }
+      spark.sparkContext.removeSparkListener(listener)
+      Thread.sleep(300) // let the listener bus drain
+      val all = rows.asScala.toSeq.sortBy(-_.runMs)
+      println(f"== ${q.name} last-run wall $wall%.2f s — stages by executor run time ==")
+      println(f"${"stage"}%6s ${"tasks"}%5s ${"run_ms"}%8s ${"cpu_ms"}%8s " +
+        f"${"in_MB"}%8s ${"sr_MB"}%8s ${"sw_MB"}%8s ${"fetch_ms"}%8s ${"spill_MB"}%8s  name")
+      all.take(30).foreach { r =>
+        println(f"${r.id}%6d ${r.tasks}%5d ${r.runMs}%8d ${r.cpuMs}%8d " +
+          f"${mb(r.inB)}%8.1f ${mb(r.srB)}%8.1f ${mb(r.swB)}%8.1f " +
+          f"${r.fetchMs}%8d ${mb(r.spillB)}%8.1f  ${r.name.take(90)}")
+      }
+      println(f"total executor run ${all.map(_.runMs).sum}ms across ${all.size} stages")
+    }
   }
 }

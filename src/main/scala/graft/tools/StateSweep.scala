@@ -47,18 +47,7 @@ object StateSweep {
     //   SPARK_GRAFT_SQLCONF="spark.sql.streaming.stateStore.providerClass=
     //     org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     // against the same sweep, no rebuild.
-    val spark = graft.core.SessionTuning.configure(
-      graft.core.LocalDirs.configure(SparkSession.builder())).master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's union-preserves-partitioning feature zips co-partitioned
-      // union children; a memoized frame whose AQE-materialized partition
-      // count diverges from its claimed partitioning crashes the zip
-      // (q233 hot at clone10) -- keep the sound concatenating Union
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.builder(graft.core.Session.cpus()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     for (factor <- Seq(1, k); joinType <- Seq("inner", "left_outer")) {

@@ -239,8 +239,9 @@ class BenchSpec extends SparkSpec {
   }
 
   test("sweep rows carry their explicit sweep number in both JSON forms") {
-    // ADVICE r19: with SPARK_GRAFT_WARMSWEEP=0 the array index is no
-    // longer sweep−1, so rerun_of needs an explicit per-row number
+    // ADVICE r19: replacement sweeps append after the counted ones, so
+    // the array index alone is not sweep−1 and rerun_of needs an
+    // explicit per-row number
     import org.json4s._
     val sweeps = Seq(
       Bench.SweepStat(5.0, 10L, 300L, 2.0, warm = true, sweep = 0),

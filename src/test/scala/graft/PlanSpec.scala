@@ -1411,7 +1411,9 @@ class PlanSpec extends SparkSpec {
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val p = plan("q238_substring_incremental_artifacts")
+      val ex = SparkEntry.queries("q238_substring_incremental_artifacts")(spark, dir)
+        .queryExecution.executedPlan
+      val p = ex.toString
       assert(p.contains("graft_gram_index_"),
         s"gram side not reading the catalog bucket table:\n$p")
       assert(p.contains("graft_span_index_"),
@@ -1433,6 +1435,45 @@ class PlanSpec extends SparkSpec {
       // documents-scan of the CORPUS side with the gram kernel (the
       // memoized corpusGrams signature: xxhash64 windows over a
       // NOT((doc_id % 10) = 0) documents scan feeding an IMR).
+      import org.apache.spark.sql.catalyst.expressions.Not
+      import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+      // a plan's own nodes, stopping at (and including) cache scans
+      def own(n: SparkPlan): Seq[SparkPlan] = n match {
+        case a: AdaptiveSparkPlanExec => own(a.executedPlan)
+        case q: QueryStageExec => own(q.plan)
+        case c: InMemoryTableScanExec => Seq(c)
+        case _ => n +: n.children.flatMap(own)
+      }
+      // every cached relation the plan reads, nested caches included
+      def relations(n: SparkPlan): Seq[InMemoryRelation] =
+        own(n).collect { case c: InMemoryTableScanExec => c.relation }
+          .flatMap(r => r +: relations(r.cachedPlan))
+      // a gram-kernel node whose own subtree filters the documents scan
+      // to the corpus side (a NOT over doc_id: the delta side has none)
+      def corpusGramKernel(n: SparkPlan): Boolean = own(n).exists { g =>
+        val below = own(g)
+        g.expressions.exists(_.exists(_.isInstanceOf[plans.WindowHashes])) &&
+          below.exists {
+            case f: FilterExec => f.condition.exists {
+              case not: Not => not.references.exists(_.name == "doc_id")
+              case _ => false
+            }
+            case _ => false
+          } &&
+          below.exists {
+            case sc: FileSourceScanExec =>
+              sc.relation.location.rootPaths.exists(_.getName == "documents.parquet")
+            case _ => false
+          }
+      }
+      val cached = relations(ex)
+      assert(cached.nonEmpty, s"no per-cycle cache in the plan — the pin below is vacuous:\n$p")
+      val leaked = cached.filter(r => corpusGramKernel(r.cachedPlan))
+      assert(leaked.isEmpty,
+        "an in-memory frame caches the corpus-side gram kernel (memoized corpusGrams):\n" +
+          leaked.map(_.cachedPlan.treeString).mkString("\n"))
       assert(!p.contains("CartesianProduct"), p)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)

@@ -11,18 +11,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = graft.core.Session.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's union-preserves-partitioning feature zips co-partitioned
-      // union children; a memoized frame whose AQE-materialized partition
-      // count diverges from its claimed partitioning crashes the zip
-      // (q233 hot at clone10) -- keep the sound concatenating Union
-      .config("spark.sql.unionOutputPartitioning", "false")
       // static conf: saveAsTable targets (BucketedSpec) land in /tmp,
       // never in the repo working tree
       .config("spark.sql.warehouse.dir",

@@ -41,4 +41,16 @@ class PackingSpec extends SparkSpec {
     check(Seq(42L -> 9L), Seq(1, 8))
     check(Seq.empty, Seq(1, 4))
   }
+
+  test("releaseAll keeps a frame the caller persisted before globalOffsets") {
+    import spark.implicits._
+    val df = (0L until 20L).map(i => i -> (i % 3)).toDF("doc_id", "n_tokens").persist()
+    try {
+      df.count()
+      LlmText.globalOffsets(df, 4).collect()
+      graft.Caches.releaseAll(spark)
+      assert(df.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "releaseAll unpersisted the caller's frame")
+    } finally df.unpersist()
+  }
 }
