@@ -463,13 +463,8 @@ object Bench {
     // were the prime suspect for round 4's diffuse 2-8x regressions.
     // SPARK_GRAFT_ONLY=q58,q1 -> bench only the named queries (qNN
     // prefixes or full names); local-iteration knob, unset in driver runs.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(ns) => SparkEntry.all.filter(q =>
-        ns(q.name) || ns(q.name.takeWhile(_ != '_')))
-      case None => SparkEntry.all
-    }
+    val selected = sys.env.get("SPARK_GRAFT_ONLY")
+      .fold(SparkEntry.all)(o => SparkEntry.select(o.split(",")))
     val repeat = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt)
     val order = selected.map(_.name)
     val hooks = Caches.releaseHooks(order)

@@ -19,6 +19,14 @@ object SparkEntry {
       ops.Profile.qs ++ ops.Graph.qs ++ llm.TextMining.qs ++ ops.Audit.qs ++
       ops.Analytics.qs ++ ops.Layout.qs ++ ops.Eval.qs
 
+  /** The registered queries named in `names` (full names or `qNN`
+    * prefixes; blanks ignored), in registration order — the selector
+    * behind `SPARK_GRAFT_ONLY` and the probe's query list. */
+  def select(names: Iterable[String]): Seq[Q] = {
+    val ns = names.map(_.trim).filter(_.nonEmpty).toSet
+    all.filter(q => ns(q.name) || ns(q.name.takeWhile(_ != '_')))
+  }
+
   /** Flagship: the end-to-end reference slice (SURVEY §7.2) — corpus →
     * record split → 47-field extract → single-shuffle merge → user
     * WHERE via expr() → semi-join chain → condensed export row.

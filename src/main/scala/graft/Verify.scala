@@ -11,15 +11,11 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q90,q93 -> dump only the named queries (same
     // local-iteration knob as Bench; unset in driver runs)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(ns) => SparkEntry.all.filter(q =>
-        ns(q.name) || ns(q.name.takeWhile(_ != '_')))
-      case None => SparkEntry.all
-    }
-    // registration order (families contiguous) + release each family's
-    // memoization caches after its last consumer — same hygiene as Bench
+    val selected = sys.env.get("SPARK_GRAFT_ONLY")
+      .fold(SparkEntry.all)(o => SparkEntry.select(o.split(",")))
+    // registration order (families contiguous); each query's hook
+    // releases its own frames and any family it is the last reader
+    // of — same hygiene as Bench
     val hooks = Caches.releaseHooks(selected.map(_.name))
     selected.foreach { q =>
       try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -212,15 +212,26 @@ object JsonString {
 }
 
 /** One operator query: a Spark plan + (optionally) DuckDB oracle SQL
-  * producing identical column names, values and row order. */
+  * producing identical column names, values and row order. `reads`
+  * names the cache families whose memos the plan's construction reads
+  * (see [[graft.Caches]]). */
 final case class Q(
     name: String,
-    run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    build: (SparkSession, String) => DataFrame,
+    oracle: Option[String],
+    reads: Seq[graft.Family]) {
+  /** Builds the plan as the session's running query, so the frames
+    * its construction persists are released by its own hook. */
+  def run: (SparkSession, String) => DataFrame = { (s, dir) =>
+    graft.Caches.enter(s, name)
+    build(s, dir)
+  }
+}
 
 object Q {
-  def apply(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, Some(oracle))
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
+  def apply(name: String, oracle: String, reads: graft.Family*)(
+      run: (SparkSession, String) => DataFrame): Q =
+    Q(name, run, Some(oracle), reads)
+  def noOracle(name: String, reads: graft.Family*)(run: (SparkSession, String) => DataFrame): Q =
+    Q(name, run, None, reads)
 }

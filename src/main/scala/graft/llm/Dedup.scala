@@ -41,11 +41,21 @@ object Dedup {
     * round materializes (localCheckpoint would store a copy the
     * Dataset API gives no handle to release). The returned frame is a
     * plain projection over the FINAL round's persisted RDD — one
-    * result-sized footprint, dropped by the ContextCleaner when the
-    * caller's plan releases it; `sym` and every intermediate are freed
-    * before returning. */
+    * result-sized footprint, released by the running query's hook
+    * ([[graft.Caches.onRelease]]); `sym` and every intermediate are
+    * freed before returning. A caller that keeps the frame longer uses
+    * [[componentsHeld]] and unpersists that RDD with it. */
   def components(pairs: DataFrame, aCol: String, bCol: String,
                  maxIters: Int = 20): DataFrame = {
+    val (out, last) = componentsHeld(pairs, aCol, bCol, maxIters)
+    last.foreach(r => graft.Caches.onRelease(pairs.sparkSession)(r.unpersist()))
+    out
+  }
+
+  /** [[components]] plus the final round's persisted RDD the frame
+    * reads (None for a pair-free graph). */
+  def componentsHeld(pairs: DataFrame, aCol: String, bCol: String, maxIters: Int = 20)
+      : (DataFrame, Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]) = {
     val sym = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
       .union(pairs.select(col(bCol).as("a"), col(aCol).as("b")))
       .persist()
@@ -63,7 +73,7 @@ object Dedup {
     if (prevSum.isEmpty) {
       val empty = labels.select(col("id"), col("lbl").as("cluster_rep"))
       labels.unpersist(); sym.unpersist()
-      return empty // empty graph: recomputing the 0-row plan is free
+      return (empty, None) // empty graph: recomputing the 0-row plan is free
     }
     val session = pairs.sparkSession
     var prevRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
@@ -91,7 +101,7 @@ object Dedup {
     val out = labels.select(col("id"), col("lbl").as("cluster_rep"))
     labels.unpersist()
     sym.unpersist()
-    out
+    (out, prevRdd)
   }
 
   /** Survivors after near-dup clustering: drop every non-representative

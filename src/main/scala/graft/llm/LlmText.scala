@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.{Caches, Family}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -392,15 +393,13 @@ object LlmText {
     * function lambdas evaluate interpreted — that formulation is kept
     * in [[tokenHashArrPlan]] as a spec-pinned differential cross-check
     * of the kernel, and as the open-vocabulary fallback discussion. */
-  private val hashCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[llm] def tokenHashArr(s: SparkSession, dir: String): DataFrame =
-    hashCache.computeIfAbsent((s, dir), _ =>
+    Caches.memo(Family.Text, s, "hash|" + dir)(
       docs(s, dir)
         .select(col("doc_id"),
           graft.plans.TextKernels.tokenHashes(lower(col("text"))).as("hs"))
         .filter(size(col("hs")) > 0)
-        .persist())
+        .persist())(_.unpersist())
 
   /** The relational DICTIONARY formulation of [[tokenHashArr]] (hash
     * each DISTINCT token once, join it back), un-memoized, plus its
@@ -432,11 +431,14 @@ object LlmText {
     (out, dict)
   }
 
-  /** Shingle sets from the token-hash arrays (cheap arithmetic
-    * transform), persisted: the sketch is computed ONCE and reused by
-    * every join branch (candidate generation + verification) — the same
-    * "materialize signatures, then join" shape a 100 TB run uses by
-    * writing the signature table out before the bucket join. */
+  /** Duplication ratio below which [[classPairs]] (shingle-class
+    * collapse) beats the doc-level band join: the collapse pays one
+    * wide array-keyed shuffle up front, which only amortizes when
+    * clone mass is substantial. Fixtures measure 0.79–0.89 distinct,
+    * a 10×-cloned corpus 0.08 — 0.5 separates the regimes with a wide
+    * margin on both sides. */
+  private val CollapseBelow = 0.5
+
   /** MinHash-LSH verified near-dup pairs (shared by q41 and q57).
     * Signatures and band keys are the
     * [[graft.plans.TextKernels.minhashBands]] native kernel — 64
@@ -454,18 +456,8 @@ object LlmText {
     * "write the pair table out once, then iterate on it", which the
     * clustering loop then does against a persisted input instead of
     * re-running candidate generation per downstream consumer. */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  /** Duplication ratio below which [[classPairs]] (shingle-class
-    * collapse) beats the doc-level band join: the collapse pays one
-    * wide array-keyed shuffle up front, which only amortizes when
-    * clone mass is substantial. Fixtures measure 0.79–0.89 distinct,
-    * a 10×-cloned corpus 0.08 — 0.5 separates the regimes with a wide
-    * margin on both sides. */
-  private val CollapseBelow = 0.5
-
   private[graft] def lshPairs(s: SparkSession, dir: String): DataFrame =
-    pairCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Text, s, "pair|" + dir) {
       val docs = docShingles(s, dir)
       // ADAPTIVE strategy pick (the AQE spirit: plan from data stats):
       // probe duplication with one cheap aggregate — the hash is a
@@ -478,7 +470,7 @@ object LlmText {
                    else docLevelPairs(docs)).persist()
       pairs.count() // materialize before downstream consumers fan out
       pairs
-    })
+    }(_.unpersist())
 
   /** The doc-level band join + per-pair verify — the right shape when
     * content is mostly distinct (no wide class shuffle); quadratic in
@@ -577,24 +569,25 @@ object LlmText {
       .select(col("doc_id"), col("h").as("w1"),
         ((col("h") * 31 + element_at(col("hs"), col("pos") + 2)) % M).as("bh"))
 
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  /** Shingle sets from the token-hash arrays (cheap arithmetic
+    * transform), persisted: the sketch is computed ONCE and reused by
+    * every join branch (candidate generation + verification) — the same
+    * "materialize signatures, then join" shape a 100 TB run uses by
+    * writing the signature table out before the bucket join. */
   private[graft] def docShingles(s: SparkSession, dir: String): DataFrame =
-    shingleCache.computeIfAbsent((s, dir), _ =>
+    Caches.memo(Family.Text, s, "shingle|" + dir)(
       tokenHashArr(s, dir)
         .select(col("doc_id"),
           graft.plans.TextKernels.shingleSet(col("hs")).as("sh"))
         .filter(size(col("sh")) > 0)
-        .persist())
+        .persist())(_.unpersist())
 
   /** Brute-force exact-Jaccard pairs over the capped corpus — the
     * blocked-kernel baseline ([[graft.plans.PairJaccard]]; same
     * materialize-blocks-once shape as `LlmVector.blockedPairs`),
     * memoized + persisted per (session, dir). */
-  private val bruteJacCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def bruteJaccardPairs(s: SparkSession, dir: String): DataFrame =
-    bruteJacCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Text, s, "bruteJac|" + dir) {
       val blocks = docShingles(s, dir).filter(col("doc_id") < BruteCap)
         .select(pmod(col("doc_id"), lit(8)).as("g"),
           struct(col("doc_id"), sort_array(col("sh"))).as("ds"))
@@ -609,7 +602,7 @@ object LlmText {
       pairs.count() // materialize, then drop the intermediate block table
       blocks.unpersist()
       pairs
-    })
+    }(_.unpersist())
 
   /** q124: EXACT Jaccard ≥ 0.5 join over (doc_id, sh) shingle-set
     * rows via prefix filtering (AllPairs, Bayardo et al. WWW'07),
@@ -662,13 +655,13 @@ object LlmText {
     // recompute it (measured: docShingles rebuilt 7× by one run).
     // Size argument: classes ≤ |dsh| rows (one per distinct shingle
     // set) with the same arrays dsh already persists — same memory
-    // class as the family's existing caches. Released by releaseAll.
+    // class as the family's existing caches. Released by the running
+    // query's hook (Caches.persistForQuery).
     val classes = dsh
       .groupBy(sort_array(col("sh")).as("shs"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .withColumn("cid", element_at(col("ids"), 1))
-      .persist()
-    graft.Caches.registerPersisted(classes)
+      .transform(Caches.persistForQuery)
     classes.count()
     val within = classes.filter(size(col("ids")) > 1)
       .select(size(col("shs")).cast("long").as("n"), explode(expr(
@@ -733,8 +726,7 @@ object LlmText {
         (row_number().over(wd.orderBy(col("dfc"), col("sh")))
           + (col("n") - count(lit(1)).over(wd))).as("fr"))
       .filter(expr("fr <= n div 2 + 1"))
-      .persist()
-    graft.Caches.registerPersisted(pre)
+      .transform(Caches.persistForQuery)
     pre.count()
     // PPJoin positional filter on the candidate join (measured at
     // sf0.1: the bare prefix join generated 408k candidate class
@@ -937,34 +929,25 @@ object LlmText {
     * per-query posting projection, far smaller than the corpus), so
     * the N/Σdl scalars and the tf pass both read one materialization
     * instead of tokenizing twice. */
-  private val bm25Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[graft] def bm25Pre(s: SparkSession, dir: String, terms: Seq[String]): DataFrame =
     // Key includes the (order-insensitive) term set: the projection is
     // filtered to `terms`, so a second caller with different query
     // terms must NOT reuse it — it would silently score against the
-    // first caller's postings. The dir+terms composite keeps the
-    // (session, String) key shape Caches.dropSession releases on.
-    bm25Cache.computeIfAbsent((s, dir + "|" + terms.sorted.mkString(",")), _ =>
+    // first caller's postings.
+    Caches.memo(Family.Text, s, "bm25|" + dir + "|" + terms.sorted.mkString(","))(
       docs(s, dir)
         .select(col("doc_id"), tokens(col("text")).as("t"))
         .select(col("doc_id"), size(col("t")).cast("long").as("dl"),
           filter(col("t"), w => w.isin(terms: _*)).as("mt"))
-        .persist())
+        .persist())(_.unpersist())
 
   /** Drop every memoized frame owned by `s` (see [[graft.Caches]]):
-    * unpersists the token-hash, shingle, verified-pair, and BM25
-    * posting frames. Within a sweep the text-dedup family shares
-    * them; after the family's last consumer they are dead weight in
-    * the storage tier. */
-  def release(s: SparkSession): Unit =
-    Seq(hashCache, shingleCache, pairCache, bruteJacCache, compCache,
-      bm25Cache, langCmCache, splitGramCache, simPairCache, spanCache,
-      corpusGramCache, corpusSpanCache)
-      .foreach(graft.Caches.dropSession(_, s)(_.unpersist()))
+    * within a sweep the text-dedup family shares them; after the
+    * family's last consumer they are dead weight in the storage tier. */
+  def release(s: SparkSession): Unit = Family.Text.release(s)
 
   /** q101's fixed (q_id, term) query table — factored to a constant so
-    * [[prebuild]] keys the SAME bm25Cache entry the query reads. */
+    * [[prebuild]] keys the SAME bm25Pre memo the query reads. */
   private[llm] val Bm25QueryTerms: Seq[(Long, String)] =
     Seq(0L -> "join", 0L -> "hash", 1L -> "vector",
       1L -> "scan", 1L -> "filter", 2L -> "merge", 2L -> "slow")
@@ -990,6 +973,7 @@ object LlmText {
     spansFrame(s, dir).count()
     corpusGrams(s, dir).count()
     corpusSpans(s, dir).count()
+    qualityBase(s, dir)
     // q237/q238's disk artifacts: the writes are ingest's job
     // (yesterday's artifacts) — written once per session, so sweeps
     // 2+ cost a catalog lookup here
@@ -1004,10 +988,8 @@ object LlmText {
     * vocabulary-bounded rows, never corpus-bounded; exchange reuse
     * alone deduped only the join's two sides, the totals branch
     * re-ran the explode — measured 3 corpus scans without this). */
-  private val splitGramCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def splitGramCounts(s: SparkSession, dir: String): DataFrame =
-    splitGramCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Text, s, "splitGram|" + dir) {
       docs(s, dir)
         .select(TextMining.splitHash(col("doc_id")).as("hh"),
           expr("filter(split(text, ' '), x -> x != '')").as("ws"))
@@ -1017,16 +999,16 @@ object LlmText {
           explode(expr(TextMining.triHashes("ws"))).as("h"))
         .groupBy("h", "split").agg(count(lit(1)).as("c"))
         .persist()
-    })
+    }(_.unpersist())
 
   /** Connected components over the memoized pair table, memoized
     * themselves: q57 (listing) and q91 (size histogram) share ONE run
     * of the iterative label-propagation loop. */
-  private val compCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def docComponents(s: SparkSession, dir: String): DataFrame =
-    compCache.computeIfAbsent((s, dir), _ =>
-      Dedup.components(lshPairs(s, dir), "doc_a", "doc_b").persist())
+    Caches.memo(Family.Text, s, "comp|" + dir) {
+      val (out, last) = Dedup.componentsHeld(lshPairs(s, dir), "doc_a", "doc_b")
+      (out.persist(), last)
+    } { case (out, last) => out.unpersist(); last.foreach(_.unpersist()) }._1
 
   /** 2^k for k = 0..29 (SimHash bit weights). */
   val pow2: Seq[Long] = (0 until 30).map(k => 1L << k)
@@ -1117,9 +1099,6 @@ object LlmText {
         expr("(1000 * inter) div (ss - inter)").as("jm"))
   }
 
-  private val simPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** q66's pair computation, factored for q172: kernel SimHash per
     * doc, sketch-class collapse (hamming-0 = within-class pairs;
     * cross-class candidates from a 3×10-bit band join over DISTINCT
@@ -1131,11 +1110,11 @@ object LlmText {
     * consumer (~2 s of q203's residual after the Myers kernel removed
     * the DP cost); the frame is |pairs|·3 longs — pennies resident. */
   private[graft] def simhashHamPairs(s: SparkSession, dir: String): DataFrame =
-    simPairCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Text, s, "simPair|" + dir) {
       val p = simhashHamPairsUncached(s, dir).persist()
       p.count() // materialize before downstream consumers fan out
       p
-    })
+    }(_.unpersist())
 
   private def simhashHamPairsUncached(s: SparkSession, dir: String): DataFrame = {
     val sims = tokenHashArr(s, dir)
@@ -1330,7 +1309,7 @@ object LlmText {
         |SELECT sp.doc_id, sp.span_start, sp.span_len,
         |       md5(array_to_string(tl.t[sp.span_start : sp.span_start + sp.span_len - 1], ' ')) AS span_md5
         |FROM sp JOIN tl USING (doc_id)
-        |ORDER BY doc_id, span_start""".stripMargin) { (s, dir) =>
+        |ORDER BY doc_id, span_start""".stripMargin, Family.Text) { (s, dir) =>
       spansFrame(s, dir).orderBy("doc_id", "span_start")
     },
 
@@ -1355,7 +1334,7 @@ object LlmText {
         |SELECT mm.doc_id, agg.kept_id, agg.n_members,
         |       (mm.doc_id = agg.kept_id) AS survivor
         |FROM mm JOIN agg USING (k)
-        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+        |ORDER BY doc_id""".stripMargin, Family.Text) { (s, dir) =>
       // join the MEMOIZED component frame (round 22): the generic
       // PairGraph arm re-ran the iterative components loop on every
       // evaluation, while q57/q91/q232 already share one run via the
@@ -1408,7 +1387,7 @@ object LlmText {
         |       coalesce(sum(cv.dup_toks), 0)::BIGINT AS dup_tokens,
         |       (1000 * coalesce(sum(cv.dup_toks), 0) // NULLIF(sum(tok.nt), 0))::BIGINT AS dup_milli
         |FROM tok LEFT JOIN dd USING (doc_id) LEFT JOIN cv USING (doc_id)
-        |GROUP BY tok.source ORDER BY tok.source""".stripMargin) { (s, dir) =>
+        |GROUP BY tok.source ORDER BY tok.source""".stripMargin, Family.Text) { (s, dir) =>
       val spans = spansFrame(s, dir)
       val cov = spanCoverage(spans)
       val dd = spans.groupBy("doc_id").agg(count(lit(1)).as("n_spans"))
@@ -1457,7 +1436,7 @@ object LlmText {
         |       FROM sm GROUP BY span_md5)
         |SELECT span_md5, n_occ, n_docs, min_len, max_len, token_mass, first_doc
         |FROM cl WHERE n_docs >= 2
-        |ORDER BY token_mass DESC, span_md5 LIMIT 20""".stripMargin) { (s, dir) =>
+        |ORDER BY token_mass DESC, span_md5 LIMIT 20""".stripMargin, Family.Text) { (s, dir) =>
       spansFrame(s, dir)
         .groupBy("span_md5")
         .agg(count(lit(1)).as("n_occ"),
@@ -1477,7 +1456,7 @@ object LlmText {
     // shingle ANYWAY (it is brute force by intent) plus a shuffle of
     // every (doc, shingle) row; the kernel runs the same n²/2 sorted-
     // merge intersections compiled, with one collect_list shuffle.
-    Q("q39_dedup_ngram_jaccard", jaccardPairsSqlCapped) { (s, dir) =>
+    Q("q39_dedup_ngram_jaccard", jaccardPairsSqlCapped, Family.Text) { (s, dir) =>
       bruteJaccardPairs(s, dir).orderBy("doc_a", "doc_b")
     },
 
@@ -1488,7 +1467,7 @@ object LlmText {
          |SELECT doc_id, s::BIGINT AS seed, ${minhashSql("sh", "s")}::BIGINT AS minhash
          |FROM dsh CROSS JOIN (SELECT unnest([1,2,3,4,5,6,7,8]) AS s)
          |GROUP BY doc_id, s
-         |ORDER BY doc_id, seed""".stripMargin) { (s, dir) =>
+         |ORDER BY doc_id, seed""".stripMargin, Family.Text) { (s, dir) =>
       // the first 8 entries of the compiled 64-seed signature ARE the
       // seed-1..8 minhashes (same family; MinhashSigsKernelSpec pins
       // the kernel equal to the HOF formulation this replaced —
@@ -1505,7 +1484,7 @@ object LlmText {
     // verification. Output equals the brute-force oracle because every
     // true pair here sits at Jaccard ≥ 0.9 where 16×4 LSH recall is ~1
     // (deterministic given the fixed hash family).
-    Q("q41_dedup_minhash_lsh", jaccardPairsSql) { (s, dir) =>
+    Q("q41_dedup_minhash_lsh", jaccardPairsSql, Family.Text) { (s, dir) =>
       lshPairs(s, dir)
     },
 
@@ -1543,7 +1522,7 @@ object LlmText {
          |FROM i JOIN ssize sa ON sa.doc_id = i.doc_a
          |       JOIN ssize sb ON sb.doc_id = i.doc_b
          |WHERE 2 * i.inter >= sa.n + sb.n - i.inter
-         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+         |ORDER BY doc_a, doc_b""".stripMargin, Family.Text) { (s, dir) =>
       prefixJaccardPairs(docShingles(s, dir))
     },
 
@@ -1563,7 +1542,7 @@ object LlmText {
          |FROM inter i JOIN ssize sa ON sa.doc_id = i.doc_a
          |             JOIN ssize sb ON sb.doc_id = i.doc_b
          |WHERE 10 * i.inter >= 9 * sa.n AND sa.n >= 10 AND sb.n >= 10
-         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+         |ORDER BY doc_a, doc_b""".stripMargin, Family.Text) { (s, dir) =>
       containmentPairs(docShingles(s, dir))
     },
 
@@ -1585,7 +1564,7 @@ object LlmText {
          |FROM inter i JOIN ssize sa ON sa.doc_id = i.doc_a
          |             JOIN ssize sb ON sb.doc_id = i.doc_b
          |WHERE 10 * i.inter >= 9 * sa.n AND sa.n >= 10 AND sb.n >= 10
-         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+         |ORDER BY doc_a, doc_b""".stripMargin, Family.Text) { (s, dir) =>
       incrementalContainmentPairs(docShingles(s, dir))
     },
 
@@ -1593,7 +1572,7 @@ object LlmText {
     // representative per cluster (the actual dedup decision). Spark
     // side is iterative min-label propagation (Dedup.components);
     // oracle recomputes via a recursive transitive closure.
-    Q("q57_dedup_clusters", clustersSql) { (s, dir) =>
+    Q("q57_dedup_clusters", clustersSql, Family.Text) { (s, dir) =>
       docComponents(s, dir)
         .select(col("id").as("doc_id"), col("cluster_rep"))
         .orderBy("doc_id")
@@ -1605,7 +1584,7 @@ object LlmText {
     // aggregations over the SAME memoized component table q57
     // computes (clusters are size ≥ 2 by construction: every graph
     // node has an edge); the second groupBy is histogram-sized.
-    Q("q91_dedup_cluster_sizes", clusterSizesSql) { (s, dir) =>
+    Q("q91_dedup_cluster_sizes", clusterSizesSql, Family.Text) { (s, dir) =>
       docComponents(s, dir)
         .groupBy("cluster_rep").agg(count(lit(1)).as("cluster_size"))
         .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
@@ -1626,7 +1605,7 @@ object LlmText {
          |  GROUP BY 1, 2)
          |SELECT doc_id,
          |       sum(CASE WHEN acc > 0 THEN (${pow2Sql})[k+1] ELSE 0 END)::BIGINT AS simhash
-         |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin, Family.Text) { (s, dir) =>
       // Per-row native kernel (graft.plans.SimHash): the oracle's tf
       // weighting is algebraically identical to summing ±1 per
       // OCCURRENCE (Σ_h tf(h)·sign_k(h) = Σ_tokens sign_k), and the
@@ -1804,7 +1783,7 @@ object LlmText {
     // case of many distinct-but-colliding sketches.
     Q("q66_dedup_simhash_ham",
       simhashPairsCore +
-        "\nSELECT doc_a, doc_b, hamming FROM hp ORDER BY doc_a, doc_b") { (s, dir) =>
+        "\nSELECT doc_a, doc_b, hamming FROM hp ORDER BY doc_a, doc_b", Family.Text) { (s, dir) =>
       simhashHamPairs(s, dir).orderBy("doc_a", "doc_b")
     },
 
@@ -1823,7 +1802,7 @@ object LlmText {
          |         WHERE d.doc_id % 20 <> 0 GROUP BY 1)
          |SELECT doc_id, n_sh::BIGINT AS n_sh, n_hit::BIGINT AS n_hit,
          |       (2 * n_hit >= n_sh) AS contaminated
-         |FROM hits ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |FROM hits ORDER BY doc_id""".stripMargin, Family.Text) { (s, dir) =>
       val sh = docShingles(s, dir)
       val bench = sh.filter(col("doc_id") % 20 === 0)
         .select(explode(col("sh")).as("sh")).distinct()
@@ -1861,7 +1840,7 @@ object LlmText {
          |       coalesce(ssize.n, 0)::BIGINT AS n3_distinct
          |FROM base LEFT JOIN s2 ON s2.doc_id = base.doc_id
          |          LEFT JOIN ssize ON ssize.doc_id = base.doc_id
-         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |ORDER BY doc_id""".stripMargin, Family.Text) { (s, dir) =>
       val st = graft.plans.TextKernels.repetitionStats(col("hs"))
       tokenHashArr(s, dir)
         .select(col("doc_id"), size(col("hs")).cast("long").as("n_tokens"), st.as("st"))
@@ -1928,7 +1907,7 @@ object LlmText {
          |SELECT doc_id,
          |  (list_sum(list_transform(hs[1:${MaxFpTokens}], (h, i) -> (h * (${powFpSql})[i]) % ${M})) % ${M})::BIGINT AS fingerprint,
          |  len(hs) AS n_tokens
-         |FROM hl ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |FROM hl ORDER BY doc_id""".stripMargin, Family.Text) { (s, dir) =>
       // dictionary-hashed token arrays; the positional fold itself is a
       // cheap arithmetic transform over ≤200 longs per row.
       val capped = slice(col("hs"), 1, MaxFpTokens)
@@ -2090,7 +2069,7 @@ object LlmText {
          |              count(*) AS n_tok
          |       FROM wm GROUP BY 1, 2)
          |SELECT doc_id, k::BIGINT AS chunk, chash::BIGINT AS chash, n_tok::BIGINT AS n_tok
-         |FROM ch ORDER BY doc_id, chunk""".stripMargin) { (s, dir) =>
+         |FROM ch ORDER BY doc_id, chunk""".stripMargin, Family.Text) { (s, dir) =>
       tokenHashArr(s, dir)
         .filter(size(col("hs")) > 0)
         .select(col("doc_id"), size(col("hs")).as("n"),
@@ -2235,7 +2214,7 @@ object LlmText {
          |         FROM dsh d LEFT JOIN bench b USING (sh)
          |         WHERE d.doc_id % 20 <> 0 GROUP BY 1)
          |SELECT doc_id, n_sh::BIGINT AS n_sh, n_hit::BIGINT AS n_hit
-         |FROM hits WHERE 2 * n_hit >= n_sh ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |FROM hits WHERE 2 * n_hit >= n_sh ORDER BY doc_id""".stripMargin, Family.Text) { (s, dir) =>
       val sh = docShingles(s, dir)
       val bench = sh.filter(col("doc_id") % 20 === 0)
         .select(explode(col("sh")).as("sh")).distinct()
@@ -2281,7 +2260,7 @@ object LlmText {
          |        FROM big LEFT JOIN c1 USING (w1) LEFT JOIN c2 USING (bh) CROSS JOIN v)
          |SELECT doc_id, count(*)::BIGINT AS n_bigrams,
          |       (sum(t) / count(*))::DECIMAL(12,2)::DOUBLE AS avg_nll
-         |FROM nll GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |FROM nll GROUP BY doc_id ORDER BY doc_id""".stripMargin, Family.Text) { (s, dir) =>
       lmScore(tokenHashArr(s, dir))
     },
 
@@ -2375,7 +2354,7 @@ object LlmText {
          |FROM inter JOIN ssize sa ON sa.doc_id = delta_id
          |           JOIN ssize sb ON sb.doc_id = index_id
          |WHERE 2 * inter >= sa.n + sb.n - inter
-         |ORDER BY delta_id, index_id""".stripMargin) { (s, dir) =>
+         |ORDER BY delta_id, index_id""".stripMargin, Family.Text) { (s, dir) =>
       val sh = docShingles(s, dir)
       val bands = sh
         .select(col("doc_id"),
@@ -2418,7 +2397,7 @@ object LlmText {
          |SELECT doc_a, doc_b, inter, uni,
          |       CASE WHEN doc_a % 10 = 0 THEN doc_a ELSE doc_b END AS eval_doc
          |FROM pairs WHERE (doc_a % 10 = 0) <> (doc_b % 10 = 0)
-         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+         |ORDER BY doc_a, doc_b""".stripMargin, Family.Text) { (s, dir) =>
       lshPairs(s, dir)
         .filter((col("doc_a") % 10 === 0) =!= (col("doc_b") % 10 === 0))
         .withColumn("eval_doc",
@@ -2473,7 +2452,7 @@ object LlmText {
         |r AS (SELECT *, row_number() OVER (PARTITION BY q_id
         |                ORDER BY score_milli DESC, doc_id) AS rk FROM agg)
         |SELECT q_id::BIGINT AS q_id, rk, doc_id, score_milli
-        |FROM r WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin) { (s, dir) =>
+        |FROM r WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin, Family.Text) { (s, dir) =>
       import s.implicits._
       val terms = Bm25QueryTerms
       val qtab = terms.toDF("q_id", "term")
@@ -2547,7 +2526,7 @@ object LlmText {
          |SELECT bucket::BIGINT AS bucket, n_pairs,
          |       (1000 * nb_sum // n_pairs)::BIGINT AS bands_milli,
          |       (pred_sum // n_pairs)::BIGINT AS pred_milli
-         |FROM b ORDER BY bucket""".stripMargin) { (s, dir) =>
+         |FROM b ORDER BY bucket""".stripMargin, Family.Text) { (s, dir) =>
       // signatures via the COMPILED [[graft.plans.TextKernels.minhashSigs]]
       // kernel (round 16): the original 64-seed HOF transform is
       // CodegenFallback — interpreted per row — and the full board
@@ -2610,7 +2589,7 @@ object LlmText {
          |nd AS (SELECT thr, count(DISTINCT d)::BIGINT AS n_docs
          |       FROM (SELECT thr, unnest([doc_a, doc_b]) AS d FROM q) GROUP BY 1)
          |SELECT thr::BIGINT AS thr, n_pairs, n_docs
-         |FROM np JOIN nd USING (thr) ORDER BY thr""".stripMargin) { (s, dir) =>
+         |FROM np JOIN nd USING (thr) ORDER BY thr""".stripMargin, Family.Text) { (s, dir) =>
       import s.implicits._
       val jm = lshPairs(s, dir)
         .select(col("doc_a"), col("doc_b"), expr("(1000 * inter) div uni").as("jm"))
@@ -2655,7 +2634,7 @@ object LlmText {
         |       (1000 * (sum(t.nt) - coalesce(sum(t.nt) FILTER (WHERE d.doc_id IS NOT NULL), 0))
         |        // NULLIF(sum(t.nt), 0))::BIGINT AS yield_milli
         |FROM tok t LEFT JOIN dup d USING (doc_id)
-        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
+        |GROUP BY 1 ORDER BY 1""".stripMargin, Family.Text) { (s, dir) =>
       val drops = docComponents(s, dir)
         .filter(col("id") =!= col("cluster_rep"))
         .select(col("id").as("doc_id"), lit(true).as("dropped"))
@@ -2710,7 +2689,7 @@ object LlmText {
         |SELECT hamming, count(*)::BIGINT AS n_pairs,
         |       min(jm)::BIGINT AS min_jm, max(jm)::BIGINT AS max_jm,
         |       (sum(jm) // count(*))::BIGINT AS mean_jm
-        |FROM jm GROUP BY 1 ORDER BY hamming""".stripMargin) { (s, dir) =>
+        |FROM jm GROUP BY 1 ORDER BY hamming""".stripMargin, Family.Text) { (s, dir) =>
       val docs = docShingles(s, dir)
       val st = docs.agg(count(lit(1)).as("n"),
         approx_count_distinct(xxhash64(col("sh"))).as("c")).first()
@@ -2739,7 +2718,7 @@ object LlmText {
          |SELECT source, lang, count(*)::BIGINT AS n_docs,
          |       count(*) FILTER (WHERE best = lang)::BIGINT AS n_match,
          |       (1000 * count(*) FILTER (WHERE best = lang) // count(*))::BIGINT AS match_milli
-         |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
+         |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin, Family.Text) { (s, dir) =>
       langConfusion(s, dir)
         .groupBy("source", "lang")
         .agg(sum("c").as("n_docs"),
@@ -2765,7 +2744,7 @@ object LlmText {
         |         count(DISTINCT s.source)::BIGINT AS nsrc
         |       FROM comp c JOIN src s USING (doc_id) GROUP BY 1)
         |SELECT csize, nsrc, count(*)::BIGINT AS n_clusters
-        |FROM cl GROUP BY 1, 2 ORDER BY csize, nsrc""".stripMargin) { (s, dir) =>
+        |FROM cl GROUP BY 1, 2 ORDER BY csize, nsrc""".stripMargin, Family.Text) { (s, dir) =>
       docComponents(s, dir)
         .select(col("id").as("doc_id"), col("cluster_rep"))
         .join(docs(s, dir).select(col("doc_id"), col("source")), "doc_id")
@@ -2804,7 +2783,7 @@ object LlmText {
         |       sum((1000000 * nt) // csize)::BIGINT AS eff_tokens_micro,
         |       (sum((1000000 * nt) // csize)
         |          // NULLIF(1000 * sum(nt), 0))::BIGINT AS soft_yield_milli
-        |FROM w GROUP BY 1 ORDER BY source""".stripMargin) { (s, dir) =>
+        |FROM w GROUP BY 1 ORDER BY source""".stripMargin, Family.Text) { (s, dir) =>
       val csize = docComponents(s, dir)
         .groupBy("cluster_rep").agg(count(lit(1)).as("csize"))
       val docCsize = docComponents(s, dir)
@@ -2862,7 +2841,7 @@ object LlmText {
         |          // (count(*) * csize * (csize - 1) // 2))::BIGINT AS density_milli,
         |       min(min_jm)::BIGINT AS min_jm,
         |       (sum(sum_jm) // sum(n_edges))::BIGINT AS mean_jm
-        |FROM cl GROUP BY csize ORDER BY csize""".stripMargin) { (s, dir) =>
+        |FROM cl GROUP BY csize ORDER BY csize""".stripMargin, Family.Text) { (s, dir) =>
       val comp = docComponents(s, dir)
         .select(col("id").as("doc_id"), col("cluster_rep"))
       val sz = comp.groupBy("cluster_rep").agg(count(lit(1)).as("csize"))
@@ -2922,7 +2901,7 @@ object LlmText {
          |       count(*)::BIGINT AS n_buckets,
          |       (bucket_size * (bucket_size - 1) // 2 * count(*))::BIGINT AS cand_pairs
          |FROM bu GROUP BY band, bucket_size ORDER BY band, bucket_size""".stripMargin
-    }) { (s, dir) =>
+    }, Family.Text) { (s, dir) =>
       docShingles(s, dir)
         .select(col("doc_id"),
           posexplode(graft.plans.TextKernels.minhashBands(col("sh")))
@@ -3054,7 +3033,7 @@ object LlmText {
         |SELECT t.source, t.n::BIGINT AS n_docs, t.diag::BIGINT AS n_match,
         |       (1000 * (t.n::HUGEINT * t.diag - sx.sv)
         |          // NULLIF(t.n::HUGEINT * t.n - sx.sv, 0))::BIGINT AS kappa_milli
-        |FROM t JOIN sx ON sx.source = t.source ORDER BY t.source""".stripMargin) { (s, dir) =>
+        |FROM t JOIN sx ON sx.source = t.source ORDER BY t.source""".stripMargin, Family.Text) { (s, dir) =>
       val cm = langConfusion(s, dir)
       val t = cm.groupBy("source").agg(sum("c").as("n"),
         sum(when(col("lang") === col("best"), col("c")).otherwise(0L)).as("diag"))
@@ -3099,7 +3078,7 @@ object LlmText {
         |          // NULLIF(coalesce(r.n_true, 0) + coalesce(k.n_pred, 0), 0))::BIGINT AS f1_milli
         |FROM r FULL OUTER JOIN k ON k.lab = r.lab
         |       FULL OUTER JOIN d ON d.lab = coalesce(r.lab, k.lab)
-        |ORDER BY lang""".stripMargin) { (s, dir) =>
+        |ORDER BY lang""".stripMargin, Family.Text) { (s, dir) =>
       val cm = langConfusion(s, dir).groupBy("lang", "best").agg(sum("c").as("c"))
       val r = cm.groupBy(col("lang").as("lab")).agg(sum("c").as("n_true"))
       val k = cm.groupBy(col("best").as("lab")).agg(sum("c").as("n_pred"))
@@ -3203,7 +3182,7 @@ object LlmText {
          |       (1000 * count(*) // tb.n)::BIGINT AS b_leak_milli
          |FROM gs a JOIN gs b ON a.h = b.h AND a.split < b.split
          |JOIN t tb ON tb.split = b.split
-         |GROUP BY 1, 2, tb.n ORDER BY 1, 2""".stripMargin) { (s, dir) =>
+         |GROUP BY 1, 2, tb.n ORDER BY 1, 2""".stripMargin, Family.Text) { (s, dir) =>
       val gs = splitGramCounts(s, dir)
       val tots = gs.groupBy("split").agg(count(lit(1)).as("n"))
       val a = gs.select(col("h"), col("split").as("split_a"), col("c").as("ca"))
@@ -3258,7 +3237,7 @@ object LlmText {
         |        // NULLIF(greatest(len(pa.px), len(pb.px)), 0))::BIGINT AS sim_milli
         |FROM hp JOIN px pa ON pa.doc_id = hp.doc_a
         |        JOIN px pb ON pb.doc_id = hp.doc_b
-        |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+        |ORDER BY doc_a, doc_b""".stripMargin, Family.Text) { (s, dir) =>
       val px = docs(s, dir).select(col("doc_id"),
         substring(regexp_replace(col("text"), "[^\\x00-\\x7F]", ""), 1, 200).as("px"))
       // TWO measured scale defenses on the DP stage:
@@ -3372,7 +3351,7 @@ object LlmText {
         |                            ORDER BY n_evidence DESC, bench_doc)::BIGINT AS rk
         |       FROM att)
         |SELECT source, rk, bench_doc, n_evidence, n_docs
-        |FROM rk WHERE rk <= 3 ORDER BY source, rk""".stripMargin) { (s, dir) =>
+        |FROM rk WHERE rk <= 3 ORDER BY source, rk""".stripMargin, Family.Text) { (s, dir) =>
       val sh = docShingles(s, dir)
       val bp = sh.filter(col("doc_id") % 20 === 0)
         .select(col("doc_id").as("bench_doc"), explode(col("sh")).as("sh"))
@@ -3533,7 +3512,7 @@ object LlmText {
          |               LEFT JOIN bwd USING (w2) CROSS JOIN k)
          |SELECT doc_id, count(*)::BIGINT AS n_bigrams,
          |       (sum(t) / count(*))::DECIMAL(12,2)::DOUBLE AS avg_nll
-         |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin, Family.Text) { (s, dir) =>
       knScore(tokenHashArr(s, dir))
     },
 
@@ -3572,7 +3551,7 @@ object LlmText {
          |p AS (SELECT doc_id, sum(t) AS sc, count(*) AS n_toks FROM t GROUP BY 1)
          |SELECT p.doc_id, lab.label::BIGINT AS label, n_toks::BIGINT AS n_toks,
          |       (ln(k.d1::DOUBLE / k.d0) + sc)::DECIMAL(12,2)::DOUBLE AS llr
-         |FROM p JOIN lab USING (doc_id) CROSS JOIN k ORDER BY doc_id""".stripMargin) {
+         |FROM p JOIN lab USING (doc_id) CROSS JOIN k ORDER BY doc_id""".stripMargin, Family.Text) {
       (s, dir) => nbScore(tokenHashArr(s, dir))
     },
 
@@ -3624,7 +3603,7 @@ object LlmText {
          |  UNION ALL SELECT 2, 'exact_dedup', count(*)::BIGINT, sum(nt)::BIGINT FROM s2
          |  UNION ALL SELECT 3, 'decontaminate', count(*)::BIGINT, sum(nt)::BIGINT FROM s3
          |  UNION ALL SELECT 4, 'budget', count(*)::BIGINT, sum(nt)::BIGINT FROM s4) z
-         |ORDER BY stage""".stripMargin) { (s, dir) =>
+         |ORDER BY stage""".stripMargin, Family.Text) { (s, dir) =>
       curationFunnel(s, dir)
     },
 
@@ -3720,7 +3699,7 @@ object LlmText {
          |  UNION ALL SELECT 4, 'substring_cut', count(*)::BIGINT, coalesce(sum(ntn), 0)::BIGINT FROM s4
          |  UNION ALL SELECT 5, 'decontaminate', count(*)::BIGINT, coalesce(sum(ntn), 0)::BIGINT FROM s5
          |  UNION ALL SELECT 6, 'budget', count(*)::BIGINT, coalesce(sum(ntn), 0)::BIGINT FROM s6) z
-         |ORDER BY stage""".stripMargin) { (s, dir) =>
+         |ORDER BY stage""".stripMargin, Family.Text) { (s, dir) =>
       refinedFunnel(s, dir)
     },
 
@@ -3745,7 +3724,7 @@ object LlmText {
     // regime where delta-shared mass ≪ corpus. Oracle = the
     // from-scratch truth: spans(union) EXCEPT spans(corpus).
     Q("q233_substring_incremental",
-      substringIncrementalOracle) { (s, dir) =>
+      substringIncrementalOracle, Family.Text) { (s, dir) =>
       newSpansFromDelta(
         docs(s, dir).filter(col("doc_id") % 10 === 0),
         corpusGrams(s, dir), corpusSpans(s, dir),
@@ -3773,7 +3752,7 @@ object LlmText {
     // gram-frame rebuild + exchange on exactly the corpus whose
     // duplicate mass is the problem.
     Q("q237_substring_incremental_disk",
-      substringIncrementalOracle) { (s, dir) =>
+      substringIncrementalOracle, Family.Text) { (s, dir) =>
       newSpansFromDelta(
         docs(s, dir).filter(col("doc_id") % 10 === 0),
         s.table(gramIndexTable(s, dir)), corpusSpans(s, dir),
@@ -3835,26 +3814,33 @@ object LlmText {
       .agg(count(lit(1)).as("n_sh"), count(col("mark")).as("n_hit"))
   }
 
+  /** The funnels' kernel pass: (doc_id, source, key, nt, quality) per
+    * doc, memoized because q231 and q232 both start from it and each
+    * reads it three times (keptMin's s1, the flagged frame's s1, the
+    * first census; unpersisted, the qualityStats kernel scan ran 3x per
+    * evaluation — StageProf: q232 at 34 stages with near-identical
+    * kernel stages). One narrow row per doc (the `key` column is the
+    * q38 exact-dedup contract string), materialized eagerly:
+    * concurrent AQE stages racing an unmaterialized cache recompute it
+    * (r21 q124). */
+  private def qualityBase(s: SparkSession, dir: String): DataFrame =
+    Caches.memo(Family.Text, s, "qualityBase|" + dir) {
+      val st = graft.plans.TextKernels.qualityStats(lower(col("text")))
+      val Seq(nt, nd, ml) = (1 to 3).map(i => element_at(col("st"), i))
+      val base = docs(s, dir)
+        .select(col("doc_id"), col("source"), col("text"), st.as("st"))
+        .select(col("doc_id"), col("source"),
+          trim(lower(col("text"))).as("key"), nt.as("nt"),
+          (when(nt.between(20, 1000), 1).otherwise(0)
+            + when(nd * 10 >= nt * 3, 1).otherwise(0)
+            + when(ml <= 15, 1).otherwise(0)).as("quality"))
+      base.persist().count()
+      base
+    }(_.unpersist())
+
   /** q231's three-pass funnel (factored for CurationFunnelSpec). */
   private[llm] def curationFunnel(s: SparkSession, dir: String): DataFrame = {
-    val st = graft.plans.TextKernels.qualityStats(lower(col("text")))
-    val Seq(nt, nd, ml) = (1 to 3).map(i => element_at(col("st"), i))
-    val base = docs(s, dir)
-      .select(col("doc_id"), col("source"), col("text"), st.as("st"))
-      .select(col("doc_id"), col("source"),
-        trim(lower(col("text"))).as("key"), nt.as("nt"),
-        (when(nt.between(20, 1000), 1).otherwise(0)
-          + when(nd * 10 >= nt * 3, 1).otherwise(0)
-          + when(ml <= 15, 1).otherwise(0)).as("quality"))
-    // PERSIST the kernel pass and the flagged frame (round 22, guide
-    // §2.4/§5 — the r21 q124/q133 repeated-subtree pattern): `base`
-    // fed THREE plan copies (keptMin's s1, flagged's s1, the a01
-    // census) so the qualityStats kernel scan ran 3x, and `flagged`
-    // fed TWO (a23 census + budget window). One narrow per-doc frame
-    // each (the `key` column is the q38 exact-dedup contract string);
-    // MEMORY_AND_DISK spills, never OOMs. Eager count: concurrent AQE
-    // stages racing an unmaterialized cache recompute it (r21 q124).
-    base.persist(); graft.Caches.registerPersisted(base); base.count()
+    val base = qualityBase(s, dir)
     val s1 = base.filter(col("quality") >= 2)
     val keptMin = s1.groupBy("key").agg(min(col("doc_id")).as("kept"))
     val hits = benchHits(s, dir)
@@ -3864,7 +3850,12 @@ object LlmText {
       .withColumn("l3", col("l2") && col("doc_id") % 20 =!= 0 &&
         col("n_hit") * 2 < col("n_sh"))
       .select("doc_id", "source", "quality", "nt", "l2", "l3")
-    flagged.persist(); graft.Caches.registerPersisted(flagged); flagged.count()
+    // PERSIST (round 22, guide §2.4/§5 — the r21 q124/q133
+    // repeated-subtree pattern): `flagged` feeds TWO consumers (a23
+    // census + budget window). MEMORY_AND_DISK spills, never OOMs.
+    // Eager count: concurrent AQE stages racing an unmaterialized cache
+    // recompute it (r21 q124).
+    Caches.persistForQuery(flagged).count()
     val cum = flagged.filter(col("l3"))
       .withColumn("cum", sum(col("nt")).over(
         Window.partitionBy("source").orderBy(col("quality").desc, col("doc_id"))
@@ -3899,20 +3890,7 @@ object LlmText {
     * per-source budget over NET tokens. See the q232 registration
     * comment for semantics and the scale contract. */
   private[llm] def refinedFunnel(s: SparkSession, dir: String): DataFrame = {
-    val st = graft.plans.TextKernels.qualityStats(lower(col("text")))
-    val Seq(nt, nd, ml) = (1 to 3).map(i => element_at(col("st"), i))
-    val base = docs(s, dir)
-      .select(col("doc_id"), col("source"), col("text"), st.as("st"))
-      .select(col("doc_id"), col("source"),
-        trim(lower(col("text"))).as("key"), nt.as("nt"),
-        (when(nt.between(20, 1000), 1).otherwise(0)
-          + when(nd * 10 >= nt * 3, 1).otherwise(0)
-          + when(ml <= 15, 1).otherwise(0)).as("quality"))
-    // PERSIST the kernel pass (round 22, guide §2.4/§5 — same
-    // rationale as curationFunnel above): `base` fed three plan
-    // copies, the kernel scan ran 3x per evaluation (StageProf: q232
-    // at 34 stages with near-identical kernel stages).
-    base.persist(); graft.Caches.registerPersisted(base); base.count()
+    val base = qualityBase(s, dir)
     val s1 = base.filter(col("quality") >= 2)
     val keptMin = s1.groupBy("key").agg(min(col("doc_id")).as("kept"))
     // fuzzy stage: clusters come from the MEMOIZED corpus-wide
@@ -3943,7 +3921,7 @@ object LlmText {
       // this frame — unpersisted, the whole withK/span/bench chain
       // (itself containing s1 twice) executed twice
       .select("doc_id", "source", "quality", "nt", "ntn", "l2", "l3", "l5")
-    flags.persist(); graft.Caches.registerPersisted(flags); flags.count()
+    Caches.persistForQuery(flags).count()
     val cum = flags.filter(col("l5"))
       .withColumn("cum", sum(col("ntn")).over(
         Window.partitionBy("source").orderBy(col("quality").desc, col("doc_id"))
@@ -4033,8 +4011,7 @@ object LlmText {
     // unmaterialized cache is recomputed per racer (r21 q124, 7x).
     val c2 = big.filter(col("doc_id") % 5 =!= 0)
       .groupBy("w1", "w2").agg(count(lit(1)).as("n_b"))
-      .persist()
-    graft.Caches.registerPersisted(c2)
+      .transform(Caches.persistForQuery)
     c2.count()
     val c1 = c2.groupBy("w1")
       .agg(sum(col("n_b")).as("n_c"), count(lit(1)).as("n1f"))
@@ -4149,13 +4126,11 @@ object LlmText {
     * pass behind q174's agreement table and q191's kappa, persisted
     * because both (and q191's three internal rollups) read it; ≤
     * |sources|·|langs|² rows, census-bounded. */
-  private val langCmCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def langConfusion(s: SparkSession, dir: String): DataFrame =
-    langCmCache.computeIfAbsent((s, dir), _ =>
+    Caches.memo(Family.Text, s, "langCm|" + dir)(
       langBest(s, dir)
         .groupBy("source", "lang", "best").agg(count(lit(1)).as("c"))
-        .persist())
+        .persist())(_.unpersist())
 
   /** q99's deterministic shard key: the seeded hash permutation `hv`
     * and `shard = hv % nShards`, added as columns — shared by the
@@ -4225,15 +4200,10 @@ object LlmText {
     // exactly the lightweight proxy frame guide §8 says to persist
     // while heavy passes are decided; MEMORY_AND_DISK degrades to
     // disk at 100 TB doc counts. The max probe materializes the
-    // cache (sequential actions — no concurrent-stage race), and
-    // releaseAll drops it with the other ad-hoc frames. The persisted
-    // frame is an internal alias, never the caller's `d`: releaseAll
-    // must not unpersist a frame the caller cached and still owns. The
-    // marker column is what makes it distinct: a select of the same
-    // columns (even re-aliased) canonicalizes to `d`'s plan, so its
-    // persist would be a no-op and its unpersist would drop `d`.
-    val p = d.withColumn("offsets_alias", lit(true)).persist()
-    graft.Caches.registerPersisted(p)
+    // cache (sequential actions — no concurrent-stage race), and the
+    // running query's hook drops it. A `d` the caller already cached
+    // stays the caller's: persistForQuery leaves it alone.
+    val p = Caches.persistForQuery(d)
     // the max(doc_id) probe reads only that column
     val maxId = Option(p.agg(max("doc_id")).first().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -4251,7 +4221,7 @@ object LlmText {
       .withColumn("tok_offset",
         coalesce(element_at(typedLit(offsets), col("bucket")), lit(0L))
           + cum - col("n_tokens"))
-      .drop("bucket", "offsets_alias")
+      .drop("bucket")
   }
 
   /** q221's span frame, memoized + persisted per (session, dir) like
@@ -4261,11 +4231,9 @@ object LlmText {
     * simhashHamPairs lesson). Spans are bounded by duplication mass,
     * far below corpus rows. Released via [[release]]; built untimed
     * in [[prebuild]]. */
-  private val spanCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[llm] def spansFrame(s: SparkSession, dir: String): DataFrame =
-    spanCache.computeIfAbsent((s, dir), _ =>
-      substringDedupSpans(docs(s, dir), SpanK).persist())
+    Caches.memo(Family.Text, s, "span|" + dir)(
+      substringDedupSpans(docs(s, dir), SpanK).persist())(_.unpersist())
 
   /** Interval-union token coverage per doc over a span frame (q223):
     * spans whose gram islands sit closer than K overlap in token
@@ -4353,17 +4321,13 @@ object LlmText {
     * catalog, so the memo caches stand in (the q89/writeBandIndex
     * convention). Released via [[release]]; built untimed in
     * [[prebuild]]. */
-  private val corpusGramCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def corpusGrams(s: SparkSession, dir: String): DataFrame =
-    corpusGramCache.computeIfAbsent((s, dir), _ =>
-      gramHashes(docs(s, dir).filter(col("doc_id") % 10 =!= 0), SpanK).persist())
-  private val corpusSpanCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    Caches.memo(Family.Text, s, "corpusGram|" + dir)(
+      gramHashes(docs(s, dir).filter(col("doc_id") % 10 =!= 0), SpanK).persist())(_.unpersist())
   private def corpusSpans(s: SparkSession, dir: String): DataFrame =
-    corpusSpanCache.computeIfAbsent((s, dir), _ =>
+    Caches.memo(Family.Text, s, "corpusSpan|" + dir)(
       substringDedupSpans(docs(s, dir).filter(col("doc_id") % 10 =!= 0), SpanK)
-        .persist())
+        .persist())(_.unpersist())
 
   /** q237's disk access path: [[writeGramIndex]]'s bucket table,
     * written once per session — the write models ingest's index build
@@ -4466,9 +4430,9 @@ object LlmText {
     // on, and persist() (MEMORY_AND_DISK) degrades to disk, not OOM,
     // on clone-adversary corpora. Eagerly materialized (count) because
     // concurrent AQE stages racing an unmaterialized cache each
-    // recompute it (r21 q124: measured 7x). Released by releaseAll.
-    val cand = probed.unionAll(dg.select("doc_id", "pos")).persist()
-    graft.Caches.registerPersisted(cand)
+    // recompute it (r21 q124: measured 7x). Released by the running
+    // query's hook (Caches.persistForQuery).
+    val cand = probed.unionAll(dg.select("doc_id", "pos")).transform(Caches.persistForQuery)
     cand.count()
     // token arrays only for docs the probe touched. NO broadcast hint
     // (ADVICE r19): on high-duplication adversaries (clone100) cand
@@ -4482,8 +4446,7 @@ object LlmText {
     val withText = cand.join(tlPruned, "doc_id")
       .select(col("doc_id"), col("pos"),
         concat_ws(" ", slice(col("t"), col("pos").cast("int"), lit(k))).as("gram"))
-      .persist()
-    graft.Caches.registerPersisted(withText)
+      .transform(Caches.persistForQuery)
     withText.count()
     // exact-text verify over the candidate UNION: a gram is duplicated
     // in corpus+delta iff >= 2 distinct docs hold its text — and every
@@ -4491,8 +4454,7 @@ object LlmText {
     val dupGram = withText.groupBy("gram")
       .agg(countDistinct("doc_id").as("nd")).filter(col("nd") >= 2)
       .select("gram")
-    val newVer = withText.join(dupGram, "gram").select("doc_id", "pos").persist()
-    graft.Caches.registerPersisted(newVer)
+    val newVer = withText.join(dupGram, "gram").select("doc_id", "pos").transform(Caches.persistForQuery)
     newVer.count()
     val affected = newVer.select("doc_id").distinct()
     // same reasoning: `affected` is duplication-mass-bounded but NOT

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.{Caches, Family}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -100,10 +101,8 @@ object LlmVector {
     * query side so the corpus is scanned once with no big-side shuffle.
     * Memoized + persisted per (session, dir): q43 (ordered listing) and
     * q44 (recall grade) share one computation. */
-  private val bruteCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[llm] def bruteTopk(s: SparkSession, dir: String): DataFrame =
-    bruteCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Vector, s, "brute|" + dir) {
       val e = T.df(s, dir, "embeddings")
       val corpus = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
         norm(col("embedding")).as("cn"))
@@ -119,7 +118,7 @@ object LlmVector {
         .filter(col("rank") <= K)
         .select("query_id", "rank", "neighbor_id")
         .persist()
-    })
+    }(_.unpersist())
 
   // q105 product quantization: M subspaces of dim/M dims, K codewords
   // each — codes are M·log2(K) bits (8·4 = 4 bytes here) per vector.
@@ -163,10 +162,8 @@ object LlmVector {
     * literals so encoding stays map-only. Vectors are unit-normalized
     * BEFORE slicing: on unit vectors L2 order == cosine order, so the
     * ADC ranking approximates the same metric q43/q44 grade against. */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Array[Array[Array[Double]]]]()
   private[llm] def pqCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Vector, s, "pq|" + dir) {
       val pts = T.df(s, dir, "embeddings")
         .orderBy("vec_id").limit(KMeansSample)
         .select("embedding").collect()
@@ -190,7 +187,7 @@ object LlmVector {
         }
         cents
       }
-    })
+    }(_ => ())
 
   /** PQ shortlist + exact re-rank top-k per query (q105's ranked
     * listing) — the deployment shape of every PQ system: the
@@ -268,10 +265,8 @@ object LlmVector {
     * fixed seed and the centroids ship to executors as literals, which
     * is what keeps bucket assignment map-only. Centroids are unit-norm,
     * so nearest-by-cosine == argmax over raw dots (row norm constant). */
-  private val pivotCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Array[Double]]]()
   private[llm] def pivots(s: SparkSession, dir: String): Array[Array[Double]] =
-    pivotCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Vector, s, "pivot|" + dir) {
       val sample = T.df(s, dir, "embeddings")
         .orderBy("vec_id").limit(KMeansSample)
         .select("embedding").collect()
@@ -306,7 +301,7 @@ object LlmVector {
         }.toArray
       }
       cents
-    })
+    }(_ => ())
 
   /** The `nprobe` nearest pivot ids (best first) as a pure per-row
     * projection — the [[graft.plans.NearestPivots]] native expression:
@@ -398,10 +393,8 @@ object LlmVector {
     * Memoized per (session, dir): q50 (capped listing — cap via
     * filter, no recompute) and q65 (full listing) share one
     * materialization. */
-  private val blockCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[graft] def blockedPairs(s: SparkSession, dir: String): DataFrame =
-    blockCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Vector, s, "block|" + dir) {
       // materialize the block table ONCE before the self-join — an
       // unpersisted self-join re-scans and re-shuffles the corpus for
       // each side (PlanSpec pins the single-shuffle shape). The 100 TB
@@ -420,7 +413,7 @@ object LlmVector {
       pairs.count() // materialize, then drop the intermediate block table
       blocks.unpersist()
       pairs
-    })
+    }(_.unpersist())
 
   /** The q157/q161 integer-centroid device, factored once (r15
     * review — the triHash lesson applied here before it bites):
@@ -469,16 +462,8 @@ object LlmVector {
         array((0 until dim).map(i => expr(s"(1000 * s$i) div n")): _*).as("mu"))
   }
 
-  /** Drop every cached frame/pivot fit owned by `s` (see [[graft.Caches]]):
-    * unpersists the brute-force baseline, the blocked pair table, and
-    * forgets the pivot fits. */
-  def release(s: SparkSession): Unit = {
-    graft.Caches.dropSession(bruteCache, s)(_.unpersist())
-    graft.Caches.dropSession(blockCache, s)(_.unpersist())
-    graft.Caches.dropSession(semCache, s)(_.unpersist())
-    graft.Caches.dropSession(pivotCache, s)(_ => ())
-    graft.Caches.dropSession(pqCache, s)(_ => ())
-  }
+  /** Drop every cached frame/pivot fit owned by `s` (see [[graft.Caches]]). */
+  def release(s: SparkSession): Unit = Family.Vector.release(s)
 
   /** Force-build the embedding family's memoized frames + fits — the
     * bench's named untimed cache-build slot (round 17; see
@@ -497,7 +482,7 @@ object LlmVector {
   val qs: Seq[Q] = Seq(
 
     // ---- brute-force cosine top-k (baseline; broadcast query side).
-    Q("q43_ann_cosine_topk", cosineTopkSql) { (s, dir) =>
+    Q("q43_ann_cosine_topk", cosineTopkSql, Family.Vector) { (s, dir) =>
       bruteTopk(s, dir).orderBy("query_id", "rank")
     },
 
@@ -515,7 +500,7 @@ object LlmVector {
         |SELECT vec_a, vec_b FROM dots
         |  JOIN nrm na ON na.vec_id = vec_a JOIN nrm nb ON nb.vec_id = vec_b
         |WHERE d / (na.n * nb.n) >= 0.45
-        |ORDER BY vec_a, vec_b""".stripMargin) { (s, dir) =>
+        |ORDER BY vec_a, vec_b""".stripMargin, Family.Vector) { (s, dir) =>
       // A filtered view of the memoized blocked all-pairs sweep
       // ([[blockedPairs]]): the oracle keeps its historical <1000 id
       // cap, so restrict the full pair table to it (pairs with both
@@ -536,7 +521,7 @@ object LlmVector {
     // hash compare goes red. (LlmVectorSpec pins the same bound.)
     Q("q44_ann_ivf_topk",
       s"""SELECT vec_id AS query_id, ${K}::BIGINT AS k, true AS recall_ok
-         |FROM embeddings WHERE vec_id < ${NQueries} ORDER BY query_id""".stripMargin) { (s, dir) =>
+         |FROM embeddings WHERE vec_id < ${NQueries} ORDER BY query_id""".stripMargin, Family.Vector) { (s, dir) =>
       // grade against the exact baseline: recall = |IVF ∩ brute| / K
       // both grading sides are K·NQueries-bounded — broadcast them so
       // the grade never plans a shuffle join (same shape as q105's)
@@ -571,7 +556,7 @@ object LlmVector {
     // quantization regression flips the hash compare.
     Q("q105_pq_adc",
       s"""SELECT vec_id AS query_id, ${K}::BIGINT AS k, true AS recall_ok
-         |FROM embeddings WHERE vec_id < ${NQueries} ORDER BY query_id""".stripMargin) { (s, dir) =>
+         |FROM embeddings WHERE vec_id < ${NQueries} ORDER BY query_id""".stripMargin, Family.Vector) { (s, dir) =>
       val hits = pqTopk(s, dir)
         .join(broadcast(bruteTopk(s, dir).select("query_id", "neighbor_id")),
           Seq("query_id", "neighbor_id"), "left_semi")
@@ -599,7 +584,7 @@ object LlmVector {
         |SELECT vec_a, vec_b FROM dots
         |  JOIN nrm na ON na.vec_id = vec_a JOIN nrm nb ON nb.vec_id = vec_b
         |WHERE d / (na.n * nb.n) >= 0.45
-        |ORDER BY vec_a, vec_b""".stripMargin) { (s, dir) =>
+        |ORDER BY vec_a, vec_b""".stripMargin, Family.Vector) { (s, dir) =>
       blockedPairs(s, dir).orderBy("vec_a", "vec_b")
     },
 
@@ -712,7 +697,7 @@ object LlmVector {
          |SELECT asg.vec_id, asg.cluster::BIGINT AS cluster,
          |       (dups.vb IS NULL) AS keep
          |FROM asg LEFT JOIN dups ON asg.vec_id = dups.vb
-         |ORDER BY vec_id""".stripMargin) { (s, dir) =>
+         |ORDER BY vec_id""".stripMargin, Family.Vector) { (s, dir) =>
       semanticDedup(s, dir)
     },
 
@@ -917,11 +902,10 @@ object LlmVector {
         |          WHEN 8 THEN 12870 WHEN 9 THEN 11440 WHEN 10 THEN 8008 WHEN 11 THEN 4368
         |          WHEN 12 THEN 1820 WHEN 13 THEN 560 WHEN 14 THEN 120 WHEN 15 THEN 16
         |          ELSE 1 END // 65536)::BIGINT AS random_milli
-        |FROM hx GROUP BY ham ORDER BY ham""".stripMargin) { (s, dir) =>
+        |FROM hx GROUP BY ham ORDER BY ham""".stripMargin, Family.Vector) { (s, dir) =>
       val e = T.df(s, dir, "embeddings")
       val dim = embDim(e)
-      val sigs = srpSignatures(e, dim).persist()
-      graft.Caches.registerPersisted(sigs)
+      val sigs = srpSignatures(e, dim).transform(Caches.persistForQuery)
       blockedPairs(s, dir)
         .join(sigs.select(col("vec_id").as("vec_a"), col("sg").as("sa"),
           col("n2").as("na2"), col("qv").as("qa")), "vec_a")
@@ -1084,7 +1068,7 @@ object LlmVector {
         |                      (3::BIGINT, 10::BIGINT, 5::BIGINT, true),
         |                      (8::BIGINT, 10::BIGINT, 5::BIGINT, true))
         |  AS t(nprobe, k, n_queries, grade_ok)
-        |ORDER BY nprobe""".stripMargin) { (s, dir) =>
+        |ORDER BY nprobe""".stripMargin, Family.Vector) { (s, dir) =>
       import s.implicits._
       val sweep = Seq(1, 2, 3, 8)
       val tagged = sweep.map(np =>
@@ -1143,10 +1127,8 @@ object LlmVector {
     * [[blockedPairs]] (the within-cluster triangle is the expensive
     * part; the sweep must not run it twice if a later consumer
     * appears). Released via [[release]]. */
-  private val semCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[llm] def semanticDedup(s: SparkSession, dir: String): DataFrame =
-    semCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Vector, s, "sem|" + dir) {
       val asg = semanticAssign(s, dir)
       // SKEW CAP: a hot cluster would hand one task |c|²/2 dots, so
       // clusters larger than [[SemSubCap]] split into sub-blocks and
@@ -1173,7 +1155,7 @@ object LlmVector {
       out.count() // materialize, then drop the intermediate block table
       blocks.unpersist()
       out
-    })
+    }(_.unpersist())
 
   /** q83's map-only cluster assignment (vec_id, embedding, cluster). */
   private[llm] def semanticAssign(s: SparkSession, dir: String): DataFrame =

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.{Caches, Family}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,15 +22,13 @@ object TextMining {
     * vocab-bounded (Heaps' law), so the persisted frame is small
     * relative to the corpus and both q110 broadcasts build from it
     * without touching documents again. */
-  private val vocabCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def vocab(s: SparkSession, dir: String): DataFrame =
-    vocabCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Mining, s, "vocab|" + dir) {
       docs(s, dir)
         .select(explode(tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("n_w"))
         .persist()
-    })
+    }(_.unpersist())
 
   /** q218's merge-step count — fixed, so the training loop has the
     * PageRank iteration shape (never data-dependent). */
@@ -58,12 +57,10 @@ object TextMining {
     * the G-step loop runs ONCE per session (the simhashHamPairs
     * lesson: shared expensive frames must not rebuild per consumer).
     * The state frame stays persisted; [[release]] drops it. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Int, String, String, Long)], DataFrame)]()
 
   private[llm] def bpeTrain(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) =
-    bpeCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Mining, s, "bpe|" + dir) {
       var cur = vocab(s, dir)
         .filter(col("w").rlike("^[a-z]+$") &&
           length(col("w")).between(2, 32))
@@ -98,14 +95,13 @@ object TextMining {
         step += 1
       } catch { case t: Throwable =>
         // a mid-loop abort (vocabulary exhausted, executor loss) must
-        // not leak the working frame: the exception escapes
-        // computeIfAbsent, so no cache entry exists for release() to
-        // drop (review r17)
+        // not leak the working frame: the exception escapes the memo
+        // build, so no memo exists for release() to drop (review r17)
         cur.unpersist()
         throw t
       }
       (merges.toSeq, cur)
-    })
+    }(_._2.unpersist())
 
   /** The byte trainer's grafted multibyte word (the q88 convention:
     * the fixture corpus is pure ASCII, so the gate would otherwise
@@ -115,14 +111,12 @@ object TextMining {
 
   /** All-words vocabulary over the grafted stream — the byte trainer's
     * seed frame (NO [a-z]/length screen: byte fallback = no OOV). */
-  private val byteVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def byteVocab(s: SparkSession, dir: String): DataFrame =
-    byteVocabCache.computeIfAbsent((s, dir), _ =>
+    Caches.memo(Family.Mining, s, "byteVocab|" + dir)(
       docs(s, dir)
         .select(explode(tokens(concat(col("text"), lit(ByteGraft)))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("n_w"))
-        .persist())
+        .persist())(_.unpersist())
 
   /** Byte-level BPE training state, memoized like [[bpeTrain]] (round
     * 19, VERDICT r18 item 5 — the GPT-2 production form next to
@@ -132,12 +126,10 @@ object TextMining {
     * framing unit is [0-9A-F] and merge literals are SQL-safe for ANY
     * input — the property that lets replace() cover arbitrary text,
     * where q218's raw-char framing needed the ^[a-z]+$ screen. */
-  private val byteBpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Int, String, String, Long)], DataFrame)]()
 
   private[llm] def byteBpeTrain(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) =
-    byteBpeCache.computeIfAbsent((s, dir), _ => byteBpeTrainOn(byteVocab(s, dir)))
+    Caches.memo(Family.Mining, s, "byteBpe|" + dir)( byteBpeTrainOn(byteVocab(s, dir)))(_._2.unpersist())
 
   /** The G-step byte-BPE loop over any (w, n_w) word-frequency frame —
     * factored so q234 (full grafted stream) and q236 (train split
@@ -185,19 +177,15 @@ object TextMining {
   /** q236's TRAIN-split word frame (doc_id % 10 ≠ 0, ungrafted) and
     * its trained byte-BPE state — the true train/apply separation the
     * full-stream q234 trainer cannot exercise. */
-  private val splitVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def splitVocab(s: SparkSession, dir: String): DataFrame =
-    splitVocabCache.computeIfAbsent((s, dir), _ =>
+    Caches.memo(Family.Mining, s, "splitVocab|" + dir)(
       docs(s, dir).filter(col("doc_id") % 10 =!= 0)
         .select(explode(tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("n_w"))
-        .persist())
-  private val splitBpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Int, String, String, Long)], DataFrame)]()
+        .persist())(_.unpersist())
   private[llm] def byteBpeTrainSplit(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) =
-    splitBpeCache.computeIfAbsent((s, dir), _ => byteBpeTrainOn(splitVocab(s, dir)))
+    Caches.memo(Family.Mining, s, "splitBpe|" + dir)( byteBpeTrainOn(splitVocab(s, dir)))(_._2.unpersist())
 
   /** q218's oracle, GENERATED as unrolled SQL (one CTE block per merge
     * step): a recursive CTE cannot reference the working set twice
@@ -350,10 +338,8 @@ object TextMining {
     * frame plus a vocab-bounded driver collect (≤ UniMaxVocab + chars
     * rows) to build the broadcast cost table — segmentation work is
     * per DISTINCT word, never per occurrence. */
-  private val uniCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[llm] def unigramTrain(s: SparkSession, dir: String): DataFrame =
-    uniCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Mining, s, "uni|" + dir) {
       val words = vocab(s, dir)
         .filter(col("w").rlike("^[a-z]+$") &&
           length(col("w")).between(1, UniMaxWordLen))
@@ -362,7 +348,7 @@ object TextMining {
       val out = unigramTrainWords(words)
       words.unpersist(blocking = false)
       out
-    })
+    }(_.unpersist())
 
   /** The training core over any (w, n) word-frequency frame —
     * factored so UnigramLmSpec can drive it on a hand-computable
@@ -581,10 +567,8 @@ object TextMining {
     * second-level split totals read it (vocab-bounded: ≤ 3·|vocab|
     * rows, Heaps' law — without the persist the totals aggregate
     * re-runs the corpus explode+shuffle). */
-  private val splitCountsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def splitCounts(s: SparkSession, dir: String): DataFrame =
-    splitCountsCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Mining, s, "splitCounts|" + dir) {
       docs(s, dir)
         .select(splitHash(col("doc_id")).as("h"),
           explode(tokens(col("text"))).as("w"))
@@ -593,7 +577,7 @@ object TextMining {
             .otherwise("test"))
         .groupBy("split", "w").agg(count(lit(1)).as("o"))
         .persist()
-    })
+    }(_.unpersist())
 
   /** The q146 gram device: md5 of the space-joined word trigram at
     * 0-based offset `i` of token array `ws`, truncated to 32 bits —
@@ -618,26 +602,22 @@ object TextMining {
     * persist each consumer re-runs the corpus explode+shuffle, turning
     * one 100 TB pass into two. |rows| = distinct trigrams (corpus
     * vocabulary of grams), each row ≤ |sources| strings. */
-  private val sourceGramCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def sourceGrams(s: SparkSession, dir: String): DataFrame =
-    sourceGramCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Mining, s, "sourceGram|" + dir) {
       docs(s, dir)
         .select(col("source"), expr("filter(split(text, ' '), x -> x != '')").as("ws"))
         .filter(size(col("ws")) >= 3)
         .select(col("source"), explode(expr(triHashes("ws"))).as("h"))
         .groupBy("h").agg(sort_array(collect_set(col("source"))).as("ss"))
         .persist()
-    })
+    }(_.unpersist())
 
   /** q158's (split, token-count, docs) frame — the ONE corpus pass
     * behind the KS screen, persisted because both the per-split
     * totals and the pair-fanned ECDF read it (≤ 3·|distinct doc
     * lengths| rows — value-bounded, not corpus-bounded). */
-  private val splitLenCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def splitLenCounts(s: SparkSession, dir: String): DataFrame =
-    splitLenCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Mining, s, "splitLen|" + dir) {
       docs(s, dir)
         .select(splitHash(col("doc_id")).as("hh"),
           size(expr("filter(split(text, ' '), x -> x != '')")).cast("long").as("v"))
@@ -648,20 +628,18 @@ object TextMining {
         // scale (see sourceLenCounts above for the width rationale)
         .coalesce(1)
         .persist()
-    })
+    }(_.unpersist())
 
   /** q159's (source, token, count) frame — one corpus pass, persisted
     * because the per-source totals and the lift scoring both read it
     * (≤ |sources|·|vocab| rows, Heaps-bounded). */
-  private val sourceTermCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def sourceTermCounts(s: SparkSession, dir: String): DataFrame =
-    sourceTermCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Mining, s, "sourceTerm|" + dir) {
       docs(s, dir)
         .select(col("source"), explode(tokens(col("text"))).as("w"))
         .groupBy("source", "w").agg(count(lit(1)).as("c"))
         .persist()
-    })
+    }(_.unpersist())
 
   /** Unpersists the vocab + split-count + source-gram + split-length +
     * source-term frames for `s` (fires after the family's last
@@ -671,10 +649,8 @@ object TextMining {
     * the pair-fanned ECDF both read it (≤ |sources|·|distinct doc
     * lengths| rows — value-bounded, not corpus-bounded; the q158
     * device keyed on source instead of split). */
-  private val sourceLenCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def sourceLenCounts(s: SparkSession, dir: String): DataFrame =
-    sourceLenCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Mining, s, "sourceLen|" + dir) {
       docs(s, dir)
         .select(col("source"),
           size(expr("filter(split(text, ' '), x -> x != '')")).cast("long").as("v"))
@@ -689,7 +665,7 @@ object TextMining {
         // frame's cache width should follow its bound, not the dial.
         .coalesce(1)
         .persist()
-    })
+    }(_.unpersist())
 
   /** q184/q195's curriculum frame (doc_id, source, nt, p, global_rank):
     * the short-first round-robin order with the counting-sort per-
@@ -724,21 +700,8 @@ object TextMining {
         col("global_rank"))
   }
 
-  def release(s: SparkSession): Unit = {
-    graft.Caches.dropSession(bpeCache, s)(_._2.unpersist())
-    graft.Caches.dropSession(byteBpeCache, s)(_._2.unpersist())
-    graft.Caches.dropSession(byteVocabCache, s)(_.unpersist())
-    graft.Caches.dropSession(splitBpeCache, s)(_._2.unpersist())
-    graft.Caches.dropSession(splitVocabCache, s)(_.unpersist())
-    graft.Caches.dropSession(uniCache, s)(_.unpersist())
-    graft.Caches.dropSession(vocabCache, s)(_.unpersist())
-    graft.Caches.dropSession(splitCountsCache, s)(_.unpersist())
-    graft.Caches.dropSession(sourceGramCache, s)(_.unpersist())
-    graft.Caches.dropSession(splitLenCache, s)(_.unpersist())
-    graft.Caches.dropSession(sourceTermCache, s)(_.unpersist())
-    graft.Caches.dropSession(sourceLenCache, s)(_.unpersist())
-    graft.Caches.dropSession(phrasePostCache, s)(_.unpersist())
-  }
+  /** Drop every memoized frame owned by `s` (see [[graft.Caches]]). */
+  def release(s: SparkSession): Unit = Family.Mining.release(s)
 
   /** Force-build the corpus-mining family's memoized frames — the
     * bench's named untimed cache-build slot (round 17; see
@@ -816,7 +779,7 @@ object TextMining {
         |       ((1000::HUGEINT * bc.n_ab * (SELECT nt FROM n)) // (a.n_w::HUGEINT * b.n_w))::BIGINT AS lift_milli
         |FROM bc JOIN uni a ON a.w = bc.w1 JOIN uni b ON b.w = bc.w2
         |WHERE bc.n_ab >= 5
-        |ORDER BY lift_milli DESC, w1, w2 LIMIT 50""".stripMargin) { (s, dir) =>
+        |ORDER BY lift_milli DESC, w1, w2 LIMIT 50""".stripMargin, Family.Mining) { (s, dir) =>
       val tl = docs(s, dir).select(col("doc_id"), tokens(col("text")).as("t"))
       val uni = vocab(s, dir)
       val nt = uni.agg(sum(col("n_w"))).first().getLong(0) // 1-cell scalar
@@ -860,7 +823,7 @@ object TextMining {
          |SELECT l.term, v.w, levenshtein(l.term, v.w)::BIGINT AS dist, v.n_occ
          |FROM lex l JOIN vocab v ON abs(len(l.term) - len(v.w)) <= 1
          |WHERE levenshtein(l.term, v.w) <= 1
-         |ORDER BY term, w""".stripMargin) { (s, dir) =>
+         |ORDER BY term, w""".stripMargin, Family.Mining) { (s, dir) =>
       import s.implicits._
       val vb = vocab(s, dir)
         .select(col("w"), col("n_w").as("n_occ"))
@@ -985,7 +948,7 @@ object TextMining {
         |      FROM c)
         |SELECT split, w, o,
         |       (o - (ns * nw)::DOUBLE / nt) * (o - (ns * nw)::DOUBLE / nt) / ((ns * nw)::DOUBLE / nt) AS chi2
-        |FROM x ORDER BY chi2 DESC, split, w LIMIT 40""".stripMargin) { (s, dir) =>
+        |FROM x ORDER BY chi2 DESC, split, w LIMIT 40""".stripMargin, Family.Mining) { (s, dir) =>
       val c = splitCounts(s, dir)
       val st = c.groupBy("split").agg(sum(col("o")).as("ns")) // 3 rows
       val nt = c.agg(sum(col("o"))).first().getLong(0)        // 1 cell, persisted lineage
@@ -1394,7 +1357,7 @@ object TextMining {
         |       (1000 * n_shared // (ta.n + tb.n - n_shared))::BIGINT AS jaccard_milli,
         |       (1000 * n_shared // least(ta.n, tb.n))::BIGINT AS containment_milli
         |FROM p JOIN t ta ON ta.source = p.s1 JOIN t tb ON tb.source = p.s2
-        |ORDER BY s1, s2""".stripMargin) { (s, dir) =>
+        |ORDER BY s1, s2""".stripMargin, Family.Mining) { (s, dir) =>
       val perH = sourceGrams(s, dir)
       val totals = perH.select(explode(col("ss")).as("source"))
         .groupBy("source").agg(count(lit(1)).as("n"))
@@ -1458,7 +1421,7 @@ object TextMining {
          |       GROUP BY 1, 2, 3, 4)
          |SELECT sa, sb, na, nb, d_dec::BIGINT AS d_num,
          |       (1000 * d_dec // (na::HUGEINT * nb))::BIGINT AS d_milli
-         |FROM ks ORDER BY sa, sb""".stripMargin) { (s, dir) =>
+         |FROM ks ORDER BY sa, sb""".stripMargin, Family.Mining) { (s, dir) =>
       val cv = splitLenCounts(s, dir)
       val n = cv.groupBy("split").agg(sum("c").as("n"))
       import s.implicits._
@@ -1518,7 +1481,7 @@ object TextMining {
         |               ORDER BY lift_milli DESC, w) AS rank
         |      FROM sc)
         |SELECT source, rank::BIGINT AS rank, w, c, lift_milli
-        |FROM r WHERE rank <= 5 ORDER BY source, rank""".stripMargin) { (s, dir) =>
+        |FROM r WHERE rank <= 5 ORDER BY source, rank""".stripMargin, Family.Mining) { (s, dir) =>
       val sw = sourceTermCounts(s, dir)
       val st = sw.groupBy("source").agg(sum("c").as("n_s"))
         .withColumn("nt", sum("n_s").over(Window.partitionBy()))
@@ -1560,7 +1523,7 @@ object TextMining {
         |       count(*) FILTER (WHERE c = 2)::BIGINT AS dis,
         |       (1000 * count(*) FILTER (WHERE c = 1) // count(*))::BIGINT AS hapax_milli,
         |       (1000000 * count(*) // sum(c))::BIGINT AS ttr_micro
-        |FROM sw GROUP BY 1 ORDER BY source""".stripMargin) { (s, dir) =>
+        |FROM sw GROUP BY 1 ORDER BY source""".stripMargin, Family.Mining) { (s, dir) =>
       sourceTermCounts(s, dir)
         .groupBy("source")
         .agg(sum("c").as("n_tokens"), count(lit(1)).as("n_types"),
@@ -1604,7 +1567,7 @@ object TextMining {
         |SELECT source, max(n)::BIGINT AS n_docs, max(k)::BIGINT AS k,
         |       (1000 * sum(v * c) // max(n))::BIGINT AS mean_milli,
         |       (1000 * sum(v * kc) // NULLIF(max(n) - 2 * max(k), 0))::BIGINT AS trimmed_mean_milli
-        |FROM kept GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
+        |FROM kept GROUP BY source ORDER BY source""".stripMargin, Family.Mining) { (s, dir) =>
       val cu = sourceLenCounts(s, dir)
         .withColumn("cp", coalesce(sum("c").over(
           Window.partitionBy("source").orderBy("v")
@@ -1638,8 +1601,8 @@ object TextMining {
     // window, no sort. decile = (10·|strictly below|) div N, exact
     // integers both engines. Top-20 by (blend, doc_id) is
     // TakeOrderedAndProject — a heap, never a global sort. The decile
-    // frame persists (small) because three lookups read it; adHoc-
-    // registered for releaseAll.
+    // frame persists (small) because three lookups read it, released
+    // by the query's own hook (Caches.persistForQuery).
     Q("q160_quality_blend",
       """WITH d AS (SELECT doc_id,
         |             len(list_filter(string_split(text, ' '), x -> x != ''))::BIGINT AS n,
@@ -1685,8 +1648,7 @@ object TextMining {
         .withColumn("cum", sum("c").over(cum))
         .withColumn("tot", sum("c").over(all))
         .select(col("sig"), col("v"), expr("(10 * (cum - c)) div tot").as("dc"))
-        .persist()
-      graft.Caches.registerPersisted(dq)
+        .transform(Caches.persistForQuery)
       def look(i: Int, vc: String, out: String) =
         broadcast(dq.filter(col("sig") === i)
           .select(col("v").as(vc), col("dc").as(out)))
@@ -1725,7 +1687,7 @@ object TextMining {
         |              sum(f)::BIGINT AS cnt
         |       FROM p GROUP BY 1, 2)
         |SELECT a, b, cnt FROM pc
-        |ORDER BY cnt DESC, a, b LIMIT 20""".stripMargin) { (s, dir) =>
+        |ORDER BY cnt DESC, a, b LIMIT 20""".stripMargin, Family.Mining) { (s, dir) =>
       vocab(s, dir)
         .filter(length(col("w")) >= 2)
         .select(col("n_w").as("f"), explode(expr(
@@ -1768,7 +1730,7 @@ object TextMining {
     // DuckDB's empty generate_series) — single-token words are
     // filtered before the transform on the Spark side, matching the
     // oracle's empty unnest.
-    Q("q218_bpe_merges", bpeOracleSql(BpeSteps)) { (s, dir) =>
+    Q("q218_bpe_merges", bpeOracleSql(BpeSteps), Family.Mining) { (s, dir) =>
       import s.implicits._
       bpeTrain(s, dir)._1.toDF("step", "lhs", "rhs", "pair_n").orderBy("step")
     },
@@ -1800,7 +1762,7 @@ object TextMining {
     // chain, no recursive CTE) — and replicates the exact integer
     // micro-nat costs and smallest-backpointer tie-break, so the
     // trained vocabulary is hash-pinned against DuckDB end-to-end.
-    Q("q228_unigram_lm", unigramOracleSql(UniEmSteps)) { (s, dir) =>
+    Q("q228_unigram_lm", unigramOracleSql(UniEmSteps), Family.Mining) { (s, dir) =>
       val counts = unigramTrain(s, dir)
       counts
         .withColumn("rank",
@@ -1821,7 +1783,7 @@ object TextMining {
     // count) joined on the Heaps-bounded distinct-word key. Counting
     // laws (spec-pinned): every word segments into ≥ 1 and ≤ length(w)
     // tokens, so n_words ≤ n_tokens ≤ n_chars.
-    Q("q229_unigram_fertility", unigramFertilityOracleSql(UniEmSteps)) { (s, dir) =>
+    Q("q229_unigram_fertility", unigramFertilityOracleSql(UniEmSteps), Family.Mining) { (s, dir) =>
       val costs = uniCosts(unigramTrain(s, dir).collect()) // vocab-capped
       val nt = vocab(s, dir)
         .filter(col("w").rlike("^[a-z]+$") &&
@@ -1832,7 +1794,7 @@ object TextMining {
       fertilityCensus(s, dir, 1, UniMaxWordLen, nt)
     },
 
-    Q("q219_bpe_fertility", bpeFertilityOracleSql(BpeSteps)) { (s, dir) =>
+    Q("q219_bpe_fertility", bpeFertilityOracleSql(BpeSteps), Family.Mining) { (s, dir) =>
       val nt = bpeTrain(s, dir)._2.select(col("w"),
         size(split(regexp_replace(col("tok"), "^·|·$", ""), "··"))
           .cast("long").as("nt"))
@@ -1851,7 +1813,7 @@ object TextMining {
     // (driver pulls ONE row per step), merges applied as map-only
     // replaces. Unrolled-CTE oracle device carries over verbatim —
     // only the w0 seed differs (shared bpeOracleSteps blocks).
-    Q("q234_byte_bpe_merges", byteBpeOracleSql(BpeSteps)) { (s, dir) =>
+    Q("q234_byte_bpe_merges", byteBpeOracleSql(BpeSteps), Family.Mining) { (s, dir) =>
       import s.implicits._
       byteBpeTrain(s, dir)._1.toDF("step", "lhs", "rhs", "pair_n").orderBy("step")
     },
@@ -1876,7 +1838,7 @@ object TextMining {
     // eval word frame, unseen = one broadcast join against the
     // train vocabulary. Oracle replays the same merges as G unrolled
     // apply CTEs after the unrolled training.
-    Q("q236_byte_bpe_apply", byteBpeApplyOracleSql(BpeSteps)) { (s, dir) =>
+    Q("q236_byte_bpe_apply", byteBpeApplyOracleSql(BpeSteps), Family.Mining) { (s, dir) =>
       val merges = byteBpeTrainSplit(s, dir)._1
       val applyExpr = merges.foldLeft(
         "regexp_replace(hex(encode(w, 'UTF-8')), '(..)', '·$1·')") {
@@ -1915,7 +1877,7 @@ object TextMining {
     // compression per BYTE (strlen on the DuckDB side ≡ octet_length
     // on the Spark side). n_words ≤ n_tokens ≤ n_bytes by
     // construction (ByteBpeSpec pins the laws).
-    Q("q235_byte_bpe_fertility", byteBpeFertilityOracleSql(BpeSteps)) { (s, dir) =>
+    Q("q235_byte_bpe_fertility", byteBpeFertilityOracleSql(BpeSteps), Family.Mining) { (s, dir) =>
       val nt = byteBpeTrain(s, dir)._2.select(col("w"),
         size(split(regexp_replace(col("tok"), "^·|·$", ""), "··"))
           .cast("long").as("nt"))
@@ -2022,7 +1984,7 @@ object TextMining {
         |       GROUP BY 1, 2, 3, 4)
         |SELECT sa, sb, na, nb,
         |       (1000000::HUGEINT * w_dec // (na::HUGEINT * nb))::BIGINT AS w1_micro
-        |FROM w1 ORDER BY sa, sb""".stripMargin) { (s, dir) =>
+        |FROM w1 ORDER BY sa, sb""".stripMargin, Family.Mining) { (s, dir) =>
       val cv = sourceLenCounts(s, dir)
       val n = cv.groupBy("source").agg(sum("c").as("n"))
       // pair-membership rows (sa, sb, source ∈ {sa, sb}) in ONE
@@ -2223,7 +2185,7 @@ object TextMining {
         |       t.tot AS total,
         |       (1000 * max(CASE WHEN r.rk <= k.k THEN r.cum ELSE 0 END)
         |        // t.tot)::BIGINT AS coverage_milli
-        |FROM k, r, t GROUP BY k.k, t.tot ORDER BY k""".stripMargin) { (s, dir) =>
+        |FROM k, r, t GROUP BY k.k, t.tot ORDER BY k""".stripMargin, Family.Mining) { (s, dir) =>
       import s.implicits._
       val rk = Window.orderBy(col("n_w").desc, col("w"))
       val r = vocab(s, dir)
@@ -2313,7 +2275,7 @@ object TextMining {
         |       ((1000::HUGEINT * (alloc0 + CASE WHEN NOT is_sat AND hrk <= leftover THEN 1 ELSE 0 END))
         |        // NULLIF(n, 0))::BIGINT AS epochs_milli,
         |       (CASE WHEN is_sat THEN 1 ELSE 0 END)::BIGINT AS saturated
-        |FROM h ORDER BY source""".stripMargin) { (s, dir) =>
+        |FROM h ORDER BY source""".stripMargin, Family.Mining) { (s, dir) =>
       budgetFill(sourceLenCounts(s, dir).groupBy("source")
         .agg(sum(expr("v * c")).as("n")))
     },
@@ -2349,7 +2311,7 @@ object TextMining {
         |       FROM tok)
         |SELECT doc_id, source, p,
         |       row_number() OVER (ORDER BY p, source)::BIGINT AS global_rank
-        |FROM pp ORDER BY doc_id""".stripMargin) { (s, dir) =>
+        |FROM pp ORDER BY doc_id""".stripMargin, Family.Mining) { (s, dir) =>
       curriculumRanked(s, dir)
         .select(col("doc_id"), col("source"), col("p"), col("global_rank"))
         .orderBy("doc_id")
@@ -2381,7 +2343,7 @@ object TextMining {
          |SELECT (off // $StepTokens)::BIGINT AS step, count(*)::BIGINT AS n_docs,
          |       sum(nt)::BIGINT AS n_tokens,
          |       count(DISTINCT source)::BIGINT AS n_sources
-         |FROM o GROUP BY 1 ORDER BY step""".stripMargin) { (s, dir) =>
+         |FROM o GROUP BY 1 ORDER BY step""".stripMargin, Family.Mining) { (s, dir) =>
       LlmText.globalOffsets(
           curriculumRanked(s, dir)
             .select(col("global_rank").as("doc_id"),
@@ -2563,7 +2525,7 @@ object TextMining {
         |       (1000::HUGEINT * (ta.n_types - coalesce(cov_types, 0)) // NULLIF(ta.n_types, 0))::BIGINT AS oov_type_milli
         |FROM t ta JOIN t tb ON ta.source <> tb.source
         |LEFT JOIN cov ON cov.s1 = ta.source AND cov.s2 = tb.source
-        |ORDER BY s1, s2""".stripMargin) { (s, dir) =>
+        |ORDER BY s1, s2""".stripMargin, Family.Mining) { (s, dir) =>
       val st = sourceTermCounts(s, dir)
       val t = st.groupBy("source")
         .agg(sum("c").as("n_occ"), count(lit(1)).as("n_types"))
@@ -2625,7 +2587,7 @@ object TextMining {
         |p AS (SELECT source, rk, c FROM r WHERE (rk & (rk - 1)) = 0)
         |SELECT source, rk, c AS freq,
         |       (1000::HUGEINT * c // lag(c) OVER (PARTITION BY source ORDER BY rk))::BIGINT AS ratio_milli
-        |FROM p ORDER BY source, rk""".stripMargin) { (s, dir) =>
+        |FROM p ORDER BY source, rk""".stripMargin, Family.Mining) { (s, dir) =>
       val rkW = Window.partitionBy("source").orderBy(col("c").desc, col("w"))
       val lagW = Window.partitionBy("source").orderBy("rk")
       sourceTermCounts(s, dir)
@@ -2674,7 +2636,7 @@ object TextMining {
         |SELECT w, df, sc::BIGINT AS n_w,
         |       (1000000::HUGEINT * sc // n.n)::BIGINT AS mean_micro,
         |       (1000 * (n.n * sc2 - sc * sc) // (n.n * sc))::BIGINT AS fano_milli
-        |FROM f, n ORDER BY w""".stripMargin) { (s, dir) =>
+        |FROM f, n ORDER BY w""".stripMargin, Family.Mining) { (s, dir) =>
       val head = vocab(s, dir).orderBy(col("n_w").desc, col("w")).limit(20).select("w")
       val dc = docs(s, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
@@ -2714,7 +2676,7 @@ object TextMining {
     // ADVICE r15 discipline. Plan at 100 TB: ONE corpus scan whose
     // token stream filters against the 22-word broadcast list BEFORE
     // the (source, w) shuffle; the profile frame is ≤ 22·|sources|
-    // rows — census-scale, persisted (registerPersisted, the skyline
+    // rows — census-scale, persisted (persistForQuery, the skyline
     // ADVICE r12 discipline) because norms, the pair dot, and the
     // grid all read it; the pair dot self-joins the CENSUS frame
     // (broadcast), never anything corpus-scale; the |sources|² grid
@@ -2747,8 +2709,7 @@ object TextMining {
       val p = scf.join(broadcast(t), "source")
         .select(col("source"), col("w"),
           expr("(cast(1000000 as decimal(38,0)) * c) div tot").cast("long").as("p"))
-        .persist()
-      graft.Caches.registerPersisted(p)
+        .transform(Caches.persistForQuery)
       val nrm = p.groupBy("source")
         .agg(sum(expr("cast(p as decimal(38,0)) * p")).as("n2"))
       val d = p.as("a")
@@ -2815,7 +2776,7 @@ object TextMining {
          |       count(DISTINCT h) FILTER (WHERE gr = fr)::BIGINT AS n_new_grams,
          |       (1000 * count(*) FILTER (WHERE gr = fr) // count(*))::BIGINT AS novelty_milli
          |FROM g JOIN f USING (h)
-         |GROUP BY step ORDER BY step""".stripMargin) { (s, dir) =>
+         |GROUP BY step ORDER BY step""".stripMargin, Family.Mining) { (s, dir) =>
       val sm = LlmText.globalOffsets(
           curriculumRanked(s, dir)
             .select(col("doc_id").as("orig_id"),
@@ -2881,7 +2842,7 @@ object TextMining {
         |       sum(c * greatest(v - 2048, 0))::BIGINT AS trunc_tokens,
         |       (1000::HUGEINT * sum(c * greatest(bucket - v, 0))
         |        // (sum(c) * bucket))::BIGINT AS pad_milli
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin) { (s, dir) =>
+        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin, Family.Mining) { (s, dir) =>
       sourceLenCounts(s, dir)
         .groupBy("v").agg(sum("c").as("c"))
         .filter(col("v") > 0)
@@ -3024,7 +2985,7 @@ object TextMining {
          |      JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
          |      WHERE a.w = '${Phrase(0)}' AND b.w = '${Phrase(1)}' AND c.w = '${Phrase(2)}')
          |SELECT doc_id, count(*)::BIGINT AS n_occ, min(pos)::BIGINT AS first_pos
-         |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin, Family.Mining) { (s, dir) =>
       phraseSearchOn(phrasePost(s, dir, Phrase), Phrase)
     }
   )
@@ -3033,17 +2994,15 @@ object TextMining {
     * memoized per (session, dir·phrase) like [[vocab]]/[[bpeTrain]]
     * (ADVICE r18: the previous form persisted + ad-hoc-registered a
     * FRESH frame at every plan construction, so repeated q227
-    * invocations in one sweep accumulated duplicate persisted frames
-    * until releaseAll). Released by [[release]]; built untimed in
+    * invocations in one sweep accumulated duplicate persisted frames).
+    * Released by [[release]]; built untimed in
     * [[prebuild]]. */
-  private val phrasePostCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def phrasePost(s: SparkSession, dir: String, phrase: Seq[String]): DataFrame =
-    phrasePostCache.computeIfAbsent((s, dir + "|" + phrase.mkString(" ")), _ =>
+    Caches.memo(Family.Mining, s, "phrasePost|" + dir + "|" + phrase.mkString(" "))(
       docs(s, dir)
         .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "w")))
         .filter(col("w").isin(phrase.distinct: _*))
-        .persist())
+        .persist())(_.unpersist())
 
   /** q227's positional phrase match over any (doc_id, pos, w) token
     * frame (0-based pos; output first_pos is 1-based). Factored so
@@ -3051,8 +3010,7 @@ object TextMining {
     * overlapping phrase instances and duplicate-term phrases both
     * count every instance. */
   private[llm] def phraseSearch(toksDf: DataFrame, phrase: Seq[String]): DataFrame = {
-    val post = toksDf.filter(col("w").isin(phrase.distinct: _*)).persist()
-    graft.Caches.registerPersisted(post)
+    val post = toksDf.filter(col("w").isin(phrase.distinct: _*)).transform(Caches.persistForQuery)
     phraseSearchOn(post, phrase)
   }
 
@@ -3135,8 +3093,7 @@ object TextMining {
         explode(tokens(col("text"))).as("w"))
       .groupBy("doc_id", "source", "lang", "w")
       .agg(count(lit(1)).as("c"))
-      .persist()
-    graft.Caches.registerPersisted(dw)
+      .transform(Caches.persistForQuery)
     val f = dw.groupBy("w").agg(
       sum(when(col("lang") === targetLang, col("c")).otherwise(0L)).as("ntw"),
       sum("c").as("nbw"))

@@ -229,16 +229,12 @@ object Analytics {
       val ords = T.df(s, dir, "orders").select("o_custkey", "o_orderpriority")
       def seg(pri: String) = ords.filter(col("o_orderpriority") === pri)
         .select(col("o_custkey").as("c")).distinct()
-      def persistSk(df: org.apache.spark.sql.DataFrame) = {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.Caches.registerPersisted(p); p
-      }
-      def sketch(df: org.apache.spark.sql.DataFrame) = persistSk(
+      def sketch(df: org.apache.spark.sql.DataFrame) = graft.Caches.persistForQuery(
         df.select(expr("((c % 1000000007) * 2654435761) % 1000000007").as("h"))
           .orderBy("h").limit(256))
       val a = seg("1-URGENT"); val b = seg("2-HIGH")
       val ska = sketch(a); val skb = sketch(b)
-      val sku = persistSk(ska.union(skb).distinct().orderBy("h").limit(256))
+      val sku = graft.Caches.persistForQuery(ska.union(skb).distinct().orderBy("h").limit(256))
       def stats(sk: org.apache.spark.sql.DataFrame, nn: String, hh: String) =
         sk.agg(count(lit(1)).as(nn), max("h").as(hh))
       def estSql(n: String, hk: String): String =
@@ -613,8 +609,7 @@ object Analytics {
         // consumers' concurrent AQE stages raced the unmaterialized
         // cache and recomputed it (the r21 q124 finding, measured 7x).
         .coalesce(1)
-        .persist()
-      graft.Caches.registerPersisted(h)
+        .transform(graft.Caches.persistForQuery)
       h.count()
       val n = h.groupBy("event_type").agg(sum("c").as("n"))
       val wv = Window.partitionBy("event_type").orderBy("cents")
@@ -701,11 +696,9 @@ object Analytics {
     // runs `.first()` here, so building the plan already scans the
     // input once. `p` is persisted so the probe, the bound-table pass,
     // and the final filter share ONE materialization instead of three
-    // scans (released with every other memo by Caches.releaseAll; at
-    // corpus scale the persisted frame is the 3-column projection, not
-    // the table).
-    val p = p0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.Caches.registerPersisted(p)
+    // scans (released by the running query's hook; at corpus scale the
+    // persisted frame is the 3-column projection, not the table).
+    val p = graft.Caches.persistForQuery(p0)
     val cells = 64
     val probs = (1 until cells).map(_.toDouble / cells).toArray
     val cutRow = p.agg(

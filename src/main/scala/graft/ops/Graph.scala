@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.{Caches, Family}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Q, T}
@@ -47,29 +48,24 @@ import graft.core.{Q, T}
   */
 object Graph {
 
-  /** (src, dst, outdeg) undirected trading edges with out-degree
-    * attached — the per-iteration join frame, persisted once per
-    * (session, dir). */
-  private val edCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   /** Distinct (custkey, suppkey+1e6) trading pairs — the one
     * fact-table-scanning subtree, persisted so the edge list, the
     * degree table, and nothing else ever re-reads lineitem. */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private def pairs(s: SparkSession, dir: String): DataFrame =
-    pairCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Graph, s, "pair|" + dir) {
       val o = T.df(s, dir, "orders").select("o_orderkey", "o_custkey")
       val l = T.df(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("c"), (col("l_suppkey") + 1000000L).as("s"))
         .distinct()
         .persist()
-    })
+    }(_.unpersist())
 
+  /** (src, dst, outdeg) undirected trading edges with out-degree
+    * attached — the per-iteration join frame, persisted once per
+    * (session, dir). */
   private[graft] def edgesDeg(s: SparkSession, dir: String): DataFrame =
-    edCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Graph, s, "ed|" + dir) {
       val cs = pairs(s, dir)
       val edges = cs.select(col("c").as("src"), col("s").as("dst"))
         .union(cs.select(col("s").as("src"), col("c").as("dst")))
@@ -79,7 +75,7 @@ object Graph {
       // join's distribution and only the O(|nodes|) rank frame
       // shuffles per iteration — the edge list never re-exchanges
       edges.join(deg, "src").repartition(col("src")).persist()
-    })
+    }(_.unpersist())
 
   /** Distinct (order `k`, part `p`) items — ONE fact-table scan
     * feeding the whole part-graph family (round 14: q113's pair set,
@@ -87,14 +83,12 @@ object Graph {
     * separate lineitem derivations of the same object; now every
     * consumer reads these two persisted frames and the scan happens
     * exactly once per (session, dir)). */
-  private val orderItemsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def orderItems(s: SparkSession, dir: String): DataFrame =
-    orderItemsCache.computeIfAbsent((s, dir), _ =>
+    Caches.memo(Family.Graph, s, "orderItems|" + dir)(
       T.df(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"), col("l_partkey").as("p"))
         .distinct()
-        .persist())
+        .persist())(_.unpersist())
 
   /** Order-basket pair SUPPORT (pa < pb, n) — the weighted co-purchase
     * edge list, persisted once: q122 is its top-30, q113's canonical
@@ -105,10 +99,8 @@ object Graph {
     * map-side — order baskets are schema-bounded, so the mega-basket
     * tiling hedge stays where baskets are unbounded ([[pairCounts]],
     * q133's customer baskets). */
-  private val pairSupportCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[graft] def pairSupport(s: SparkSession, dir: String): DataFrame =
-    pairSupportCache.computeIfAbsent((s, dir), _ => {
+    Caches.memo(Family.Graph, s, "pairSupport|" + dir) {
       orderItems(s, dir)
         .groupBy("k").agg(collect_set(col("p")).as("ps"))
         .select(explode(col("ps")).as("pa"), col("ps"))
@@ -116,7 +108,7 @@ object Graph {
         .filter(col("pa") < col("pb"))
         .groupBy("pa", "pb").agg(count(lit(1)).as("n"))
         .persist()
-    })
+    }(_.unpersist())
 
   /** Canonical (a < b) distinct part pairs — q113's undirected edge
     * set, now a projection of the persisted [[pairSupport]] frame. */
@@ -124,14 +116,6 @@ object Graph {
     pairSupport(s, dir).select(col("pa").as("a"), col("pb").as("b"))
 
 
-  /** Degree-ordered orientation of [[partPairs]] — each edge pointed
-    * from its (degree, id)-smaller endpoint. Persisted: the wedge
-    * self-join reads it twice, and caching it makes the degree
-    * aggregate run exactly once (at fill time) instead of once per
-    * degree-join branch (measured: the uncached form planned the
-    * node-degree aggregate 4× and the orientation pass 2×). */
-  private val oriCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   /** Degree-ordered orientation of a canonical (a < b) pair frame:
     * each edge pointed from its (degree, id)-smaller endpoint. The
     * property that makes triangle counting O(m^1.5): every node's OUT-
@@ -155,25 +139,24 @@ object Graph {
         when(lt, col("b")).otherwise(col("a")).as("v"))
   }
 
+  /** Degree-ordered orientation of [[partPairs]] — each edge pointed
+    * from its (degree, id)-smaller endpoint. Persisted: the wedge
+    * self-join reads it twice, and caching it makes the degree
+    * aggregate run exactly once (at fill time) instead of once per
+    * degree-join branch (measured: the uncached form planned the
+    * node-degree aggregate 4× and the orientation pass 2×). */
   private def oriented(s: SparkSession, dir: String): DataFrame =
-    oriCache.computeIfAbsent((s, dir), _ =>
+    Caches.memo(Family.Graph, s, "ori|" + dir)(
       orient(partPairs(s, dir))
         // persisted PARTITIONED on the wedge key: InMemoryRelation
         // reports its child's outputPartitioning, so both branches of
         // the wedge self-join read co-partitioned cache with no
         // re-exchange
         .repartition(col("u"))
-        .persist())
+        .persist())(_.unpersist())
 
-  /** Unpersists the cached graph frames for `s` (fires after the
-    * family's last consumer). */
-  def release(s: SparkSession): Unit = {
-    graft.Caches.dropSession(edCache, s)(_.unpersist())
-    graft.Caches.dropSession(pairCache, s)(_.unpersist())
-    graft.Caches.dropSession(oriCache, s)(_.unpersist())
-    graft.Caches.dropSession(orderItemsCache, s)(_.unpersist())
-    graft.Caches.dropSession(pairSupportCache, s)(_.unpersist())
-  }
+  /** Unpersists the cached graph frames for `s`. */
+  def release(s: SparkSession): Unit = Family.Graph.release(s)
 
   /** Force-build the graph family's memoized frames — the bench's
     * named untimed cache-build slot (round 17; see
@@ -201,7 +184,7 @@ object Graph {
         |p3 AS (SELECT e.dst AS node, 150 + (850 * sum(p.pr // d.outdeg)) // 1000 AS pr
         |       FROM edges e JOIN p2 p ON p.node = e.src JOIN deg d ON d.src = e.src GROUP BY 1)
         |SELECT node, pr::BIGINT AS pr_milli FROM p3
-        |ORDER BY pr_milli DESC, node LIMIT 30""".stripMargin) { (s, dir) =>
+        |ORDER BY pr_milli DESC, node LIMIT 30""".stripMargin, Family.Graph) { (s, dir) =>
       val ed = edgesDeg(s, dir)
       // pr₀ = 1000 for every node with out-edges (= every node of the
       // undirected graph); distinct over the CACHED edge frame, no
@@ -258,7 +241,7 @@ object Graph {
         |  JOIN pairs e ON e.a = least(o1.v, o2.v) AND e.b = greatest(o1.v, o2.v)),
         |pn AS (SELECT unnest([x,y,z]) AS part, 1 AS one FROM tri)
         |SELECT part, count(*)::BIGINT AS n_tri FROM pn GROUP BY 1
-        |ORDER BY n_tri DESC, part LIMIT 30""".stripMargin) { (s, dir) =>
+        |ORDER BY n_tri DESC, part LIMIT 30""".stripMargin, Family.Graph) { (s, dir) =>
       val pairs = partPairs(s, dir)
       val ori = oriented(s, dir)
       // Bloom pre-filter on the canonical closing key (q81's broadcast-
@@ -312,7 +295,7 @@ object Graph {
         |p AS (SELECT u1.p1 AS a, u2.p2 AS b FROM b,
         |      unnest(ps) AS u1(p1), unnest(ps) AS u2(p2) WHERE u1.p1 < u2.p2)
         |SELECT a, b, count(*)::BIGINT AS support FROM p GROUP BY 1, 2
-        |ORDER BY support DESC, a, b LIMIT 30""".stripMargin) { (s, dir) =>
+        |ORDER BY support DESC, a, b LIMIT 30""".stripMargin, Family.Graph) { (s, dir) =>
       pairSupport(s, dir)
         .select(col("pa").as("a"), col("pb").as("b"), col("n").as("support"))
         .orderBy(col("support").desc, col("a"), col("b"))
@@ -411,7 +394,7 @@ object Graph {
         |         SELECT e.dst AS node, d.hop + 1 AS hop FROM edges e JOIN d2 d ON d.node = e.src
         |         UNION ALL SELECT node, hop FROM d2) GROUP BY 1)
         |SELECT hop::BIGINT AS hop, count(*)::BIGINT AS n_nodes, sum(node)::BIGINT AS node_sum
-        |FROM d3 GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
+        |FROM d3 GROUP BY 1 ORDER BY 1""".stripMargin, Family.Graph) { (s, dir) =>
       val sources = T.df(s, dir, "customer")
         .filter(col("c_nationkey") === 0)
         .select(col("c_custkey").as("node"))
@@ -462,7 +445,7 @@ object Graph {
         |         row_number() OVER (PARTITION BY a ORDER BY sim_micro DESC, b) AS rnk
         |       FROM sc)
         |SELECT a AS p_item, b AS p_rec, sim_micro, rnk::BIGINT AS rnk
-        |FROM rk WHERE rnk <= 5 ORDER BY p_item, rnk""".stripMargin) { (s, dir) =>
+        |FROM rk WHERE rnk <= 5 ORDER BY p_item, rnk""".stripMargin, Family.Graph) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val co = pairSupport(s, dir)
       val deg = orderItems(s, dir).groupBy("p").agg(count(lit(1)).as("d"))
@@ -608,9 +591,8 @@ object Graph {
     // round-14 TripleAb finding (caching ITEMS flipped downstream join
     // strategies 2× slower) does not apply because every downstream
     // consumer of fp/cand carries an explicit broadcast hint.
-    // Released by Caches.releaseAll with the other ad-hoc frames.
-    val fp = pairs.filter(col("n") >= minSup).select("pa", "pb").persist()
-    graft.Caches.registerPersisted(fp)
+    // Released by the query's own hook (Caches.persistForQuery).
+    val fp = pairs.filter(col("n") >= minSup).select("pa", "pb").transform(Caches.persistForQuery)
     val fpH = fp.select(col("pa").as("hpa"), col("pb").as("hpb"))
     val cand = broadcast(fp).as("f")
       .join(broadcast(fp).as("g"),

@@ -1,5 +1,6 @@
 package graft.registry
 
+import graft.Family
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Q
@@ -30,7 +31,7 @@ object RegistryQueries {
         |) AS t(eudract_id, overall_status, official_title, sponsor_id, nct_id, condition,
         |       meddra_level, meddra_classification, meddra_soc, enrollment,
         |       study_first_submitted_date, completion_date)
-        |ORDER BY eudract_id""".stripMargin) { (s, _) =>
+        |ORDER BY eudract_id""".stripMargin, Family.Registry) { (s, _) =>
       tables(s).trials.select("eudract_id", "overall_status", "official_title",
           "sponsor_id", "nct_id", "condition", "meddra_level", "meddra_classification",
           "meddra_soc", "enrollment", "study_first_submitted_date", "completion_date")
@@ -46,7 +47,7 @@ object RegistryQueries {
         |  ('2006-000003-33', CAST(NULL AS INTEGER), NULL, NULL, NULL, 0, NULL, NULL, NULL, NULL, NULL)
         |) AS t(eudract_id, placebo, phase1, phase2, phase3, rare, randomised,
         |       double_blind, open_design, female, male)
-        |ORDER BY eudract_id""".stripMargin) { (s, _) =>
+        |ORDER BY eudract_id""".stripMargin, Family.Registry) { (s, _) =>
       tables(s).trials.select("eudract_id", "placebo", "phase1", "phase2", "phase3",
           "rare", "randomised", "double_blind", "open_design", "female", "male")
         .orderBy("eudract_id")
@@ -60,7 +61,7 @@ object RegistryQueries {
         |  ('2004-000001-11', 2, CAST(NULL AS VARCHAR), 'betazol', 'bz-9'),
         |  ('2006-000003-33', 1, 'gammax', 'gammaxol', 'gx-7')
         |) AS t(eudract_id, imp_seq, trade, product, code)
-        |ORDER BY eudract_id, imp_seq""".stripMargin) { (s, _) =>
+        |ORDER BY eudract_id, imp_seq""".stripMargin, Family.Registry) { (s, _) =>
       tables(s).imp.orderBy("eudract_id", "imp_seq")
     },
 
@@ -73,7 +74,7 @@ object RegistryQueries {
         |  ('2005-000002-22', 1, CAST(NULL AS VARCHAR), NULL, NULL, NULL),
         |  ('2006-000003-33', 1, 'Gamma Bio', NULL, NULL, 'info@gamma.example.org')
         |) AS t(eudract_id, sponsor_seq, name, org, contact, email)
-        |ORDER BY eudract_id, sponsor_seq""".stripMargin) { (s, _) =>
+        |ORDER BY eudract_id, sponsor_seq""".stripMargin, Family.Registry) { (s, _) =>
       tables(s).sponsor.orderBy("eudract_id", "sponsor_seq")
     },
 
@@ -86,7 +87,7 @@ object RegistryQueries {
         |  ('2005-000002-22', 'Italy'),
         |  ('2006-000003-33', 'Switzerland')
         |) AS t(eudract_id, location)
-        |ORDER BY eudract_id, location""".stripMargin) { (s, _) =>
+        |ORDER BY eudract_id, location""".stripMargin, Family.Registry) { (s, _) =>
       tables(s).location.orderBy("eudract_id", "location")
     },
 
@@ -98,7 +99,7 @@ object RegistryQueries {
         |   'product:alphamab; product:betazol',
         |   'France, Germany, Japan, United States', 'Acme Pharma')
         |) AS t(eudract_id, official_title, enrollment, imp_entry, location_entry, sponsor_entry)
-        |ORDER BY eudract_id""".stripMargin) { (s, _) =>
+        |ORDER BY eudract_id""".stripMargin, Family.Registry) { (s, _) =>
       Search.export(tables(s),
         Search.Query(
           trial = Some("overall_status <> 'completed'"),

@@ -1,5 +1,6 @@
 package graft.registry
 
+import graft.{Caches, Family}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -199,19 +200,15 @@ object Registry {
     * persisted and all views derive from it. Re-parsing per query was
     * pure waste — a production deployment materializes the merged
     * table once per corpus snapshot. */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), RegistryTables]()
-
   def load(spark: SparkSession, corpusPath: String): RegistryTables =
-    cache.computeIfAbsent((spark, corpusPath),
-      _ => new RegistryTables(TrialMerge.merge(spark, corpusPath).persist()))
+    Caches.memo(Family.Registry, spark, corpusPath)(
+      new RegistryTables(TrialMerge.merge(spark, corpusPath).persist()))(_.release())
 
   /** Drop every parsed corpus owned by `spark` (see [[graft.Caches]]):
     * unpersists each merged root, after which no persisted RDD of the
     * registry remains and the dropped handles refuse further use (see
     * [[RegistryTables]]); the next `load` parses afresh. */
-  def release(spark: SparkSession): Unit =
-    graft.Caches.dropSession(cache, spark)(_.release())
+  def release(spark: SparkSession): Unit = Family.Registry.release(spark)
 
   /** Force-parse the synthetic registry corpus — the bench's named
     * untimed cache-build slot (round 17; see

@@ -153,8 +153,7 @@ object EmbDeconGate {
     * this harness entry returns the census, so the store is scratch). */
   def run(s: SparkSession, dir: String): DataFrame = {
     val dim = graft.llm.LlmVector.embDim(graft.core.T.df(s, dir, "embeddings"))
-    val bn = bench(s, dir, dim).persist()
-    graft.Caches.registerPersisted(bn)
+    val bn = bench(s, dir, dim).transform(graft.Caches.persistForQuery)
     bn.count()
     val store = "/tmp/graft/embdecon_" +
       java.util.UUID.randomUUID().toString.replace("-", "")

@@ -83,8 +83,7 @@ object StreamDeconGate {
     * decide each batch exactly, store decisions exactly-once, report
     * the per-source census. */
   def run(s: SparkSession, dir: String): DataFrame = {
-    val bn = bench(s, dir).persist()
-    graft.Caches.registerPersisted(bn)
+    val bn = bench(s, dir).transform(graft.Caches.persistForQuery)
     val bloom = graft.plans.BloomKernels.buildBroadcast(s, bn, "sh", bn.count(), 0.01)
     val store = "/tmp/graft/decon_" +
       java.util.UUID.randomUUID().toString.replace("-", "")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Family
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Q, T}
@@ -71,9 +72,9 @@ object Streams {
   }
 
   /** A streaming Q: the whole body runs under [[withStreamParts]]. */
-  private def SQ(name: String, oracle: String)(
+  private def SQ(name: String, oracle: String, reads: Family*)(
       body: (SparkSession, String) => DataFrame): Q =
-    Q(name, oracle)((s, dir) => withStreamParts(s)(body(s, dir)))
+    Q(name, oracle, reads: _*)((s, dir) => withStreamParts(s)(body(s, dir)))
 
   /** Shared scratch-store epilogue for the gate queries (q204/q215 —
     * review r17: one materialize-then-delete dance, not one per
@@ -100,30 +101,17 @@ object Streams {
     s.createDataFrame(rows.asJava, out.schema)
   }
 
-  /** UUID-named memory-sink tables created by this session's streaming
-    * queries (round 18, VERDICT r17 item 6 — the IN-MEMORY face of the
-    * q204 store-leak class): each run of a memory-sink query registers
-    * a temp view holding its FULL result rows in the driver for the
-    * life of the session, so a 10-board sweep session accumulates
-    * hundreds of result copies nothing ever drops. Names register
-    * here; [[release]] drops the views — wired as the `streaming`
-    * family in [[graft.Caches]], so the views die right after the
-    * family's last consumer each sweep, exactly like persisted frames
-    * (a consumer re-run after release just re-streams under a fresh
-    * name). */
-  private val memTables = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]())
+  /** A fresh UUID-named memory-sink table for the running query
+    * (round 18, VERDICT r17 item 6 — the IN-MEMORY face of the q204
+    * store-leak class): each run of a memory-sink query registers a
+    * temp view holding its FULL result rows in the driver for the life
+    * of the session, so the view is dropped by the query's own release
+    * hook ([[graft.Caches.onRelease]]); a re-run streams under a fresh
+    * name. */
   private[streaming] def memTable(s: SparkSession, prefix: String): String = {
     val name = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    memTables.add((s, name))
+    graft.Caches.onRelease(s)(s.catalog.dropTempView(name))
     name
-  }
-  def release(s: SparkSession): Unit = {
-    val it = memTables.iterator()
-    while (it.hasNext) {
-      val (owner, name) = it.next()
-      if (owner eq s) { owner.catalog.dropTempView(name); it.remove() }
-    }
   }
 
   /** Streaming exact-dedup for a document ingest stream: drop every
@@ -636,7 +624,7 @@ object Streams {
         |       count(*) FILTER (WHERE NOT has_sh)::BIGINT AS n_short,
         |       (1000 * count(*) FILTER (WHERE has_sh AND 2 * n_hit >= n_sh)
         |        // NULLIF(count(*) FILTER (WHERE has_sh), 0))::BIGINT AS flagged_milli
-        |FROM pop GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
+        |FROM pop GROUP BY source ORDER BY source""".stripMargin, Family.Text) { (s, dir) =>
       StreamDeconGate.run(s, dir)
     },
 

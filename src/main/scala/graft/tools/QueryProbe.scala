@@ -89,14 +89,8 @@ object QueryProbe {
           new java.io.File(detailPath).toPath), "UTF-8"))
         val flagged = graft.Bench.anchorFlags(meds, anchors).map(_._1).toSet
         println(s"flagged vs committed anchors: ${flagged.toSeq.sorted.mkString(",")}")
-        graft.SparkEntry.all.filter(q => flagged(q.name.takeWhile(_ != '_')))
-      } else {
-        val wanted = args.headOption
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-          .getOrElse(sys.error(Usage))
-        graft.SparkEntry.all.filter(q =>
-          wanted(q.name) || wanted(q.name.takeWhile(_ != '_')))
-      }
+        graft.SparkEntry.select(flagged)
+      } else graft.SparkEntry.select(args.headOption.getOrElse(sys.error(Usage)).split(","))
     if (flaggedMode && selected.isEmpty) {
       println("no queries flagged — nothing to probe")
       spark.stop(); return

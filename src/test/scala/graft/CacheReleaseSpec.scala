@@ -15,9 +15,11 @@ class CacheReleaseSpec extends SparkSpec {
     Caches.releaseAll(spark)
     val base = persisted
     // populate all five families, incl. every round-15 TextMining
-    // cache (source-grams, split-length, source-terms) and a q160
-    // adHoc-registered histogram frame
+    // cache (source-grams, split-length, source-terms), q57's
+    // connected-components frame (with the label RDD it reads) and a
+    // q160 query-scoped histogram frame
     SparkEntry.queries("q41_dedup_minhash_lsh")(spark, dir).count()
+    SparkEntry.queries("q57_dedup_clusters")(spark, dir).count()
     SparkEntry.queries("q43_ann_cosine_topk")(spark, dir).count()
     SparkEntry.queries("q32_registry_trial")(spark, dir).count()
     SparkEntry.queries("q109_pagerank")(spark, dir).count()

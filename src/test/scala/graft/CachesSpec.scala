@@ -1,48 +1,55 @@
 package graft
 
-/** Release-hook computation: each cache family must fire exactly once,
-  * right after its LAST consumer in the sweep order — too early wastes
-  * recomputation, never leaks persisted frames across the sweep. */
+/** Release-hook computation from the queries' family declarations:
+  * each cache family fires exactly once, right after its LAST reader
+  * in the sweep order — too early wastes recomputation, never leaks
+  * persisted frames across the sweep — and every query gets a hook for
+  * its own frames. */
 class CachesSpec extends org.scalatest.funsuite.AnyFunSuite {
 
+  private val registered = SparkEntry.all.map(_.name)
+
+  /** For `order`: the query names whose hooks release family `f`. */
+  private def firing(order: Seq[String]): Map[Family, Seq[String]] = {
+    val last = Caches.lastReaders(order)
+    Family.all.map(f => f -> order.filter(n => last.get(f).contains(n))).toMap
+  }
+
+  private def readers(f: Family): Seq[String] =
+    SparkEntry.all.filter(_.reads.contains(f)).map(_.name)
+
   test("hooks fire after each family's last consumer in registration order") {
-    val order = SparkEntry.all.map(_.name)
-    val hooks = Caches.releaseHooks(order)
-    // every family with a consumer present resolves to exactly one hook
-    // (registry/text/vector/graph/mining + the streaming memory-sink
-    // view family, round 18)
-    assert(hooks.values.map(_.size).sum == 6)
-    // the hook for the text-dedup family sits at the LAST of its
-    // consumers; no earlier consumer carries a hook
-    val textConsumers = Seq("q39_dedup_ngram_jaccard", "q40_dedup_minhash_sig",
-      "q41_dedup_minhash_lsh", "q42_dedup_simhash", "q48_text_fingerprint",
-      "q57_dedup_clusters", "q62_text_contamination", "q63_text_repetition",
-      "q66_dedup_simhash_ham", "q74_chunk_sliding", "q81_decontaminate_bloom",
-      "q82_lm_perplexity", "q89_dedup_incremental",
-      "q91_dedup_cluster_sizes", "q100_split_leakage",
-      "q101_bm25_topk", "q124_jaccard_prefix_join",
-      "q132_dedup_containment", "q135_containment_incremental",
-      "q166_lsh_recall_calib", "q167_dedup_threshold_curve",
-      "q169_dedup_yield", "q172_simhash_jaccard_transfer",
-      "q176_cluster_sources", "q182_soft_dedup_mass",
-      "q183_cluster_cohesion", "q185_lsh_band_census",
-      "q174_langid_agreement", "q191_langid_kappa",
-      "q192_langid_prf", "q194_split_gram_leak", "q203_edit_verify",
-      "q204_stream_decon_gate", "q206_contamination_attribution",
-      "q221_substring_dedup", "q222_dedup_facade_graph",
-      "q223_substring_cut_census", "q224_span_clusters").filter(order.contains)
-    val last = textConsumers.maxBy(order.indexOf)
-    assert(hooks.contains(last))
-    textConsumers.filter(_ != last).foreach(q => assert(!hooks.contains(q)))
+    Seq(registered, registered.reverse).foreach { order =>
+      val hooks = Caches.releaseHooks(order)
+      val fire = firing(order)
+      Family.all.foreach { f =>
+        assert(readers(f).nonEmpty, s"no query declares ${f.name}")
+        assert(fire(f) == Seq(readers(f).maxBy(order.indexOf)), s"${f.name} fires at ${fire(f)}")
+      }
+      // one hook per query for its own frames, plus one per family
+      // whose last reader it is
+      order.foreach { n =>
+        assert(hooks(n).size == 1 + Family.all.count(f => fire(f) == Seq(n)), n)
+      }
+    }
   }
 
   test("every hooked query name is a registered query") {
-    val names = SparkEntry.all.map(_.name).toSet
-    Caches.releaseHooks(names.toSeq).keys.foreach(k => assert(names(k)))
+    assert(registered.distinct.size == registered.size)
+    val hooks = Caches.releaseHooks(registered)
+    assert(hooks.keySet == registered.toSet)
+    Caches.lastReaders(registered).values.foreach(n => assert(registered.contains(n), n))
   }
 
   test("a sweep without a family's consumers gets no hook for it") {
-    val hooks = Caches.releaseHooks(Seq("q1_agg", "q2_filter_project"))
-    assert(hooks.isEmpty)
+    val plain = Seq("q1_agg", "q2_filter_project")
+    plain.foreach(n => assert(registered.contains(n), n))
+    assert(Caches.lastReaders(plain).isEmpty)
+    assert(Caches.releaseHooks(plain).values.forall(_.size == 1))
+    val textOnly = readers(Family.Text).filterNot(n =>
+      SparkEntry.all.exists(q => q.name == n && q.reads.exists(_ != Family.Text)))
+    assert(textOnly.nonEmpty)
+    assert(Caches.lastReaders(textOnly).keySet == Set(Family.Text))
+    assert(Caches.prebuild(null, "", Set("q1_agg")).isEmpty)
   }
 }
