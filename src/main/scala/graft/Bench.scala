@@ -275,6 +275,21 @@ object Bench {
   private def fmt(v: Double): String =
     "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
+  /** One sweep row, shared by both artifact forms; only the detail
+    * record carries the per-family `builds` block. */
+  private def sweepJson(s: SweepStat, builds: Boolean): String = {
+    val fam =
+      if (!builds || s.builds.isEmpty) ""
+      else s.builds.map { case (n, t) => s"""\"$n\":${fmt(t)}""" }
+        .mkString(",\"builds\":{", ",", "}")
+    (if (s.sweep >= 0) s"""{\"sweep\":${s.sweep},""" else "{") +
+      s"""\"sum\":${fmt(s.sum)},\"gc_ms\":${s.gcMs},\"cg\":${s.compiles},\"build\":${fmt(s.build)}$fam""" +
+      (if (s.warm) ",\"warm\":true" else "") +
+      (if (s.calibFlag) ",\"calib_flag\":true" else "") +
+      s.rerunOf.map(o => s",\"rerun_of\":$o").getOrElse("") +
+      (if (s.dropped) ",\"dropped\":true" else "") + "}"
+  }
+
   /** Self-describing board environment (round 22, VERDICT r21 item 6:
     * the r21 tmpfs scratch move made scratch media a board variable the
     * artifact did not record, so cross-round comparisons could silently
@@ -292,7 +307,7 @@ object Bench {
     * family's state width, and the effective SessionTuning pairs. */
   def liveEnv(): Seq[(String, String)] =
     Seq("local_dir" -> graft.core.LocalDirs.resolve().getOrElse("default"),
-      "stream_parts" -> graft.streaming.Streams.streamParts) ++
+      "stream_parts" -> graft.streaming.Streams.StreamParts.toString) ++
       (if (graft.core.SessionTuning.effective().isEmpty) Nil
        else Seq("sqlconf" -> graft.core.SessionTuning.effective()
          .map { case (k, v) => s"$k=$v" }.mkString(";")))
@@ -363,13 +378,7 @@ object Bench {
       }
     val sw =
       if (sweeps.isEmpty) ""
-      else sweeps.map(s =>
-        (if (s.sweep >= 0) s"""{\"sweep\":${s.sweep},""" else "{") +
-          s"""\"sum\":${fmt(s.sum)},\"gc_ms\":${s.gcMs},\"cg\":${s.compiles},\"build\":${fmt(s.build)}""" +
-          (if (s.warm) ",\"warm\":true" else "") +
-          (if (s.calibFlag) ",\"calib_flag\":true" else "") +
-          s.rerunOf.map(o => s",\"rerun_of\":$o").getOrElse("") +
-          (if (s.dropped) ",\"dropped\":true" else "") + "}")
+      else sweeps.map(sweepJson(_, builds = false))
         .mkString(",\"sweeps\":[", ",", "]") + spreadBlock(sweeps)
     val det = detail.map(d => s""",\"detail\":\"$d\"""").getOrElse("")
     // the self-flag block: normally EMPTY (costs ~0 budget); a >2×
@@ -431,21 +440,10 @@ object Bench {
     val midS = mid.map(c =>
       s"""{\"sweep\":${c.sweep},\"pos\":${c.pos},\"hash\":${fmt(c.hash)},\"spark\":${fmt(c.spark)}}""")
       .mkString("[", ",", "]")
-    val sw = sweeps.map { s =>
-      // the DETAIL record attributes the untimed slot per family (the
-      // "named slot" promise — review r17): a regression in ONE
-      // family's build is visible, not folded into the aggregate
-      val fam =
-        if (s.builds.isEmpty) ""
-        else s.builds.map { case (n, t) => s"""\"$n\":${fmt(t)}""" }
-          .mkString(",\"builds\":{", ",", "}")
-      (if (s.sweep >= 0) s"""{\"sweep\":${s.sweep},""" else "{") +
-        s"""\"sum\":${fmt(s.sum)},\"gc_ms\":${s.gcMs},\"cg\":${s.compiles},\"build\":${fmt(s.build)}$fam""" +
-        (if (s.warm) ",\"warm\":true" else "") +
-        (if (s.calibFlag) ",\"calib_flag\":true" else "") +
-        s.rerunOf.map(o => s",\"rerun_of\":$o").getOrElse("") +
-        (if (s.dropped) ",\"dropped\":true" else "") + "}"
-    }.mkString("[", ",", "]")
+    // the DETAIL record attributes the untimed slot per family (the
+    // "named slot" promise — review r17): a regression in ONE family's
+    // build is visible, not folded into the aggregate
+    val sw = sweeps.map(sweepJson(_, builds = true)).mkString("[", ",", "]")
     val total = times.collect { case (n, ts) if !errors.contains(n) && ts.nonEmpty => median(ts) }.sum
     s"""{\"total\":${fmt(total)},\"runs\":$runs,\"cpus\":\"$cpus\",\"sf\":\"$sfDir\",""" +
       s"""\"calib\":$cal,\"mid_calib\":$midS,\"sweeps\":$sw${spreadBlock(sweeps)}${envJson(env)},\"queries\":$qs}"""

@@ -36,15 +36,46 @@ object T {
     * clock DuckDB sees — values identical in both engines. */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+    normalizeTs(s.read.parquet(s"$dir/events.parquet"))
+  }
+
+  /** The [[events]] `ts` normalization over any frame, batch or
+    * streaming; a frame without a `ts` column is returned as is. */
+  def normalizeTs(raw: DataFrame): DataFrame =
+    raw.schema.find(_.name == "ts").map(_.dataType) match {
+      case Some(org.apache.spark.sql.types.LongType) =>
         raw.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
+      case Some(org.apache.spark.sql.types.TimestampNTZType) =>
         raw.withColumn("ts",
           org.apache.spark.sql.functions.col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => raw
     }
+
+  /** A table derived from the fixture's `documents`, staged once per
+    * fixture generation at `/tmp/graft/<prefix>_<stamp>` and returned.
+    * The stamp is `documents.parquet`'s size+mtime, so a regenerated
+    * fixture at the same path never meets a stale staged copy. `write`
+    * fills a pid-suffixed stage dir that is promoted with ATOMIC_MOVE:
+    * an interrupted run leaves only an orphaned stage dir, never a
+    * half-written table, and a concurrent run that lost the move
+    * discards its (identical) copy. */
+  def staged(dir: String, prefix: String)(write: java.nio.file.Path => Unit): java.nio.file.Path = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val src = Paths.get(dir, "documents.parquet")
+    val stamp = Files.size(src) + "_" + Files.getLastModifiedTime(src).toMillis
+    val base = Paths.get(s"/tmp/graft/${prefix}_$stamp")
+    if (!Files.exists(base)) {
+      val stage = base.resolveSibling(
+        base.getFileName.toString + ".stage_" + ProcessHandle.current().pid())
+      write(stage)
+      try Files.move(stage, base, StandardCopyOption.ATOMIC_MOVE)
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException |
+             _: java.nio.file.DirectoryNotEmptyException =>
+          org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+      }
+    }
+    base
   }
 
   /** Register all fixture tables as temp views (for spark.sql entries).

@@ -29,15 +29,8 @@ import graft.core.{Q, T}
   */
 object JsonlSource {
 
-  private[ingest] def jsonlDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-    val src = Paths.get(dir, "documents.parquet")
-    val stamp = Files.size(src) + "_" + Files.getLastModifiedTime(src).toMillis
-    val base = Paths.get(s"/tmp/graft/jsonl_$stamp")
-    if (!Files.exists(base)) {
-      val stage = base.resolveSibling(
-        base.getFileName.toString + ".stage_" + ProcessHandle.current().pid())
-      Files.createDirectories(stage)
+  private[ingest] def jsonlDir(s: SparkSession, dir: String): String =
+    T.staged(dir, "jsonl") { stage =>
       // build the lines driver-side? No — render per-row in executors
       // and write as text: scales with the corpus like any sink
       T.df(s, dir, "documents")
@@ -47,19 +40,7 @@ object JsonlSource {
           .otherwise(to_json(struct(col("doc_id"), col("lang"), col("n_chars"))))
           .as("value"))
         .write.mode("overwrite").text(stage.resolve("docs").toString)
-      def rmTree(p: Path): Unit = {
-        import scala.jdk.CollectionConverters._
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.delete)
-      }
-      try Files.move(stage, base, StandardCopyOption.ATOMIC_MOVE)
-      catch { // a concurrent run staged `base` first: its copy is identical
-        case _: java.nio.file.FileAlreadyExistsException => rmTree(stage)
-        case _: java.nio.file.DirectoryNotEmptyException => rmTree(stage)
-      }
-    }
-    base.resolve("docs").toString
-  }
+    }.resolve("docs").toString
 
   /** The intake contract: typed fields + the quarantine column. */
   private val intakeSchema = StructType(Seq(

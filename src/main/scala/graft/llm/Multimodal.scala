@@ -1589,36 +1589,12 @@ object Multimodal {
     }
   }
 
-  /** Stage a derived fixture table once per source-fixture generation
-    * (q90's staging discipline, shared by [[mediaTable]]/[[pngTable]]/
-    * [[mixedTable]]): snapshot key = `documents.parquet` size+mtime —
-    * a regenerated fixture at the same path can never meet a stale
-    * staged copy — and the writer lands in a pid-suffixed temp dir
-    * promoted with ATOMIC_MOVE, so a concurrent run either wins the
-    * move or discards its (identical) copy. */
+  /** A derived fixture table staged once per fixture generation
+    * ([[graft.core.T.staged]], shared by [[mediaTable]]/[[pngTable]]/
+    * [[mixedTable]]). */
   private def stagedTable(s: SparkSession, dir: String, prefix: String)
-      (write: java.nio.file.Path => Unit): DataFrame = {
-    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-    val src = Paths.get(dir, "documents.parquet")
-    val stamp = Files.size(src) + "_" + Files.getLastModifiedTime(src).toMillis
-    val base = Paths.get(s"/tmp/graft/${prefix}_$stamp")
-    if (!Files.exists(base)) {
-      val stage = base.resolveSibling(
-        base.getFileName.toString + ".stage_" + ProcessHandle.current().pid())
-      write(stage)
-      def rmTree(p: Path): Unit = {
-        import scala.jdk.CollectionConverters._
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.delete)
-      }
-      try Files.move(stage, base, StandardCopyOption.ATOMIC_MOVE)
-      catch { // a concurrent run staged `base` first: its copy is identical
-        case _: java.nio.file.FileAlreadyExistsException => rmTree(stage)
-        case _: java.nio.file.DirectoryNotEmptyException => rmTree(stage)
-      }
-    }
-    s.read.parquet(base.toString)
-  }
+      (write: java.nio.file.Path => Unit): DataFrame =
+    s.read.parquet(T.staged(dir, prefix)(write).toString)
 
   /** doc_id seed for the staged-table writers, widened to the session
     * shuffle width (round 21, guide §6 "fix layout at the source"):

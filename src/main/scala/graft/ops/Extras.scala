@@ -465,20 +465,12 @@ object Extras {
         |       CASE WHEN doc_id < 250 THEN source END AS source,
         |       CASE WHEN doc_id >= 250 THEN upper(lang) END AS lang2
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      import java.nio.file.{Files, Path, Paths, StandardCopyOption}
       // Staging hygiene (ADVICE r7): the snapshot key derives from the
-      // SOURCE file's size+mtime — a regenerated fixture at the same
-      // path gets fresh snapshots, and distinct fixture dirs cannot
-      // collide the way String.hashCode could. Snapshots land via
-      // write-to-temp + atomic rename: an interrupted first run leaves
+      // SOURCE file's size+mtime and snapshots land via write-to-temp +
+      // atomic rename ([[T.staged]]): an interrupted first run leaves
       // only an orphaned .stage dir, never a half-staged `base` that a
-      // later run's bare Files.exists check would silently read.
-      val src = Paths.get(dir, "documents.parquet")
-      val stamp = Files.size(src) + "_" + Files.getLastModifiedTime(src).toMillis
-      val base = Paths.get(s"/tmp/graft/schema_evo_$stamp")
-      if (!Files.exists(base)) {
-        val stage = base.resolveSibling(
-          base.getFileName.toString + ".stage_" + ProcessHandle.current().pid())
+      // later run would silently read.
+      val base = T.staged(dir, "schema_evo") { stage =>
         val d = T.df(s, dir, "documents")
         d.filter(col("doc_id") < 250)
           .select(col("doc_id"), col("lang"), col("source"))
@@ -486,16 +478,6 @@ object Extras {
         d.filter(col("doc_id") >= 250)
           .select(col("doc_id"), col("lang"), upper(col("lang")).as("lang2"))
           .write.mode("overwrite").parquet(stage.resolve("v2").toString)
-        def rmTree(p: Path): Unit = {
-          import scala.jdk.CollectionConverters._
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(Files.delete)
-        }
-        try Files.move(stage, base, StandardCopyOption.ATOMIC_MOVE)
-        catch { // a concurrent run staged `base` first: its copy is identical
-          case _: java.nio.file.FileAlreadyExistsException => rmTree(stage)
-          case _: java.nio.file.DirectoryNotEmptyException => rmTree(stage)
-        }
       }
       s.read.option("mergeSchema", "true")
         .parquet(base.resolve("v1").toString, base.resolve("v2").toString)

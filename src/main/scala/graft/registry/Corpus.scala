@@ -62,35 +62,30 @@ object Corpus {
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     conf.set("textinputformat.record.delimiter", Delimiter)
     val sc = spark.sparkContext
-    // A single big dump file would otherwise yield one split per local
-    // block (a handful of tasks on a 32-core box): cap the split size so
-    // the parse saturates the configured parallelism. TextInputFormat
-    // reads past a split boundary to the next delimiter, so records stay
-    // whole. On a real cluster HDFS block counts make this a no-op.
-    val totalBytes = {
+    // the corpus files, listed once (driver-side metadata op)
+    val files = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(sc.hadoopConfiguration)
       Option(fs.globStatus(p)).getOrElse(Array.empty).flatMap { st =>
         if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
         else Array(st)
-      }.map(_.getLen).sum
+      }
     }
+    // A single big dump file would otherwise yield one split per local
+    // block (a handful of tasks on a 32-core box): cap the split size so
+    // the parse saturates the configured parallelism. TextInputFormat
+    // reads past a split boundary to the next delimiter, so records stay
+    // whole. On a real cluster HDFS block counts make this a no-op.
+    val totalBytes = files.map(_.getLen).sum
     val targetSplits = math.max(sc.defaultParallelism * 2, 1)
     val splitSize = math.max(totalBytes / targetSplits, 1L << 20)
     conf.set("mapreduce.input.fileinputformat.split.maxsize", splitSize.toString)
     val rdd = sc.newAPIHadoopFile(path, classOf[TextInputFormat],
       classOf[LongWritable], classOf[Text], conf)
-    // file → lexical rank (driver-side listing; cheap metadata op)
-    val fileRank: Map[String, Long] = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(sc.hadoopConfiguration)
-      val status = Option(fs.globStatus(p)).getOrElse(Array.empty)
-      val files = status.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
-        else Array(st)
-      }.map(_.getPath.toString).sorted
-      files.zipWithIndex.map { case (f, i) => f -> i.toLong }.toMap
-    }
+    // file → lexical rank
+    val fileRank: Map[String, Long] =
+      files.map(_.getPath.toString).sorted.zipWithIndex
+        .map { case (f, i) => f -> i.toLong }.toMap
     val rankB = sc.broadcast(fileRank)
     val withFile = rdd.asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[LongWritable, Text]]
       .mapPartitionsWithInputSplit { (split, it) =>

@@ -189,6 +189,10 @@ final class RegistryTables private[registry] (root: DataFrame) {
   def sponsor: DataFrame = live(sponsorView)
   def location: DataFrame = live(locationView)
 
+  /** The four tables under the reference's table names, in its order. */
+  def tables: Seq[(String, DataFrame)] =
+    Seq("trial" -> trials, "imp" -> imp, "sponsor" -> sponsor, "location" -> location)
+
   private[registry] def release(): Unit = {
     released = true
     root.unpersist()
@@ -199,10 +203,13 @@ object Registry {
   /** Parse+merge runs once per (session, corpus); the merged frame is
     * persisted and all views derive from it. Re-parsing per query was
     * pure waste — a production deployment materializes the merged
-    * table once per corpus snapshot. */
-  def load(spark: SparkSession, corpusPath: String): RegistryTables =
-    Caches.memo(Family.Registry, spark, corpusPath)(
-      new RegistryTables(TrialMerge.merge(spark, corpusPath).persist()))(_.release())
+    * table once per corpus snapshot. `strictParity` selects
+    * [[TrialMerge.merge]]'s reference-bug-compatible parse. */
+  def load(spark: SparkSession, corpusPath: String,
+      strictParity: Boolean = false): RegistryTables =
+    Caches.memo(Family.Registry, spark, (if (strictParity) "strict|" else "") + corpusPath)(
+      new RegistryTables(TrialMerge.merge(spark, corpusPath, strictParity).persist()))(
+      _.release())
 
   /** Drop every parsed corpus owned by `spark` (see [[graft.Caches]]):
     * unpersists each merged root, after which no persisted RDD of the

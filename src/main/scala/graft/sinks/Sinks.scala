@@ -123,8 +123,7 @@ object Sinks {
       dir.getFileName.toString + ".old_" + ProcessHandle.current().pid())
     Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(stage, dir, StandardCopyOption.ATOMIC_MOVE)
-    Files.walk(old).sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.delete)
+    org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
     nFiles
   }
 

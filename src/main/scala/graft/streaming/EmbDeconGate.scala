@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming EMBEDDING-space decontamination gate (VERDICT r16 item 6
@@ -151,30 +151,12 @@ object EmbDeconGate {
     * the per-label census, delete the scratch store (the q204/ADVICE
     * r16 cleanup discipline — a deployment keeps its decision store;
     * this harness entry returns the census, so the store is scratch). */
-  def run(s: SparkSession, dir: String): DataFrame = {
-    val dim = graft.llm.LlmVector.embDim(graft.core.T.df(s, dir, "embeddings"))
-    val bn = bench(s, dir, dim).transform(graft.Caches.persistForQuery)
-    bn.count()
-    val store = "/tmp/graft/embdecon_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = Streams.embStream(s, dir)
-      .filter(col("vec_id") % 20 =!= 0)
-      .writeStream
-      .option("checkpointLocation", store + ".ckpt")
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        decide(b.toDF(), bn, dim)
-          .write.mode("overwrite").parquet(s"$store/batch=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val dec =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(store)))
-        s.read.parquet(store).drop("batch")
-      else s.createDataFrame(s.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "vec_id BIGINT, label INT, cand BIGINT, flagged BIGINT, hit_true BIGINT"))
-    Streams.materializeScratch(s, store, census(dec))
-  }
+  def run(s: SparkSession, dir: String): DataFrame =
+    Streams.gate(s, dir, "embeddings", "vec_id",
+        "vec_id BIGINT, label INT, cand BIGINT, flagged BIGINT, hit_true BIGINT") {
+      val dim = graft.llm.LlmVector.embDim(graft.core.T.df(s, dir, "embeddings"))
+      val bn = bench(s, dir, dim).transform(graft.Caches.persistForQuery)
+      bn.count()
+      decide(_, bn, dim)
+    }(census)
 }

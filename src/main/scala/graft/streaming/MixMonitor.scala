@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -89,8 +90,8 @@ object MixMonitor {
       weights.write.mode("overwrite").parquet(stage.toString)
       try Files.move(stage, snap, StandardCopyOption.ATOMIC_MOVE)
       catch { // a replayed batch already promoted identical content
-        case _: java.nio.file.FileAlreadyExistsException => deleteTree(stage)
-        case _: java.nio.file.DirectoryNotEmptyException => deleteTree(stage)
+        case _: java.nio.file.FileAlreadyExistsException |
+             _: java.nio.file.DirectoryNotEmptyException => FileUtils.deleteDirectory(stage.toFile)
       }
     }
     // manifest swap: readers resolve CURRENT -> snapshot dir name; the
@@ -110,16 +111,17 @@ object MixMonitor {
         .filter(p => p.getFileName.toString.matches("snap_\\d+"))
         .sortBy(_.getFileName.toString)
         .dropRight(2)
-        .foreach(deleteTree)
+        .foreach(p => FileUtils.deleteDirectory(p.toFile))
     } finally listing.close()
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-  }
+  /** q163's per-(day window, event_type) mass state over an events
+    * frame: (window, event_type, n, mass_dec) — |windows|·|types| rows,
+    * never stream volume. Shared by q163, [[eventsSink]] and the
+    * StateSweep measurement. */
+  private[graft] def dailyMass(events: DataFrame): DataFrame =
+    events.groupBy(window(col("ts"), "1 day"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(graft.core.T.dec(col("value"))).as("mass_dec"))
 
   /** The fenced sink over a pre-aggregated (window, event_type, n,
     * mass_dec) streaming state frame. Caller picks the trigger and
@@ -139,11 +141,7 @@ object MixMonitor {
   def eventsSink(s: SparkSession, dir: String, outDir: String,
                  checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    sink(Streams.eventStream(s, dir)
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(graft.core.T.dec(col("value"))).as("mass_dec")),
-      outDir, checkpoint)
+    sink(dailyMass(Streams.stagedStream(s, dir, "events")), outDir, checkpoint)
 
   /** Resolve the manifest and read the current complete snapshot —
     * the ONLY read path; there is no per-row upsert to tear. None

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming benchmark-DECONTAMINATION gate (SURVEY §2.9 composed with
@@ -82,31 +82,11 @@ object StreamDeconGate {
     * excluded — they are the contamination SOURCE, not gated traffic),
     * decide each batch exactly, store decisions exactly-once, report
     * the per-source census. */
-  def run(s: SparkSession, dir: String): DataFrame = {
-    val bn = bench(s, dir).transform(graft.Caches.persistForQuery)
-    val bloom = graft.plans.BloomKernels.buildBroadcast(s, bn, "sh", bn.count(), 0.01)
-    val store = "/tmp/graft/decon_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = Streams.docStream(s, dir)
-      .filter(col("doc_id") % 20 =!= 0)
-      .writeStream
-      .option("checkpointLocation", store + ".ckpt")
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        decide(b.toDF(), bn, bloom)
-          .write.mode("overwrite").parquet(s"$store/batch=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // an empty stream (every doc a benchmark doc) produces no batches
-    // and therefore no store — census over an empty decision frame
-    val dec =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(store)))
-        s.read.parquet(store).drop("batch")
-      else s.createDataFrame(s.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, source STRING, n_sh BIGINT, flagged BOOLEAN"))
-    Streams.materializeScratch(s, store, census(dec))
-  }
+  def run(s: SparkSession, dir: String): DataFrame =
+    Streams.gate(s, dir, "documents", "doc_id",
+        "doc_id BIGINT, source STRING, n_sh BIGINT, flagged BOOLEAN") {
+      val bn = bench(s, dir).transform(graft.Caches.persistForQuery)
+      val bloom = graft.plans.BloomKernels.buildBroadcast(s, bn, "sh", bn.count(), 0.01)
+      decide(_, bn, bloom)
+    }(census)
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.registry.{FieldKind, FieldSpec}
@@ -199,8 +200,8 @@ object StreamMerge {
         Files.move(staged, live, StandardCopyOption.ATOMIC_MOVE)
       }
     }
-    deleteTree(old)
-    deleteTree(stage)
+    FileUtils.deleteDirectory(old.toFile)
+    FileUtils.deleteDirectory(stage.toFile)
   }
 
   /** Crash-recovery pre-pass for [[upsertBatch]]'s staged swap: any
@@ -240,8 +241,9 @@ object StreamMerge {
             if (!Files.exists(live))
               Files.move(bdir, live, StandardCopyOption.ATOMIC_MOVE)
           }
-        deleteTree(sib)
-      } else if (sn.startsWith(name + ".stage_") && !foreignLive(sn)) deleteTree(sib)
+        FileUtils.deleteDirectory(sib.toFile)
+      } else if (sn.startsWith(name + ".stage_") && !foreignLive(sn))
+        FileUtils.deleteDirectory(sib.toFile)
     }
   }
 
@@ -364,13 +366,6 @@ object StreamMerge {
       if (Files.readString(lock).trim.toLong == ProcessHandle.current().pid())
         Files.deleteIfExists(lock)
     } catch { case _: Throwable => () }
-  }
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
   }
 
   /** The SURVEY §2.9 sink half: merged updates land in the bucketed

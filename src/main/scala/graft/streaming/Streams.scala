@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.Family
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.core.{Q, T}
 
 /** Structured Streaming surface (SURVEY §2.9).
@@ -18,100 +19,111 @@ import graft.core.{Q, T}
   */
 object Streams {
 
-  /** Micro-batch shuffle/state width for the streaming queries.
+  /** Micro-batch shuffle/state width of every streaming query here.
     *
     * MEASURED (round 17): the per-query streaming floor was dominated
     * not by data but by 32-way task + state-store overhead per
     * micro-batch — every stateful operator instantiates, loads, and
     * commits one state-store instance PER STATE PARTITION per batch,
-    * and a fixture micro-batch is MB-scale. Width 8 re-anchored q55
-    * 2.83 → 1.03 s with identical results. The mechanism is the
+    * and a fixture micro-batch is MB-scale. The mechanism is the
     * per-partition TASK + store lifecycle, NOT checkpoint disk
     * flushes: an A/B moving the scratch checkpoints to tmpfs moved
-    * nothing (q55 1.03 → 1.03, q86/q149 within noise), so the
-    * durable-checkpoint shape is kept as-is. State width is a
-    * CAPACITY dial, not semantics: a deployment sizes it to its
-    * batch volume exactly as this harness sizes
-    * `spark.sql.shuffle.partitions` 32 (not 200) to the fixture — at
-    * 100 TB/day you raise it (state partition count is fixed per
-    * checkpoint lineage; these harness entries start fresh
-    * checkpoints per run, so the width is free to choose here and
-    * pinned-for-life in a real deployment).
-    *
-    * StreamExecution CLONES the session at `start()`, so the width
-    * set here binds every micro-batch of queries started inside
-    * `f`, while the conf restore keeps batch post-processing (and
-    * every non-streaming query) on the session default. */
-  /** THE one config point for streaming state width (round 21, VERDICT
-    * r20 item 4 — this dial previously lived inline in q86/q149's
-    * bodies as a literal "8"): `SPARK_GRAFT_STREAM_PARTS`, default 8,
-    * the A/B knob and the deployment's capacity dial. State-store
-    * partition count is fixed per checkpoint lineage in a real
-    * deployment (set once per stream job); these harness entries start
-    * fresh checkpoints per run, so the width is free to choose here.
-    * At real state volume the knob is per-checkpoint and the
-    * HDFS-backed store gives way to RocksDB
-    * (spark.sql.streaming.stateStore.providerClass =
-    * ...RocksDBStateStoreProvider) — the width stays the same dial.
-    * Width A/B at sf0.1 (round 21, isolated QueryProbe cold medians,
-    * one flat-calib session per arm): 8 → 4 → 2 parts read
-    * q86 3.10/2.24/2.58, q149 2.83/2.61/2.79, q72 1.53/1.50/1.88,
-    * q55 1.37/1.35/1.34 — 4 is the knee (fewer per-batch store
-    * lifecycles than 8, still enough task parallelism that 2 loses
-    * it back), so the fixture default moves 8 → 4; results identical
-    * (width is partitioning, not semantics — StreamingSpec pins
-    * result equality across widths). */
-  private[graft] def streamParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")
+    * nothing, so the durable-checkpoint shape is kept as-is. Width A/B
+    * at sf0.1 (round 21, isolated QueryProbe cold medians, one
+    * flat-calib session per arm): 8 → 4 → 2 parts read q86
+    * 3.10/2.24/2.58, q149 2.83/2.61/2.79, q72 1.53/1.50/1.88, q55
+    * 1.37/1.35/1.34 — 4 is the knee (fewer per-batch store lifecycles
+    * than 8, still enough task parallelism that 2 loses it back).
+    * Results are identical at any width (width is partitioning, not
+    * semantics — StreamingSpec pins it). State width is a CAPACITY
+    * choice: state-store partition count is fixed per checkpoint
+    * lineage, so a deployment sets it once per stream job, sized to
+    * its state volume (and moves to the RocksDB store provider at real
+    * state volume); these harness entries start fresh checkpoints per
+    * run, so the width is free to choose here. */
+  val StreamParts = 4
 
-  private[streaming] def withStreamParts[T](s: SparkSession)(f: => T): T = {
+  /** Run `f` with the session's shuffle width at [[StreamParts]],
+    * restoring the session default afterwards. StreamExecution CLONES
+    * the session when a query is constructed (inside `start()`), so a
+    * query started inside `f` runs every micro-batch at the stream
+    * width while the session keeps its own. */
+  private def atStreamWidth[T](s: SparkSession)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = s.conf.get(key)
-    s.conf.set(key, streamParts)
+    s.conf.set(key, StreamParts.toString)
     try f finally s.conf.set(key, old)
   }
 
-  /** A streaming Q: the whole body runs under [[withStreamParts]]. */
-  private def SQ(name: String, oracle: String, reads: Family*)(
-      body: (SparkSession, String) => DataFrame): Q =
-    Q(name, oracle, reads: _*)((s, dir) => withStreamParts(s)(body(s, dir)))
-
-  /** Shared scratch-store epilogue for the gate queries (q204/q215 —
-    * review r17: one materialize-then-delete dance, not one per
-    * gate): collect the BOUNDED census eagerly, delete the UUID-keyed
-    * decision store + checkpoint (each run writes corpus-row-scale
-    * parquet under a fresh UUID — a lazily-returned frame over the
-    * store would force keeping every run's store on disk, the ADVICE
-    * r16 accumulation), and return the census as a local-backed
-    * frame. A real deployment KEEPS its decision store (it IS the
-    * gate's output); these harness entries return the census, so the
-    * store is scratch. */
-  private[streaming] def materializeScratch(s: SparkSession, store: String,
-      out: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val rows = out.collect().toSeq // census rows — bounded by construction
-    def rmTree(root: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(root)) {
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-    rmTree(java.nio.file.Paths.get(store))
-    rmTree(java.nio.file.Paths.get(store + ".ckpt"))
-    s.createDataFrame(rows.asJava, out.schema)
+  /** Run `ds` to completion (`Trigger.AvailableNow`) into a memory sink
+    * and return the sink's table: the envelope of every memory-sink
+    * query here. Only `start()` runs at the stream width; what the
+    * caller derives from the returned table runs at the session's.
+    *
+    * The sink table is a temp view holding the FULL result rows in the
+    * driver for the life of the session (round 18, VERDICT r17 item 6 —
+    * the IN-MEMORY face of the q204 store-leak class), so it gets a
+    * fresh UUID name per run and is dropped by the running query's own
+    * release hook ([[graft.Caches.onRelease]]). */
+  private[streaming] def drain(ds: Dataset[_], outputMode: String): DataFrame = {
+    val s = ds.sparkSession
+    val name = "stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    graft.Caches.onRelease(s)(s.catalog.dropTempView(name))
+    val q = atStreamWidth(s)(ds.writeStream
+      .outputMode(outputMode)
+      .format("memory")
+      .queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start())
+    q.awaitTermination()
+    s.table(name)
   }
 
-  /** A fresh UUID-named memory-sink table for the running query
-    * (round 18, VERDICT r17 item 6 — the IN-MEMORY face of the q204
-    * store-leak class): each run of a memory-sink query registers a
-    * temp view holding its FULL result rows in the driver for the life
-    * of the session, so the view is dropped by the query's own release
-    * hook ([[graft.Caches.onRelease]]); a re-run streams under a fresh
-    * name. */
-  private[streaming] def memTable(s: SparkSession, prefix: String): String = {
-    val name = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.Caches.onRelease(s)(s.catalog.dropTempView(name))
-    name
+  /** The stateless front-door gate envelope (q204/q215): stream
+    * `table`'s arrivals — the benchmark rows (`key % 20 = 0`, the
+    * q62/q81 convention) excluded, they are the contamination SOURCE —
+    * decide each micro-batch with the function `decider` builds, and
+    * land the decisions in a UUID-keyed store, one `batch=N` subdir per
+    * micro-batch: replaying batch N OVERWRITES its own subdir, so
+    * at-least-once foreachBatch delivery yields exactly-once decisions.
+    * An empty stream writes no store; its census runs over an empty
+    * `emptyDdl` frame. Everything — `decider`'s eager benchmark build
+    * included — runs at the stream width.
+    *
+    * The census is collected eagerly (bounded by construction) and the
+    * decision store + checkpoint are deleted (review r17): each run
+    * writes corpus-row-scale parquet under a fresh UUID, and a lazily
+    * returned frame over the store would force keeping every run's
+    * store on disk (the ADVICE r16 accumulation). A real deployment
+    * KEEPS its decision store (it IS the gate's output); these harness
+    * entries return the census, so the store is scratch. */
+  private[streaming] def gate(s: SparkSession, dir: String, table: String, key: String,
+      emptyDdl: String)(decider: => DataFrame => DataFrame)(
+      census: DataFrame => DataFrame): DataFrame = atStreamWidth(s) {
+    val decide = decider
+    val store = s"/tmp/graft/gate_${table}_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    stagedStream(s, dir, table)
+      .filter(col(key) % 20 =!= 0)
+      .writeStream
+      .option("checkpointLocation", store + ".ckpt")
+      .foreachBatch { (b: Dataset[Row], id: Long) =>
+        decide(b.toDF()).write.mode("overwrite").parquet(s"$store/batch=$id")
+        ()
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    val dec =
+      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(store)))
+        s.read.parquet(store).drop("batch")
+      else s.createDataFrame(s.sparkContext.emptyRDD[Row],
+        org.apache.spark.sql.types.StructType.fromDDL(emptyDdl))
+    val out = census(dec)
+    val rows = out.collect()
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store + ".ckpt"))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** Streaming exact-dedup for a document ingest stream: drop every
@@ -129,14 +141,9 @@ object Streams {
     in.withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCol)
 
-  /** Stage `events.parquet` into a per-sf landing DIRECTORY (the file
-    * streaming source consumes a dir, files arriving over time) and
-    * open it as a micro-second-timestamped event stream — the shared
-    * front of every streaming query here. Each call returns a FRESH
-    * readStream (required for stream-stream self-joins: each side
-    * tracks its own offsets). */
   /** Stage `$dir/$table.parquet` into a per-fixture landing DIRECTORY
-    * (shared by [[eventStream]] and [[docStream]]) and return it. */
+    * (the file streaming source consumes a dir, files arriving over
+    * time) and return it. */
   private def stageLanding(dir: String, table: String): java.nio.file.Path = {
     // landing dir is keyed by the SOURCE's size+mtime stamp (ADVICE
     // r11): a regenerated fixture at the same path — possibly with the
@@ -227,58 +234,57 @@ object Streams {
     landing
   }
 
-  private[streaming] def eventStream(s: SparkSession, dir: String): DataFrame = {
-    val landing = stageLanding(dir, "events")
-    // schema from the batch reader; normalize ts to session-zone
-    // TIMESTAMP exactly as T.events does (the testdata has shipped both
-    // TIMESTAMP(NANOS) -> raw long nanos and timestamp[us] -> NTZ, and
-    // watermarks/windows require TimestampType)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val stream = s.readStream.schema(schema).parquet(landing.toString)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        stream.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => stream
-    }
+  /** `$dir/$table.parquet` as a stream over its staged landing dir —
+    * the front of every streaming query here. The schema comes from the
+    * batch reader and `ts`, when the table has one, is normalized as in
+    * [[T.events]] (watermarks and windows require TimestampType). Each
+    * call returns a FRESH readStream: a stream-stream self-join needs
+    * one per side, each tracking its own offsets. */
+  private[streaming] def stagedStream(s: SparkSession, dir: String, table: String): DataFrame = {
+    val landing = stageLanding(dir, table)
+    val schema = s.read.parquet(s"$dir/$table.parquet").schema
+    T.normalizeTs(s.readStream.schema(schema).parquet(landing.toString))
   }
 
-  /** Document ingest stream over the staged fixture — the front of the
-    * q204 decontamination gate (no timestamp normalization: documents
-    * carry no event time; the gate is stateless per row). */
-  private[streaming] def docStream(s: SparkSession, dir: String): DataFrame = {
-    val landing = stageLanding(dir, "documents")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    s.readStream.schema(schema).parquet(landing.toString)
+  /** q86's click→purchase interval join: every (click, purchase by the
+    * same user within 30 min) pair, both sides under a 1 h watermark.
+    * `events` is evaluated once per side (a fresh stream each, see
+    * [[stagedStream]]). Shared by q86 (inner), q149 (left outer) and
+    * the StateSweep state-growth measurement. */
+  private[graft] def clickPurchaseJoin(events: => DataFrame,
+      joinType: String = "inner"): DataFrame = {
+    val clicks = events
+      .filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("c_ts"))
+      .withWatermark("c_ts", "1 hour")
+    val purchases = events
+      .filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+        col("ts").as("p_ts"))
+      .withWatermark("p_ts", "1 hour")
+    clicks.join(purchases,
+      col("user_id") === col("p_user")
+        && col("p_ts") >= col("c_ts")
+        && col("p_ts") <= col("c_ts") + expr("interval 30 minutes"),
+      joinType)
   }
 
-  /** Embedding ingest stream over the staged fixture — the front of
-    * the q215 embedding-space decontamination gate (stateless per row,
-    * like [[docStream]]: vectors carry no event time). */
-  private[streaming] def embStream(s: SparkSession, dir: String): DataFrame = {
-    val landing = stageLanding(dir, "embeddings")
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    s.readStream.schema(schema).parquet(landing.toString)
-  }
+  /** The q86/q149 presentation of drained [[clickPurchaseJoin]] pairs:
+    * timestamps export in micros, where the two engines' ns→µs
+    * truncation agrees exactly. */
+  private def pairRows(pairs: DataFrame): DataFrame =
+    pairs.select(col("click_id"), col("purchase_id"), col("user_id"),
+        unix_micros(col("c_ts")).as("click_ts_us"),
+        unix_micros(col("p_ts")).as("purchase_ts_us"))
+      .orderBy("click_id", "purchase_id")
 
   val qs: Seq[Q] = Seq(
-    SQ("q55_stream_window",
+    Q("q55_stream_window",
       """SELECT cast(date_trunc('day', ts) as date)::VARCHAR AS day, event_type, count(*) AS n
         |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin) { (s, dir) =>
-      val name = memTable(s, "stream_window_")
-      val q = eventStream(s, dir)
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .count()
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drain(stagedStream(s, dir, "events")
+          .groupBy(window(col("ts"), "1 day"), col("event_type"))
+          .count(), "complete")
         .select(col("window.start").cast("date").cast("string").as("day"),
           col("event_type"), col("count").as("n"))
         .orderBy("day", "event_type")
@@ -291,32 +297,22 @@ object Streams {
     // windowed aggregation. At 100 TB/day this is the standard
     // "enrich-then-aggregate" topology: dims broadcast, state is one
     // row per (window, nation).
-    SQ("q72_stream_static_join",
+    Q("q72_stream_static_join",
       """SELECT cast(date_trunc('day', ts) as date)::VARCHAR AS day, n_name AS nation,
         |       count(*) AS n,
         |       cast(sum(cast(value as decimal(12,2))) as double) AS sum_value
         |FROM events JOIN customer ON user_id = c_custkey
         |            JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY 1, 2 ORDER BY day, nation""".stripMargin) { (s, dir) =>
-      val name = memTable(s, "stream_enrich_")
-      val withTs = eventStream(s, dir)
       val dim = broadcast(T.df(s, dir, "customer")
         .join(broadcast(T.df(s, dir, "nation")),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name")))
-      val q = withTs
-        .join(dim, col("user_id") === col("c_custkey"))
-        .groupBy(window(col("ts"), "1 day"), col("n_name"))
-        .agg(count(lit(1)).as("n"),
-          sum(T.dec(col("value"))).as("sum_value_dec"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drain(stagedStream(s, dir, "events")
+          .join(dim, col("user_id") === col("c_custkey"))
+          .groupBy(window(col("ts"), "1 day"), col("n_name"))
+          .agg(count(lit(1)).as("n"),
+            sum(T.dec(col("value"))).as("sum_value_dec")), "complete")
         .select(col("window.start").cast("date").cast("string").as("day"),
           col("n_name").as("nation"), col("n"),
           T.dbl(col("sum_value_dec")).as("sum_value"))
@@ -340,7 +336,7 @@ object Streams {
     // checkpointing). The oracle is the equivalent batch interval
     // join; timestamps compare and export in micros, where the two
     // engines' ns→µs truncation agrees exactly.
-    SQ("q86_stream_stream_join",
+    Q("q86_stream_stream_join",
       """SELECT a.event_id AS click_id, b.event_id AS purchase_id, a.user_id,
         |       epoch_us(a.ts) AS click_ts_us, epoch_us(b.ts) AS purchase_ts_us
         |FROM events a JOIN events b
@@ -349,40 +345,10 @@ object Streams {
         | AND epoch_us(b.ts) >= epoch_us(a.ts)
         | AND epoch_us(b.ts) <= epoch_us(a.ts) + 1800000000
         |ORDER BY click_id, purchase_id""".stripMargin) { (s, dir) =>
-      val name = memTable(s, "stream_join_")
       // stream-stream joins keep FOUR state stores per shuffle
-      // partition (left/right × rows/keyToNumValues); state-store
-      // partitioning is a per-checkpoint choice, sized to state
-      // volume, not to the batch compute parallelism. The width is set
-      // ONCE by the SQ wrapper's withStreamParts ([[streamParts]], the
-      // family config point) — the inline save/set this body carried
-      // was redundant with it (round 21, VERDICT r20 item 4).
-      val clicks = eventStream(s, dir)
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = eventStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val q = clicks
-        .join(purchases,
-          col("user_id") === col("p_user")
-            && col("p_ts") >= col("c_ts")
-            && col("p_ts") <= col("c_ts") + expr("interval 30 minutes"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
-        .select(col("click_id"), col("purchase_id"), col("user_id"),
-          unix_micros(col("c_ts")).as("click_ts_us"),
-          unix_micros(col("p_ts")).as("purchase_ts_us"))
-        .orderBy("click_id", "purchase_id")
+      // partition (left/right × rows/keyToNumValues) — the micro-batch
+      // width is [[StreamParts]], set by [[drain]]
+      pairRows(drain(clickPurchaseJoin(stagedStream(s, dir, "events")), "append"))
     },
 
     // ---- stream-stream LEFT OUTER interval join (round 14 — q86's
@@ -408,7 +374,7 @@ object Streams {
     // one click_id the output is either all-matched rows or ONE null
     // row, never mixed, so cross-engine NULL-ordering cannot reorder
     // the sorted compare.
-    SQ("q149_stream_interval_outer",
+    Q("q149_stream_interval_outer",
       """WITH c AS (SELECT event_id AS click_id, user_id, epoch_us(ts) AS cts
         |           FROM events
         |           WHERE event_type = 'click' AND ts < TIMESTAMP '2024-01-29 00:00:00'),
@@ -419,36 +385,10 @@ object Streams {
         |FROM c LEFT JOIN p ON c.user_id = p.p_user
         |  AND p.pts >= c.cts AND p.pts <= c.cts + 1800000000
         |ORDER BY click_id, purchase_id""".stripMargin) { (s, dir) =>
-      val name = memTable(s, "stream_outer_")
-      // width set once by SQ's withStreamParts (q86's rationale)
-      val clicks = eventStream(s, dir)
-          .filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("c_ts"))
-          .withWatermark("c_ts", "1 hour")
-        val purchases = eventStream(s, dir)
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-            col("ts").as("p_ts"))
-          .withWatermark("p_ts", "1 hour")
-        val q = clicks
-          .join(purchases,
-            col("user_id") === col("p_user")
-              && col("p_ts") >= col("c_ts")
-              && col("p_ts") <= col("c_ts") + expr("interval 30 minutes"),
-            "left_outer")
-          .filter(col("c_ts") < lit("2024-01-29 00:00:00").cast("timestamp"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(name)
-          .select(col("click_id"), col("purchase_id"), col("user_id"),
-            unix_micros(col("c_ts")).as("click_ts_us"),
-            unix_micros(col("p_ts")).as("purchase_ts_us"))
-          .orderBy("click_id", "purchase_id")
+      pairRows(drain(
+        clickPurchaseJoin(stagedStream(s, dir, "events"), "left_outer")
+          .filter(col("c_ts") < lit("2024-01-29 00:00:00").cast("timestamp")),
+        "append"))
     },
 
     // ---- streaming heavy hitters (hot-key detection): the event
@@ -463,26 +403,18 @@ object Streams {
     // final set is each bucket's LAST emission (max update-seq).
     // Oracle = plain exact top-20 — any sketch-completeness regression
     // flips the hash compare.
-    SQ("q106_stream_topk",
+    Q("q106_stream_topk",
       """WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
         |r AS (SELECT user_id, n, row_number() OVER (ORDER BY n DESC, user_id) AS rk FROM c)
         |SELECT rk, user_id, n FROM r WHERE rk <= 20 ORDER BY rk""".stripMargin) { (s, dir) =>
       import s.implicits._
       import org.apache.spark.sql.streaming.GroupStateTimeout
       import org.apache.spark.sql.expressions.Window
-      val name = memTable(s, "stream_topk_")
-      val q = eventStream(s, dir)
-        .select(col("user_id")).as[Long]
-        .groupByKey(_ % StreamTopK.NBuckets)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout())(StreamTopK.update)
-        .writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val cands = s.table(name)
+      val cands = drain(stagedStream(s, dir, "events")
+          .select(col("user_id")).as[Long]
+          .groupByKey(_ % StreamTopK.NBuckets)
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout())(StreamTopK.update),
+          "update")
         .withColumn("r", row_number().over(
           Window.partitionBy("bucket").orderBy(col("seq").desc)))
         .filter(col("r") === 1)
@@ -507,7 +439,7 @@ object Streams {
     // hash-comparable — no rand() anywhere. The final set is each
     // bucket's LAST emission (q106's update-seq pattern) merged and
     // re-ranked: a ≤ buckets·k presentation step.
-    SQ("q131_stream_sample",
+    Q("q131_stream_sample",
       """WITH h AS (SELECT DISTINCT event_id,
         |             ((event_id % 1000000007) * 2654435761) % 1000000007 AS hv
         |           FROM events)
@@ -515,19 +447,11 @@ object Streams {
       import s.implicits._
       import org.apache.spark.sql.streaming.GroupStateTimeout
       import org.apache.spark.sql.expressions.Window
-      val name = memTable(s, "stream_sample_")
-      val q = eventStream(s, dir)
-        .select(col("event_id")).as[Long]
-        .groupByKey(_ % StreamSample.NBuckets)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout())(StreamSample.update)
-        .writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drain(stagedStream(s, dir, "events")
+          .select(col("event_id")).as[Long]
+          .groupByKey(_ % StreamSample.NBuckets)
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout())(StreamSample.update),
+          "update")
         .withColumn("r", row_number().over(
           Window.partitionBy("bucket").orderBy(col("seq").desc)))
         .filter(col("r") === 1)
@@ -559,7 +483,7 @@ object Streams {
     // cross-row arithmetic, totals in decimal(38,0)/HUGEINT. The
     // per-day totals window runs over the aggregate-bounded state
     // frame, never the stream.
-    SQ("q163_stream_mix_monitor",
+    Q("q163_stream_mix_monitor",
       """WITH t AS (SELECT cast(date_trunc('day', ts) as date)::VARCHAR AS day, event_type,
         |                  count(*)::BIGINT AS n,
         |                  sum(cast(value as decimal(12,2))) AS mass_dec
@@ -579,21 +503,12 @@ object Streams {
         |       END AS boost_milli
         |FROM w JOIN s ON s.day = w.day
         |ORDER BY w.day, event_type""".stripMargin) { (s, dir) =>
-      val name = memTable(s, "stream_mix_")
-      val q = eventStream(s, dir)
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(T.dec(col("value"))).as("mass_dec"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
       // the weight arithmetic (incl. the ADVICE-r15 NULLIF zero-mass
       // guard) lives in MixMonitor.weightFrame, shared with the fenced
       // snapshot sink so both paths compute identical numbers
-      MixMonitor.weightFrame(s.table(name)).orderBy("day", "event_type")
+      MixMonitor.weightFrame(
+        drain(MixMonitor.dailyMass(stagedStream(s, dir, "events")), "complete"))
+        .orderBy("day", "event_type")
     },
 
     // ---- Streaming decontamination gate (round 16 — the q62/q81
@@ -608,7 +523,7 @@ object Streams {
     // store (see [[StreamDeconGate]] for the full scale argument).
     // Census: per source, gated docs / flagged docs / trivially-passed
     // short docs / flagged share in milli (NULLIF on both engines).
-    SQ("q204_stream_decon_gate",
+    Q("q204_stream_decon_gate",
       graft.llm.LlmText.sqlPrelude + """,
         |bench AS (SELECT DISTINCT sh FROM dsh WHERE doc_id % 20 = 0),
         |hits AS (SELECT d.doc_id, count(*) AS n_sh, count(b.sh) AS n_hit
@@ -638,7 +553,7 @@ object Streams {
     // Stateless per row → batching-invariant (EmbDeconGateSpec);
     // exactly-once via the batch=N overwrite store. Oracle: the q180
     // md5-parity/quantized-integer devices, end to end in SQL.
-    SQ("q215_emb_decon_gate",
+    Q("q215_emb_decon_gate",
       """WITH e AS (SELECT vec_id, unnest(embedding) AS v, generate_subscripts(embedding, 1) AS i
         |           FROM embeddings),
         |q AS (SELECT vec_id, i - 1 AS j, CAST(round(v::DOUBLE * 1000) AS BIGINT) AS qv FROM e),

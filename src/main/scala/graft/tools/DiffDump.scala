@@ -11,22 +11,11 @@ object DiffDump {
     val cpus = args.lift(2).fold(graft.core.Session.cpus())(_.toInt)
     val spark = graft.core.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-    val merged = graft.registry.TrialMerge
-      .merge(spark, path, strictParity = true).persist()
-    merged.drop("imps", "sponsors", "locations")
-      .write.mode("overwrite").parquet(s"$outDir/trial")
-    merged.select(col("eudract_id"), posexplode(col("imps")).as(Seq("seq", "i")))
-      .select(col("eudract_id"), (col("seq") + 1).as("imp_seq"),
-        col("i.trade"), col("i.product"), col("i.code"))
-      .write.mode("overwrite").parquet(s"$outDir/imp")
-    merged.select(col("eudract_id"), posexplode(col("sponsors")).as(Seq("seq", "s")))
-      .select(col("eudract_id"), (col("seq") + 1).as("sponsor_seq"),
-        col("s.name"), col("s.org"), col("s.contact"), col("s.email"))
-      .write.mode("overwrite").parquet(s"$outDir/sponsor")
-    merged.select(col("eudract_id"), explode(col("locations")).as("location"))
-      .write.mode("overwrite").parquet(s"$outDir/location")
-    println(s"""{"metric":"diff_dump","out":"$outDir","trials":${merged.count()}}""")
+    val t = graft.registry.Registry.load(spark, path, strictParity = true)
+    t.tables.foreach { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$outDir/$name")
+    }
+    println(s"""{"metric":"diff_dump","out":"$outDir","trials":${t.trials.count()}}""")
     spark.stop()
   }
 }

@@ -8,12 +8,16 @@ import org.apache.spark.sql.execution.ExplainMode
   * session from [[graft.core.Session]], so its numbers and plans come
   * from the board's own engine configuration and width.
   *
-  * Timing protocol: page-cache warmup of every table, then per run
-  * `Caches.releaseAll` (the bench's between-sweep state) before a COLD
-  * timing and a HOT timing in the same session. The isolated cold
-  * median is directly comparable to the sweep's per-query median; a
-  * cold median at the previous round's level names the regression
-  * "sweep context load", a raised one names the query itself.
+  * Timing protocol ([[coldHot]]): page-cache warmup of every table,
+  * then per run `Caches.releaseAll` (the bench's between-sweep state)
+  * before a COLD timing, and `Caches.releaseScope` of the query's own
+  * frames before a HOT timing in the same session. The hot run keeps
+  * the query's cache families but rebuilds what the cold run persisted
+  * for the query itself, as every query does in a sweep, so the hot
+  * median is a sweep's steady state. The isolated cold median is
+  * directly comparable to the sweep's per-query median; a cold median
+  * at the previous round's level names the regression "sweep context
+  * load", a raised one names the query itself.
   *
   * Usage (query prefixes or full names; sfDir defaults to sf0.1):
   *   `runMain graft.tools.QueryProbe q107,q109 [sfDir] [runs]`
@@ -127,9 +131,9 @@ object QueryProbe {
       val cold = Vector.newBuilder[Double]
       val hot = Vector.newBuilder[Double]
       for (_ <- 1 to runs) {
-        graft.Caches.releaseAll(spark) // the bench's between-sweep state
-        cold += timed(q)
-        hot += timed(q)
+        val (c, h) = coldHot(spark, q)(timed(q))
+        cold += c
+        hot += h
       }
       val (c, h) = (cold.result(), hot.result())
       def med(xs: Vector[Double]) = graft.Bench.median(xs)
@@ -159,6 +163,18 @@ object QueryProbe {
         try w.println("{\n" + patch + "\n}") finally w.close()
       }
     }
+  }
+
+  /** One cold and one hot run of `q`, each done by `run`: the cold run
+    * after `Caches.releaseAll` (the bench's between-sweep state), the
+    * hot run after releasing only the frames `q` persisted for itself —
+    * its families stay resident, as in a sweep's steady state. */
+  private[graft] def coldHot(spark: SparkSession, q: graft.core.Q)(
+      run: => Double): (Double, Double) = {
+    graft.Caches.releaseAll(spark)
+    val cold = run
+    graft.Caches.releaseScope(spark, q.name)
+    (cold, run)
   }
 
   /** Page-cache warmup of every table (Bench does the same before

@@ -111,26 +111,16 @@ object StateSweep {
     dir
   }
 
-  /** q86's exact topology (Streams.scala) over the staged chunk files,
-    * one file per micro-batch; prints per-batch state metrics. */
+  /** The staged chunk files as a stream, one file per micro-batch. */
+  private def chunkStream(spark: SparkSession, landing: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(landing).schema)
+      .option("maxFilesPerTrigger", "1").parquet(landing)
+
+  /** q86's exact topology ([[graft.streaming.Streams.clickPurchaseJoin]])
+    * over the staged chunk files; prints per-batch state metrics. */
   private def runJoin(spark: SparkSession, landing: String,
       joinType: String = "inner"): Unit = {
-    val schema = spark.read.parquet(landing).schema
-    def stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(landing)
-    val clicks = stream.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = stream.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val q = clicks
-      .join(purchases,
-        col("user_id") === col("p_user")
-          && col("p_ts") >= col("c_ts")
-          && col("p_ts") <= col("c_ts") + expr("interval 30 minutes"),
-        joinType)
+    val q = graft.streaming.Streams.clickPurchaseJoin(chunkStream(spark, landing), joinType)
       .writeStream
       .outputMode("append")
       .format("noop")
@@ -147,17 +137,12 @@ object StateSweep {
     q.stop()
   }
 
-  /** q163's exact aggregation (Streams.scala / MixMonitor) over the
-    * staged chunk files, one file per micro-batch, complete mode —
-    * prints per-batch input vs state so "state = |windows|·|types|,
-    * not volume" is a measurement. */
+  /** q163's exact aggregation ([[graft.streaming.MixMonitor.dailyMass]])
+    * over the staged chunk files, complete mode — prints per-batch
+    * input vs state so "state = |windows|·|types|, not volume" is a
+    * measurement. */
   private def runMix(spark: SparkSession, landing: String): Unit = {
-    val schema = spark.read.parquet(landing).schema
-    val masses = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(landing)
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(12,2)")).as("mass_dec"))
+    val masses = graft.streaming.MixMonitor.dailyMass(chunkStream(spark, landing))
     val t0 = System.nanoTime()
     val q = masses.writeStream
       .outputMode("complete")

@@ -98,6 +98,28 @@ class CacheLifecycleSpec extends SparkSpec {
     assert((persisted & own).isEmpty, "q238's hook left its frames resident")
     Caches.releaseAll(spark)
   }
+
+  test("the probe's hot run starts without the frames its cold run persisted for the query") {
+    val Seq(q238) = SparkEntry.select(Seq("q238"))
+    // q238's two disk artifacts are written on first use; write them
+    // now so the cold run persists only the query's own frames
+    llm.LlmText.gramIndexTable(spark, dir)
+    llm.LlmText.spanIndexTable(spark, dir)
+    val starts = ArrayBuffer[Set[Int]]()
+    val ends = ArrayBuffer[Set[Int]]()
+    tools.QueryProbe.coldHot(spark, q238) {
+      starts += persisted
+      q238.run(spark, dir).write.format("noop").mode("overwrite").save()
+      ends += persisted
+      0.0
+    }
+    val coldOwn = ends(0) -- starts(0)
+    assert(coldOwn.size == 3, s"the cold run persisted ${coldOwn.size} frames, not q238's three")
+    assert((starts(1) & coldOwn).isEmpty,
+      s"the hot run started with the cold run's frames ${starts(1) & coldOwn} resident")
+    assert((ends(1) -- starts(1)).size == 3, "the hot run did not rebuild its frames")
+    Caches.releaseAll(spark)
+  }
 }
 
 object CacheLifecycleSpec {

@@ -38,7 +38,7 @@ class MixWeightsSpec extends SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("mix0ev").toString
     val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-    // eventStream stages $dir/events.parquet as a single FILE (the
+    // stagedStream stages $dir/events.parquet as a single FILE (the
     // fixture layout); df.write.parquet produces a directory, so
     // flatten the one part file to that path
     val stage = java.nio.file.Files.createTempDirectory("mix0ev_stage")

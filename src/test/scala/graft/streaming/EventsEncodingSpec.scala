@@ -10,7 +10,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.{LocalDateTime, ZoneOffset}
 
 /** Pins BOTH halves of the events dual-encoding normalization
-  * (VERDICT r11 missing-item 2): `T.events` and `Streams.eventStream`
+  * (VERDICT r11 missing-item 2): `T.events` and `Streams.stagedStream`
   * must yield the SAME session-zone microseconds whether the fixture
   * ships `ts` as TIMESTAMP(NANOS) — surfaced by the reader as a raw
   * LONG under `nanosAsLong` — or as timestamp[us] without UTC
@@ -83,7 +83,7 @@ class EventsEncodingSpec extends SparkSpec {
   }
 
   private def streamMicros(dir: Path): Map[Long, Long] = {
-    val st = Streams.eventStream(spark, dir.toString)
+    val st = Streams.stagedStream(spark, dir.toString, "events")
     assert(st.schema("ts").dataType == TimestampType,
       s"stream ts must be session-zone TIMESTAMP, got ${st.schema("ts").dataType}")
     val name = "evt_enc_" + java.util.UUID.randomUUID().toString.replace("-", "")

@@ -254,7 +254,7 @@ class StreamingSpec extends SparkSpec {
   // Round 21 (VERDICT r20 item 4): state-store width is a CAPACITY
   // dial, not semantics — the q86-shaped stream-stream interval join
   // must produce identical results at any shuffle-partition count.
-  // Streams.streamParts is the one config point; this pins the
+  // Streams.StreamParts is the one config point; this pins the
   // invariance it relies on, at widths on both sides of the default.
   test("stream-stream interval join: identical results across state-store widths") {
     import spark.implicits._
@@ -292,5 +292,42 @@ class StreamingSpec extends SparkSpec {
     val wide = run("5")
     assert(narrow == Set((1L, 10L), (3L, 12L)))
     assert(narrow == wide)
+  }
+
+  // The width rule: Streams.drain starts its query at the stream width
+  // (StreamExecution clones the session inside start()), so the state
+  // operator runs at StreamParts while the session keeps its own width.
+  test("drain runs state at the stream width and leaves the session width alone") {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    implicit val sc = spark.sqlContext
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o => widths.add(o.numShufflePartitions))
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    spark.streams.addListener(listener)
+    try {
+      val in = MemoryStream[String]
+      in.addData("a", "b", "a")
+      val out = Streams.drain(in.toDF().groupBy("value").count(), "complete")
+      assert(spark.conf.get(key) == "7")
+      assert(out.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+        Map("a" -> 2L, "b" -> 1L))
+      eventually(timeout(30.seconds)) { assert(!widths.isEmpty) }
+      assert(widths.asScala.toSet == Set(4L))
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.conf.set(key, old)
+    }
   }
 }
