@@ -168,12 +168,9 @@ object Bench {
   final case class CalibSample(sweep: Int, pos: Int, hash: Double, spark: Double)
 
   /** Committed flat-calib anchors (round 18, VERDICT r17 item 2):
-    * query short-name → (cold, hot) seconds from ANCHORS.json. The
-    * parser is deliberately line-lenient (one entry per line, regex
-    * field pick) — the file is hand-curated JSON and Bench must not
-    * gain a JSON-library dependency for it; AnchorsSpec pins the
-    * round-trip against the committed file. Missing file → empty map
-    * (anchor emission silently off, never a crash). */
+    * query short-name → (cold, hot) seconds. [[parseAnchors]] reads
+    * the entries of one set; the parser is deliberately lenient (regex
+    * field pick) so Bench gains no JSON-library dependency. */
   private val AnchorRe =
     ("\"(q[0-9]+)\"\\s*:\\s*\\{[^}]*\"cold\"\\s*:\\s*([0-9.]+)" +
       "[^}]*\"hot\"\\s*:\\s*([0-9.]+)").r
@@ -181,13 +178,47 @@ object Bench {
     AnchorRe.findAllMatchIn(text)
       .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))
       .toMap
-  def loadAnchors(path: String = "ANCHORS.json"): Map[String, (Double, Double)] =
-    try {
-      val f = new java.io.File(path)
-      if (!f.isFile) Map.empty
-      else parseAnchors(new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-    } catch { case NonFatal(_) => Map.empty }
+
+  /** ANCHORS.json holds one anchor set per core count: absolute
+    * seconds measured at `local[cpus]` only compare with a board of the
+    * same width (a 32-core anchor against an 8-core board flags queries
+    * that are merely cheaper at fewer partitions). Each set is one
+    * block opening with `{"cpus": N,` ([[setBlock]]), as
+    * `QueryProbe --anchor-set` writes it. */
+  private val AnchorSetRe = "(?ms)^  \\{\"cpus\": ([0-9]+),.*?^  \\}\\}".r
+  def parseAnchorSets(text: String): Map[Int, Map[String, (Double, Double)]] =
+    AnchorSetRe.findAllMatchIn(text)
+      .map(m => m.group(1).toInt -> parseAnchors(m.matched)).toMap
+
+  /** One anchor set block: `meta` fields, then one entry per line. */
+  def setBlock(cpus: Int, meta: Seq[(String, String)], entries: Seq[String]): String =
+    (s"""  {"cpus": $cpus""" +: meta.map { case (k, v) => s""""$k": ${JsonString.quote(v)}""" })
+      .mkString(", ") + ", \"queries\": {\n" + entries.mkString(",\n") + "\n  }}"
+
+  /** `anchorsText` with the set for `cpus` replaced by `block`, or
+    * `block` appended after the last set when `cpus` has none. */
+  def withSet(anchorsText: String, cpus: Int, block: String): String = {
+    val sets = AnchorSetRe.findAllMatchIn(anchorsText).toSeq
+    sets.find(_.group(1).toInt == cpus) match {
+      case Some(m) => anchorsText.substring(0, m.start) + block + anchorsText.substring(m.end)
+      case None =>
+        val at = sets.lastOption.map(_.end)
+          .getOrElse(sys.error("ANCHORS.json holds no anchor set to extend"))
+        anchorsText.substring(0, at) + ",\n" + block + anchorsText.substring(at)
+    }
+  }
+
+  /** The set a board of `cpus` cores is checked against. A board with
+    * no set of its own width fails here: it is never checked against
+    * another width's set, and never passes with nothing checked. */
+  def loadAnchors(path: String, cpus: Int): Map[String, (Double, Double)] = {
+    val f = new java.io.File(path)
+    val text =
+      if (f.isFile) new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8") else ""
+    parseAnchorSets(text).get(cpus).filter(_.nonEmpty).getOrElse(
+      throw new IllegalArgumentException(
+        s"no anchors for $cpus cores (probe a set on this host: QueryProbe --anchor-set)"))
+  }
 
   /** The self-flag rule (VERDICT r17 item 2 — ">2× movers should be
     * one glance, not a session of archaeology"): a board median
@@ -449,23 +480,13 @@ object Bench {
       s"""\"calib\":$cal,\"mid_calib\":$midS,\"sweeps\":$sw${spreadBlock(sweeps)}${envJson(env)},\"queries\":$qs}"""
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.core.Session.cpus()
-    val spark = graft.core.Session.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Registration order keeps each query family contiguous (the old
-    // HashMap iteration interleaved families arbitrarily), and each
-    // family's memoization caches are released right after its last
-    // consumer — accumulated persisted frames across the whole sweep
-    // were the prime suspect for round 4's diffuse 2-8x regressions.
-    // SPARK_GRAFT_ONLY=q58,q1 -> bench only the named queries (qNN
-    // prefixes or full names); local-iteration knob, unset in driver runs.
-    val selected = sys.env.get("SPARK_GRAFT_ONLY")
-      .fold(SparkEntry.all)(o => SparkEntry.select(o.split(",")))
-    val repeat = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt)
-    val order = selected.map(_.name)
-    val hooks = Caches.releaseHooks(order)
+  /** Untimed warm-up before any timed run, shared by Bench and
+    * `QueryProbe`'s timing modes so both instruments time a warm JVM:
+    * the generic codegen paths, the table files in the page cache, and
+    * every selected query once at sf0.001 (next to `sfDir`), then
+    * `Caches.releaseAll`. */
+  def warmUp(spark: SparkSession, sfDir: String, selected: Seq[graft.core.Q]): Unit = {
+    val hooks = Caches.releaseHooks(selected.map(_.name))
     // untimed warmup: the first jobs in a fresh JVM pay several seconds
     // of one-time classloading/codegen-infrastructure cost (parquet
     // reader, hash-aggregate, broadcast-join and window codegen paths)
@@ -515,6 +536,28 @@ object Bench {
         Caches.releaseAll(spark)
       }
     } catch { case NonFatal(_) => () }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = graft.core.Session.cpus()
+    // before any sweep: a width with no anchor set fails at once
+    val anchors = loadAnchors("ANCHORS.json", cpus)
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // Registration order keeps each query family contiguous (the old
+    // HashMap iteration interleaved families arbitrarily), and each
+    // family's memoization caches are released right after its last
+    // consumer — accumulated persisted frames across the whole sweep
+    // were the prime suspect for round 4's diffuse 2-8x regressions.
+    // SPARK_GRAFT_ONLY=q58,q1 -> bench only the named queries (qNN
+    // prefixes or full names); local-iteration knob, unset in driver runs.
+    val selected = sys.env.get("SPARK_GRAFT_ONLY")
+      .fold(SparkEntry.all)(o => SparkEntry.select(o.split(",")))
+    val repeat = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt)
+    val order = selected.map(_.name)
+    val hooks = Caches.releaseHooks(order)
+    warmUp(spark, sfDir, selected)
     val times = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val calib = scala.collection.mutable.ArrayBuffer[(String, Double)]()
@@ -655,7 +698,6 @@ object Bench {
       st.copy(calibFlag = flagDecision.getOrElse(no, false),
         rerunOf = rerunOfMap.get(no), dropped = dropped(no))
     }
-    val anchors = loadAnchors()
     // full record into the repo (the round commit carries it); path
     // overridable for ablation arms so they don't clobber the official
     // record

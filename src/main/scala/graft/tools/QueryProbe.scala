@@ -8,9 +8,11 @@ import org.apache.spark.sql.execution.ExplainMode
   * session from [[graft.core.Session]], so its numbers and plans come
   * from the board's own engine configuration and width.
   *
-  * Timing protocol ([[coldHot]]): page-cache warmup of every table,
-  * then per run `Caches.releaseAll` (the bench's between-sweep state)
-  * before a COLD timing, and `Caches.releaseScope` of the query's own
+  * Timing protocol ([[coldHot]]): Bench's untimed warm-up
+  * ([[graft.Bench.warmUp]]: generic codegen paths, page cache, every
+  * selected query once at sf0.001; without it the first queries of a
+  * session time a cold JVM), then per run `Caches.releaseAll` (the
+  * bench's between-sweep state) before a COLD timing, and `Caches.releaseScope` of the query's own
   * frames before a HOT timing in the same session. The hot run keeps
   * the query's cache families but rebuilds what the cold run persisted
   * for the query itself, as every query does in a sweep, so the hot
@@ -22,17 +24,22 @@ import org.apache.spark.sql.execution.ExplainMode
   * Usage (query prefixes or full names; sfDir defaults to sf0.1):
   *   `runMain graft.tools.QueryProbe q107,q109 [sfDir] [runs]`
   *     cold/hot medians over `runs` (default 5) runs per query.
+  *   `runMain graft.tools.QueryProbe --anchor-set [sfDir] [runs] [commitTag]`
+  *     probes every registered query in this one session and writes
+  *     the result into ANCHORS.json as the anchor set for this
+  *     session's core count, replacing that count's old set and
+  *     leaving the other counts' sets as they are. A refresh is this
+  *     probe plus one `graft.Bench` board from the same host.
   *   `runMain graft.tools.QueryProbe --flagged [sfDir] [runs] [detail] [commitTag]`
-  *     batch anchor-refresh mode (round 19, VERDICT r18 item 6: nine
-  *     stale fast-flags needed four manual chunk sessions in r18) —
-  *     recomputes the anchor-flag set from the last board's
-  *     BENCH_DETAIL.json medians against the committed ANCHORS.json,
-  *     probes exactly that set in THIS one flat-calib session, and
-  *     emits the ANCHORS.json patch entries (stdout between PATCH
-  *     markers + ANCHORS_PATCH.json) in the committed file's format,
-  *     ready to splice in. The patch is advisory — the curator still
-  *     decides whether a flag was drift (patch it) or a regression
-  *     (fix the query instead).
+  *     recomputes the anchor-flag set from a board's BENCH_DETAIL.json
+  *     medians against the ANCHORS.json set of the board's own core
+  *     count, probes exactly that set in this one session, and writes
+  *     the entries to ANCHORS_PATCH.json in the committed set shape.
+  *     The patch is advisory: the curator still decides whether a flag
+  *     was drift (patch it) or a regression (fix the query instead).
+  *   Both modes refuse to write anchors from a dataset other than
+  *     sf0.1 (anchors are sf0.1 medians), and `--flagged` refuses when
+  *     this session's core count differs from the board's.
   *   `runMain graft.tools.QueryProbe --plan qNN[,...] [sfDir] [outDir]`
   *     the formatted plan, then the final adaptive plan after one
   *     noop run (AQE's exchange reuse, broadcast conversions and skew
@@ -53,58 +60,99 @@ object QueryProbe {
   def parseMedians(text: String): Seq[(String, Double)] =
     MedRe.findAllMatchIn(text).map(m => m.group(1) -> m.group(2).toDouble).toSeq
 
+  /** The core count a BENCH_DETAIL.json board ran at. */
+  private val CpusRe = "\"cpus\"\\s*:\\s*\"([0-9]+)\"".r
+  def parseCpus(detailText: String): Int =
+    CpusRe.findFirstMatchIn(detailText).map(_.group(1).toInt)
+      .getOrElse(sys.error("board records no \"cpus\""))
+
   /** A board that carries its own contention evidence — the sweep-sum
-    * spread flag, or dropped/re-run sweep rows — is not
-    * anchor-adjudicable: its medians may include contended sweeps the
-    * protocol itself flagged in real time. The anchor-drift gate
-    * (QueryProbeSpec) skips the zero-flag assertion for such boards
-    * (VERDICT r20 item 1: the driver's contended post-freeze board
-    * overwrote the worktree artifact and turned the frozen suite red
-    * with zero code change). */
+    * spread flag, or dropped/re-run sweep rows — may hold contended
+    * sweeps in its medians; `--flagged` says so next to the flags it
+    * recomputes from such a board. */
   def selfFlagged(detailText: String): Boolean =
     detailText.contains("\"sweep_spread_flag\":true") ||
       detailText.contains("\"dropped\":true")
 
+  /** The protocol of [[coldHot]], recorded on every set it writes. */
+  val Protocol = "QueryProbe coldHot after Bench.warmUp: Caches.releaseAll " +
+    "before each cold run, Caches.releaseScope(query) before each hot run; medians"
+
   /** One ANCHORS.json entry in the committed file's exact shape. */
   def patchEntry(name: String, cold: Double, hot: Double,
       commit: String, calib: String): String =
-    f"""  "$name": {%n   "cold": $cold%.2f,%n   "hot": $hot%.2f,%n   "commit": "$commit",%n   "calib": "$calib"%n  }"""
+    f"""   "$name": {"cold": $cold%.2f, "hot": $hot%.2f, "commit": "$commit", "calib": "$calib"}"""
 
-  private val Usage =
-    "usage: QueryProbe [--plan|--stages] q107[,q109...]|--flagged [sfDir] [runs|outDir]"
+  private val Usage = "usage: QueryProbe [--plan|--stages] q107[,q109...]" +
+    "|--flagged|--anchor-set [sfDir] [runs|outDir]"
 
   def main(args: Array[String]): Unit = args.headOption match {
     case Some(mode @ ("--plan" | "--stages")) => probe(mode, args.tail)
     case _ => probe("--time", args)
   }
 
-  /** `args` = (qNN[,...] | --flagged) [sfDir] [runs | outDir] ... */
-  private def probe(mode: String, args: Array[String]): Unit = {
-    val flaggedMode = args.headOption.contains("--flagged")
-    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = graft.core.Session.builder(graft.core.Session.cpus()).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  private def read(path: String): String =
+    new String(java.nio.file.Files.readAllBytes(new java.io.File(path).toPath), "UTF-8")
 
-    val selected =
-      if (flaggedMode) {
-        val detailPath = args.lift(3).getOrElse("BENCH_DETAIL.json")
-        val anchors = graft.Bench.loadAnchors()
-        val meds = parseMedians(new String(java.nio.file.Files.readAllBytes(
-          new java.io.File(detailPath).toPath), "UTF-8"))
-        val flagged = graft.Bench.anchorFlags(meds, anchors).map(_._1).toSet
-        println(s"flagged vs committed anchors: ${flagged.toSeq.sorted.mkString(",")}")
-        graft.SparkEntry.select(flagged)
-      } else graft.SparkEntry.select(args.headOption.getOrElse(sys.error(Usage)).split(","))
-    if (flaggedMode && selected.isEmpty) {
+  /** `args` = (qNN[,...] | --flagged | --anchor-set) [sfDir] [runs | outDir] ... */
+  private def probe(mode: String, args: Array[String]): Unit = {
+    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    val cpus = graft.core.Session.cpus()
+    // the board --flagged reads, checked before a session starts
+    val board = args.headOption.filter(_ == "--flagged").map { _ =>
+      val text = read(args.lift(3).getOrElse("BENCH_DETAIL.json"))
+      val boardCpus = parseCpus(text)
+      val anchors = graft.Bench.loadAnchors("ANCHORS.json", boardCpus)
+      val flagged = graft.Bench.anchorFlags(parseMedians(text), anchors).map(_._1)
+      println(s"flagged vs the $boardCpus-core anchors: ${flagged.sorted.mkString(",")}")
+      if (selfFlagged(text))
+        println("board self-flagged (sweep_spread_flag/dropped): its flags may be contention")
+      (boardCpus, flagged)
+    }
+    val selected = (args.headOption, board) match {
+      case (_, Some((_, flagged))) => graft.SparkEntry.select(flagged)
+      case (Some("--anchor-set"), _) => graft.SparkEntry.all
+      case (q, _) => graft.SparkEntry.select(q.getOrElse(sys.error(Usage)).split(","))
+    }
+    if (board.nonEmpty && selected.isEmpty) {
       println("no queries flagged — nothing to probe")
-      spark.stop(); return
+      return
     }
     require(selected.nonEmpty, "no query matches the request")
+    val spark = graft.core.Session.builder(cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
     mode match {
       case "--plan" => plans(spark, selected, sfDir, args.lift(2))
       case "--stages" => stages(spark, selected, sfDir, args.lift(2).map(_.toInt).getOrElse(2))
-      case _ => time(spark, selected, sfDir, args.lift(2).map(_.toInt).getOrElse(5),
-        if (flaggedMode) Some(args.lift(4).getOrElse("rNN")) else None)
+      case _ =>
+        val runs = args.lift(2).map(_.toInt).getOrElse(5)
+        val (results, calib) = time(spark, selected, sfDir, runs)
+        def block(commitTag: String) = graft.Bench.setBlock(cpus,
+          Seq("protocol" -> Protocol, "sf" -> new java.io.File(sfDir).getName,
+            "runs" -> runs.toString, "spark_calib" -> calib._2),
+          results.map { case (n, c, h) => patchEntry(n, c, h, commitTag, calib._1) })
+        // anchors are DEFINED as sf0.1 medians at the set's own core
+        // count; a probe at another SF or width would write wrong-scale
+        // values in splice-ready form — print, but refuse to write
+        val refusal =
+          if (new java.io.File(sfDir).getName != "sf0.1")
+            Some(s"sfDir '$sfDir' is not the anchor-defining sf0.1 dataset")
+          else board.collect { case (boardCpus, _) if boardCpus != cpus =>
+            s"this session runs $cpus cores, the board ran $boardCpus" }
+        (args.headOption, refusal) match {
+          case (Some("--anchor-set" | "--flagged"), Some(why)) =>
+            println(s"REFUSING to write anchors: $why")
+          case (Some("--anchor-set"), None) =>
+            val tag = args.lift(3).getOrElse("rNN")
+            java.nio.file.Files.writeString(java.nio.file.Paths.get("ANCHORS.json"),
+              graft.Bench.withSet(read("ANCHORS.json"), cpus, block(tag)))
+            println(s"wrote the $cpus-core set of ${results.size} anchors into ANCHORS.json")
+          case (Some("--flagged"), None) =>
+            val patch = "{\"sets\": [\n" + block(args.lift(4).getOrElse("rNN")) + "\n ]}\n"
+            print(patch)
+            java.nio.file.Files.writeString(java.nio.file.Paths.get("ANCHORS_PATCH.json"), patch)
+          case _ => ()
+        }
     }
     spark.stop()
   }
@@ -112,16 +160,17 @@ object QueryProbe {
   private def noop(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Cold/hot medians per query; with `patchTag` (the `--flagged`
-    * mode) also the ANCHORS.json patch for them. */
+  /** Cold/hot medians per query (short name, cold, hot), with the
+    * session's fixed-work calibration pairs (hash, spark) as
+    * "pre/post" strings. */
   private def time(spark: SparkSession, selected: Seq[graft.core.Q], sfDir: String,
-      runs: Int, patchTag: Option[String]): Unit = {
+      runs: Int): (Seq[(String, Double, Double)], (String, String)) = {
     def timed(q: graft.core.Q): Double = {
       val t0 = System.nanoTime()
       noop(q.run(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
-    warmPageCache(spark, sfDir)
+    graft.Bench.warmUp(spark, sfDir, selected)
     // fixed-work calibration before and after (r13: the instrument that
     // makes "machine drift" a measurement — same pair Bench emits)
     val (h0, s0) = graft.Bench.calibrate(spark)
@@ -143,26 +192,7 @@ object QueryProbe {
     }
     val (h1, s1) = graft.Bench.calibrate(spark)
     println(f"calib post: hash $h1%.3f s  spark $s1%.3f s")
-    patchTag.foreach { commitTag =>
-      // committed anchors are DEFINED as sf0.1 flat-calib medians; a
-      // probe at any other SF would emit wrong-scale values in
-      // splice-ready form (ADVICE r19) — print the measurements but
-      // refuse to write the patch artifact
-      if (!new java.io.File(sfDir).getName.equals("sf0.1")) {
-        println(s"REFUSING ANCHORS_PATCH.json: sfDir '$sfDir' is not the " +
-          "anchor-defining sf0.1 dataset (anchors are sf0.1 medians)")
-      } else {
-        val calibStr = f"$h0%.3f/$h1%.3f"
-        val patch = results.result()
-          .map { case (n, c, h) => patchEntry(n, c, h, commitTag, calibStr) }
-          .mkString(",\n")
-        println("---- ANCHORS PATCH (splice into ANCHORS.json \"queries\") ----")
-        println(patch)
-        println("---- END PATCH ----")
-        val w = new java.io.PrintWriter("ANCHORS_PATCH.json", "UTF-8")
-        try w.println("{\n" + patch + "\n}") finally w.close()
-      }
-    }
+    (results.result(), (f"$h0%.3f/$h1%.3f", f"$s0%.3f/$s1%.3f"))
   }
 
   /** One cold and one hot run of `q`, each done by `run`: the cold run
@@ -176,11 +206,6 @@ object QueryProbe {
     graft.Caches.releaseScope(spark, q.name)
     (cold, run)
   }
-
-  /** Page-cache warmup of every table (Bench does the same before
-    * timing). */
-  private def warmPageCache(spark: SparkSession, sfDir: String): Unit =
-    graft.core.T.names.foreach(t => noop(graft.core.T.df(spark, sfDir, t)))
 
   /** `--plan`: formatted plan, one noop run, then the final adaptive
     * plan of the same QueryExecution. */
@@ -223,7 +248,7 @@ object QueryProbe {
           m.memoryBytesSpilled))
       }
     }
-    warmPageCache(spark, sfDir)
+    graft.Bench.warmUp(spark, sfDir, selected)
     def mb(b: Long) = b / 1048576.0
     selected.foreach { q =>
       var wall = 0.0

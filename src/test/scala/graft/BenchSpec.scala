@@ -197,7 +197,7 @@ class BenchSpec extends SparkSpec {
   test("ANCHORS.json parses and covers the adjudicated movers") {
     // round-trips the COMMITTED file (not a fixture) so a format
     // drift that would silently disable anchor emission fails here
-    val a = Bench.loadAnchors("ANCHORS.json")
+    val a = Bench.loadAnchors("ANCHORS.json", 32)
     assert(a.size >= 80, s"only ${a.size} anchors parsed")
     assert(a("q210") == (1.36, 1.20), a.get("q210").toString)
     assert(a("q205") == (0.93, 0.80), a.get("q205").toString)

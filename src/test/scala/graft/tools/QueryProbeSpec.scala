@@ -22,18 +22,37 @@ class QueryProbeSpec extends AnyFunSuite {
     // the freeze invariant the batch mode automates: flags are derived
     // from (detail medians × committed anchors), not stored — the
     // committed artifacts must agree with the committed "zero flags".
-    // A board that SELF-FLAGGED (sweep_spread_flag / dropped re-run
-    // rows) is contention evidence, not anchor evidence: the gate is
-    // not applicable to it (VERDICT r20 item 1 — the driver's
-    // contended board turned this suite red with zero code change).
+    // The board is checked against the anchor set of its own core
+    // count, self-flagged or not.
     val text = read("BENCH_DETAIL.json")
-    val anchors = graft.Bench.loadAnchors("ANCHORS.json")
+    val anchors = graft.Bench.loadAnchors("ANCHORS.json", QueryProbe.parseCpus(text))
     val meds = QueryProbe.parseMedians(text)
     assert(anchors.nonEmpty && meds.nonEmpty)
-    if (QueryProbe.selfFlagged(text))
-      cancel("board self-flagged as contended (sweep_spread_flag/dropped) — drift gate skipped")
     val flags = graft.Bench.anchorFlags(meds, anchors)
     assert(flags.isEmpty, s"stale board/anchors: $flags")
+  }
+
+  test("a board whose core count has no anchor set fails with no anchors for N cores") {
+    val board = """{"total":1.0,"runs":3,"cpus":"8","queries":{"q1":{"median":0.5}}}"""
+    val e = intercept[IllegalArgumentException](
+      graft.Bench.loadAnchors("ANCHORS.json", QueryProbe.parseCpus(board)))
+    assert(e.getMessage.contains("no anchors for 8 cores"), e.getMessage)
+    // a missing file is no set either, never an empty pass
+    val m = intercept[IllegalArgumentException](graft.Bench.loadAnchors("no-such-anchors.json", 4))
+    assert(m.getMessage.contains("no anchors for 4 cores"), m.getMessage)
+  }
+
+  test("an anchor set block replaces its own core count's set and parses back") {
+    val committed = read("ANCHORS.json")
+    val before = graft.Bench.parseAnchorSets(committed)
+    assert(before.contains(32) && before.contains(4), before.keySet.toString)
+    def block(cpus: Int) = graft.Bench.setBlock(cpus, Seq("protocol" -> QueryProbe.Protocol),
+      Seq(QueryProbe.patchEntry("q9", 0.678, 0.6, "t", "0.284/0.291")))
+    val replaced = graft.Bench.parseAnchorSets(graft.Bench.withSet(committed, 4, block(4)))
+    assert(replaced(4) == Map("q9" -> (0.68, 0.6)))
+    assert(replaced(32) == before(32))
+    val added = graft.Bench.parseAnchorSets(graft.Bench.withSet(committed, 8, block(8)))
+    assert(added.keySet == before.keySet + 8 && added(4) == before(4), added.keySet.toString)
   }
 
   test("selfFlagged reproduces the r20 contended-board case") {
