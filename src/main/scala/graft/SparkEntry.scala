@@ -29,7 +29,7 @@ object SparkEntry {
 
   /** Flagship: the end-to-end reference slice (SURVEY §7.2) — corpus →
     * record split → 47-field extract → single-shuffle merge → user
-    * WHERE via expr() → semi-join chain → condensed export row.
+    * WHERE via expr() → in-row child predicates → condensed export row.
     * Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q37_registry_search_export")(spark, "/root/testdata/sf0.001")

@@ -224,6 +224,8 @@ object Session {
       // first (r13); sized to the workload, sweep 2+3 compile deltas
       // drop to ~80. Static conf, so it is set at session create.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // the SQL function `extract_record`
+      .withExtensions(new graft.plans.GraftExtensions)
 }
 
 /** JSON string literals for the hand-rendered harness artifacts. */

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Engine extension point (SURVEY §7.3): registers the custom
   * [[ExtractRecord]] expression as the SQL function `extract_record`,
   * so `spark.sql("SELECT extract_record(rec).* FROM corpus")` works.
-  * Install via `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  * or a session builder's `withExtensions(new GraftExtensions)`.
+  * `graft.core.Session.builder` installs it in every session it builds;
+  * elsewhere, `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   * No custom Rule/Strategy is registered — nothing in the engine's
   * semantics needs planner surgery (SURVEY §4). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -27,10 +27,4 @@ object GraftExtensions {
     require(children.size == 1, "extract_record takes exactly one argument")
     ExtractRecord(children.head)
   }
-
-  /** Install on an existing session (extensions only run at session
-    * construction; getOrCreate can return a pre-existing session). */
-  def install(s: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.GraftColumnBridge
-      .registerFunction(s, "extract_record", info, builder)
 }

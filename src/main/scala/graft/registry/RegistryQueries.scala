@@ -91,8 +91,9 @@ object RegistryQueries {
       tables(s).location.orderBy("eudract_id", "location")
     },
 
-    // ---- S7/P6+J1/J2+A7+O1: user WHERE via expr(), semi-join chain,
-    // export assembly with condensed child strings (toexcel.py:14-161).
+    // ---- S7/P6+J1/J2+A7+O1: user WHERE via expr(), child predicates
+    // in-row over the merged frame (no join), export assembly with
+    // condensed child strings (toexcel.py:14-161).
     Q("q37_registry_search_export",
       """SELECT * FROM (VALUES
         |  ('2004-000001-11', 'Study of Alpha Versus Placebo', '120',

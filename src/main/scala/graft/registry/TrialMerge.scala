@@ -164,18 +164,13 @@ object TrialMerge {
 final class RegistryTables private[registry] (root: DataFrame) {
   @volatile private var released = false
 
+  import RegistryTables.{Imp, Location, Sponsor}
+
   private val leaf = org.apache.spark.sql.GraftColumnBridge.cachedLeaf(root)
-  private val trialView = leaf.drop("imps", "sponsors", "locations")
-  private val impView = leaf
-    .select(col("eudract_id"), posexplode(col("imps")).as(Seq("imp_seq", "i")))
-    .select(col("eudract_id"), (col("imp_seq") + 1).as("imp_seq"),
-      col("i.trade"), col("i.product"), col("i.code"))
-  private val sponsorView = leaf
-    .select(col("eudract_id"), posexplode(col("sponsors")).as(Seq("sponsor_seq", "s")))
-    .select(col("eudract_id"), (col("sponsor_seq") + 1).as("sponsor_seq"),
-      col("s.name"), col("s.org"), col("s.contact"), col("s.email"))
-  private val locationView = leaf
-    .select(col("eudract_id"), explode(col("locations")).as("location"))
+  private val trialView = leaf.drop(Imp.column, Sponsor.column, Location.column)
+  private val impView = Imp.view(leaf)
+  private val sponsorView = Sponsor.view(leaf)
+  private val locationView = Location.view(leaf)
 
   private def live(df: DataFrame): DataFrame = {
     if (released) throw new IllegalStateException(
@@ -197,6 +192,38 @@ final class RegistryTables private[registry] (root: DataFrame) {
     released = true
     root.unpersist()
   }
+}
+
+object RegistryTables {
+
+  /** One child table (scan.py:46-86): the merged column that holds each
+    * trial's rows of it, the 1-based position column if the table has
+    * one, and the named fields of one row. The relational view
+    * ([[view]]) and the in-row form ([[rows]]) both derive from it, so
+    * a predicate sees the same columns in either. */
+  private[registry] final case class Child(
+      column: String, seq: Option[String], fields: Column => Seq[Column]) {
+
+    private def row(e: Column, pos: Column): Seq[Column] =
+      col("eudract_id") +: seq.map(s => (pos + 1).as(s)).toSeq ++: fields(e)
+
+    /** One row per element, by (pos)explode of the merged column. */
+    def view(leaf: DataFrame): DataFrame = leaf
+      .select(col("eudract_id"),
+        seq.fold(explode(col(column)).as("e"))(_ => posexplode(col(column)).as(Seq("pos", "e"))))
+      .select(row(col("e"), col("pos")): _*)
+
+    /** Each merged row's elements as structs with the view's columns. */
+    def rows: Column = transform(col(column), (e, i) => struct(row(e, i): _*))
+  }
+
+  private def fieldsOf(names: String*)(e: Column): Seq[Column] =
+    names.map(f => e.getField(f).as(f))
+
+  private[registry] val Imp = Child("imps", Some("imp_seq"), fieldsOf("trade", "product", "code"))
+  private[registry] val Sponsor =
+    Child("sponsors", Some("sponsor_seq"), fieldsOf("name", "org", "contact", "email"))
+  private[registry] val Location = Child("locations", None, e => Seq(e.as("location")))
 }
 
 object Registry {

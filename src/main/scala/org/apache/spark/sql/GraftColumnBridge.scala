@@ -11,16 +11,6 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Register a function on an ALREADY-RUNNING session (extensions only
-    * apply at session construction; getOrCreate reuses sessions). */
-  def registerFunction(
-      s: SparkSession,
-      name: String,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    s.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .registerFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
-
   /** A Dataset whose logical plan IS the cache entry of the persisted
     * `df` — a single `InMemoryRelation` leaf. Frames derived from it
     * analyse and plan a leaf instead of re-analysing (and re-matching

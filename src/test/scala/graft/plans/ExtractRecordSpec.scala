@@ -1,19 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
-/** The custom expression through its SQL registration — a separate
-  * session so the extension install path itself is exercised. */
-class ExtractRecordSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    // the suite may run after other suites created the shared session —
-    // exercise the install-on-existing-session path
-    val s = graft.SparkSpec.session
-    GraftExtensions.install(s)
-    s
-  }
+/** The custom expression through its SQL registration, in the shared
+  * session: `graft.core.Session.builder` installs [[GraftExtensions]],
+  * so no spec installs it by hand. */
+class ExtractRecordSpec extends SparkSpec {
 
   test("extract_record is callable from SQL after extension install") {
     import spark.implicits._
