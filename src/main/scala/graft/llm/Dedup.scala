@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** Unified deduplication surface — the generalization SURVEY §2.4 A4
@@ -199,9 +199,10 @@ object Dedup {
     * Scale shapes are those of the direct forms: ExactKey = one
     * key-shuffle aggregate + a same-key join back (exchange-reusable);
     * PairGraph = the diameter-bounded [[components]] loop + one
-    * rep-keyed aggregate; AnyFieldInGroup = map-side partial
-    * aggregation into one group-keyed shuffle with bounded per-group
-    * lists. Nothing here collects, windows globally, or enumerates
+    * rep-keyed aggregate; AnyFieldInGroup = one group-keyed
+    * collect_list shuffle with bounded per-group lists, consolidated
+    * as [[graft.registry.TrialMerge]] consolidates a trial's IMPs.
+    * Nothing here collects, windows globally, or enumerates
     * cross-cluster pairs. */
   def dedup(df: DataFrame, idCol: String, matchRule: MatchRule,
             mergeRule: MergeRule): DataFrame = (matchRule, mergeRule) match {
@@ -226,9 +227,12 @@ object Dedup {
       dedupWithComponents(df, idCol,
         components(pairs, a, b).withColumnRenamed("id", idCol), mr)
     case (MatchRule.AnyFieldInGroup(group, seqCol, listCol), MergeRule.FieldMerge) =>
-      val impAgg = org.apache.spark.sql.functions.udaf(graft.registry.ImpDedup)
+      val entries = transform(col(listCol), e => struct(e.getField("pos").cast("int"),
+        e.getField("trade"), e.getField("product"), e.getField("code")))
       df.groupBy(group)
-        .agg(impAgg(col(seqCol), col(listCol)).as("merged"))
+        .agg(collect_list(struct(col(seqCol).cast("long"), entries)).as("recs"))
+        .select(col(group), GraftColumnBridge.column(graft.registry.ConsolidateImps(
+          GraftColumnBridge.expression(col("recs")))).as("merged"))
     case (m, r) =>
       throw new IllegalArgumentException(
         s"unsupported dedup combination: ${m.getClass.getSimpleName} + " +

@@ -81,7 +81,6 @@ object ExtractRecord {
   private val eeaStart1 = Pattern.compile(FieldSpec.eeaBlockStart1)
   private val eeaStart2 = Pattern.compile(FieldSpec.eeaBlockStart2)
   private val eeaEnd = Pattern.compile(FieldSpec.eeaBlockEnd)
-  private val ws = Pattern.compile("\\s+")
 
   /** First-char dispatch: which trial-field patterns can match a line
     * starting with this char (first pattern char after ^ is literal for
@@ -92,8 +91,33 @@ object ExtractRecord {
       .map { case (c, is) => c -> is.toArray }
   }
 
-  private def collapse(line: String): String =
-    ws.matcher(line.trim).replaceAll(" ")
+  /** java.util.regex's `\s`: space, tab, LF, VT, FF, CR. */
+  private def isWs(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+
+  /** `line.trim` with each `\s+` run replaced by one space, in one
+    * char loop: trim strips every char ≤ ' ' at both ends, so a control
+    * char such as U+0001 goes at the edges but stays inside. */
+  private[plans] def collapse(line: String): String = {
+    var b = 0
+    var e = line.length
+    while (b < e && line.charAt(b) <= ' ') b += 1
+    while (e > b && line.charAt(e - 1) <= ' ') e -= 1
+    val sb = new java.lang.StringBuilder(e - b)
+    var i = b
+    while (i < e) {
+      val c = line.charAt(i)
+      if (isWs(c)) {
+        sb.append(' ')
+        // the trimmed span ends on a char > ' ', so every run ends before e
+        while (isWs(line.charAt(i))) i += 1
+      } else {
+        sb.append(c)
+        i += 1
+      }
+    }
+    sb.toString
+  }
 
   private def lowerDefault(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
 

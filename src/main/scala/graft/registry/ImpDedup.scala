@@ -1,22 +1,15 @@
 package graft.registry
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
 
-/** One raw IMP entry: (record_seq, pos) give its deterministic
-  * first-occurrence order within the trial. */
-final case class ImpRaw(seq: Long, pos: Int, trade: String, product: String, code: String)
-/** Per-segment entry as extracted (no record_seq yet). */
-final case class ImpSeg(pos: Int, trade: String, product: String, code: String)
-/** Aggregator input: one record's (seq, extracted IMP entries). */
-final case class ImpRecord(seq: Long, imps: Seq[ImpSeg])
-final case class ImpBuf(items: Seq[ImpRaw])
-final case class ImpOut(trade: String, product: String, code: String)
-
-/** IMP fuzzy duplicate consolidation (reference scan.py:135-188) as a
-  * typed Spark [[Aggregator]] — the one genuinely custom aggregate the
-  * parity surface needs (SURVEY §7.3).
+/** IMP fuzzy duplicate consolidation (reference scan.py:135-188), run
+  * per trial over its collected records by [[MergeTrial]] (and per
+  * group by [[ConsolidateImps]]).
   *
   * Semantics replicated exactly: two entries are the same product when
   * ANY of {trade, product, code} is non-empty-equal (scan.py:135-145);
@@ -26,31 +19,38 @@ final case class ImpOut(trade: String, product: String, code: String)
   * transitive (connected components over the 3-attribute match graph).
   *
   * The reference's scan order is file order; Spark input order is
-  * partition-dependent, so [[finish]] first sorts by (record_seq, pos) —
-  * the explicit determinism the reference gets for free from its
-  * single-threaded read (SURVEY §7.4.2).
+  * partition-dependent, so [[consolidateLists]] takes the entries in
+  * (record_seq, pos) order — the explicit determinism the reference
+  * gets for free from its single-threaded read (SURVEY §7.4.2).
   *
   * Scale: per-trial IMP lists are bounded (≤ #member-states × IMPs per
   * CTA, tens of entries), so the O(n²) pairwise loop is constant-time
-  * per key; the aggregate is partial-merge-friendly (buffers concat),
-  * so Spark plans a map-side partial aggregation before the single
-  * shuffle on eudract_id.
+  * per key.
   */
-object ImpDedup extends Aggregator[ImpRecord, ImpBuf, Seq[ImpOut]] {
+object ImpDedup {
 
-  def zero: ImpBuf = ImpBuf(Vector.empty)
-  def reduce(b: ImpBuf, a: ImpRecord): ImpBuf =
-    ImpBuf(b.items ++ a.imps.map(i => ImpRaw(a.seq, i.pos, i.trade, i.product, i.code)))
-  def merge(b1: ImpBuf, b2: ImpBuf): ImpBuf = ImpBuf(b1.items ++ b2.items)
+  /** The consolidated entries as array<struct<trade, product, code>>. */
+  val outType: ArrayType = ArrayType(StructType(
+    Seq("trade", "product", "code").map(StructField(_, StringType))), containsNull = false)
 
-  def finish(b: ImpBuf): Seq[ImpOut] = {
-    val sorted = b.items.sortBy(i => (i.seq, i.pos))
-    val list = ArrayBuffer.from(sorted.map(i => Array(i.trade, i.product, i.code)))
-    consolidate(list).map(a => ImpOut(a(0), a(1), a(2))).toSeq
+  /** One group's extracted lists, given in record_seq order, each an
+    * array<struct<pos, trade, product, code>>: entries taken in (seq,
+    * pos) order, consolidated, with "" → null when `blankToNull`. */
+  private[registry] def consolidateLists(lists: Array[ArrayData], blankToNull: Boolean): ArrayData = {
+    val entries = ArrayBuffer[Array[String]]()
+    lists.foreach { l =>
+      val es = Array.tabulate(l.numElements())(l.getStruct(_, 4)).sortBy(_.getInt(0))
+      es.foreach(e => entries += Array(e.getString(1), e.getString(2), e.getString(3)))
+    }
+    def out(v: String): UTF8String =
+      if (blankToNull && v.isEmpty) null else UTF8String.fromString(v)
+    new GenericArrayData(consolidate(entries).map { a =>
+      new GenericInternalRow(Array[Any](out(a(0)), out(a(1)), out(a(2))))
+    }.toArray[Any])
   }
 
   /** The reference's pairwise swap-delete loop, verbatim semantics. */
-  private[registry] def consolidate(list: ArrayBuffer[Array[String]]): ArrayBuffer[Array[String]] = {
+  private[graft] def consolidate(list: ArrayBuffer[Array[String]]): ArrayBuffer[Array[String]] = {
     def fieldsMatch(a: String, b: String): Boolean = a.nonEmpty && a == b
     var top = list.length
     if (top > 1) {
@@ -73,10 +73,21 @@ object ImpDedup extends Aggregator[ImpRecord, ImpBuf, Seq[ImpOut]] {
     }
     list.take(top)
   }
+}
 
-  def bufferEncoder: Encoder[ImpBuf] = Encoders.product[ImpBuf]
-  def outputEncoder: Encoder[Seq[ImpOut]] = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    ExpressionEncoder[Seq[ImpOut]]()
-  }
+/** [[ImpDedup]] over one group's `collect_list(struct(seq, entries))`,
+  * `entries` an array<struct<pos, trade, product, code>>: the
+  * consolidated list, blanks kept as "" (graft.llm.Dedup's FieldMerge). */
+case class ConsolidateImps(child: Expression) extends UnaryExpression with CodegenFallback {
+
+  override def dataType: DataType = ImpDedup.outType
+  override def prettyName: String = "consolidate_imps"
+
+  protected override def nullSafeEval(input: Any): Any =
+    ImpDedup.consolidateLists(
+      MergeTrial.bySeq(input.asInstanceOf[ArrayData], 2).map(_.getArray(1)),
+      blankToNull = false)
+
+  override protected def withNewChildInternal(newChild: Expression): ConsolidateImps =
+    copy(child = newChild)
 }

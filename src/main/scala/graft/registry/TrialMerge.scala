@@ -1,23 +1,21 @@
 package graft.registry
 
 import graft.{Caches, Family}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Trial consolidation: N member-state records per trial → 1 merged row
-  * (reference scan.py:263-307 + README merge rules), as ONE hash
-  * aggregation keyed by eudract_id.
+  * (reference scan.py:263-307 + README merge rules), as ONE grouping
+  * keyed by eudract_id: `collect_list(struct(record_seq, ex))`, then the
+  * fused [[MergeTrial]] kernel over each trial's records.
   *
-  * This is the pipeline's only shuffle. Every merge is expressed as a
-  * partial-aggregable function (min-of-struct, max, collect_list, the
-  * ImpDedup aggregator), so map-side combine runs before the exchange;
-  * skew is bounded by records-per-trial ≤ #EU member states (~30), so
-  * no salting is needed at any scale (SURVEY §7.4.6).
+  * This is the pipeline's only shuffle. The list holds each trial's
+  * extracted records, so the exchange carries about what the records
+  * extract to; skew is bounded by records-per-trial ≤ #EU member states
+  * (~30), so no salting is needed at any scale (SURVEY §7.4.6).
   *
-  * Merge rules:
-  *  - text fields: FIRST NON-BLANK in file order (scan.py:302 guard) =
-  *    min over struct(record_seq, value) of non-null values — an
-  *    order-correct `first` without a window or a global sort.
+  * Merge rules (the kernel walks the records in record_seq order):
+  *  - text fields: FIRST NON-BLANK in file order (scan.py:302 guard).
   *  - yes/no flags: "yes trumps no" — the reference's INTENDED rule
   *    (dead code at scan.py:297; engine implements the intent, pinned
   *    divergence SURVEY §7.4.4a): 1 if any record says yes, 0 if any
@@ -36,15 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object TrialMerge {
 
-  private def firstNonBlank(name: String): Column =
-    min(when(col(name).isNotNull, struct(col("record_seq").as("s"), col(name).as("v"))))
-      .getField("v").as(name)
-
-  private def yesOverNo(name: String): Column = {
-    val rank = when(col(name) === "yes", 2).when(col(name) === "no", 1)
-    max(rank).as(name) // 2 → yes, 1 → no, null → unknown
-  }
-
   /** Full pipeline: corpus path → merged trial frame with nested child
     * collections (imps/sponsors/locations arrays) + flat child views.
     *
@@ -60,84 +49,51 @@ object TrialMerge {
     // field, IMP/sponsor section, and location of a record from a single
     // walk over its lines, instead of 54 separate regex passes. In
     // strict mode captures casefold like the reference (SURVEY §7.4.3).
-    val exCol = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.plans.ExtractRecord(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("rec")),
-        strict = strictParity))
-    val recs = Corpus.records(spark, corpusPath)
-      .withColumn("ex", exCol)
-      .select(
-        (col("record_seq") +: col("eudract_id") +:
-          FieldSpec.trial.map(f => col(s"ex.${f.name}").as(f.name))) :+
-          col("ex.rec_imps").as("rec_imps") :+
-          col("ex.rec_sponsors").as("rec_sponsors") :+
-          col("ex.rec_locs").as("rec_locs"): _*)
+    val ex = GraftColumnBridge.column(graft.plans.ExtractRecord(
+      GraftColumnBridge.expression(col("rec")), strict = strictParity))
+    consolidate(
+      Corpus.records(spark, corpusPath).select(col("eudract_id"), col("record_seq"), ex.as("ex")),
+      strictParity)
+  }
 
-    val impAgg = udaf(ImpDedup)
-    val fieldAggs = FieldSpec.trial.map { f =>
-      f.kind match {
-        case FieldKind.Flag if strictParity =>
-          // first non-blank raw value, then ranked like yesOverNo
-          val v = min(when(col(f.name).isNotNull,
-            struct(col("record_seq").as("s"), col(f.name).as("v")))).getField("v")
-          when(v === "yes", 2).when(v === "no", 1).as(f.name)
-        case FieldKind.Flag => yesOverNo(f.name)
-        case _              => firstNonBlank(f.name)
-      }
-    }
-    val childAggs = Seq(
-      impAgg(col("record_seq"), col("rec_imps")).as("imps"),
-      sort_array(collect_list(struct(col("record_seq").as("seq"), col("rec_sponsors").as("sps"))))
-        .as("sponsor_recs"),
-      array_sort(array_distinct(flatten(collect_list(col("rec_locs"))))).as("locations"))
-
-    val grouped = recs
+  /** The merge of extracted records `(eudract_id, record_seq, ex)`, `ex`
+    * an [[graft.plans.ExtractRecord]] struct. */
+  private[registry] def consolidate(recs: DataFrame, strictParity: Boolean): DataFrame = {
+    val merged = recs
       .groupBy("eudract_id")
-      .agg(fieldAggs.head, (fieldAggs.tail ++ childAggs): _*)
+      .agg(collect_list(struct(col("record_seq"), col("ex"))).as("recs"))
+      .select(col("eudract_id"), GraftColumnBridge.column(
+        MergeTrial(GraftColumnBridge.expression(col("recs")), strictParity)).as("m"))
 
-    // Sponsor post-processing (pure array expressions, no extra shuffle):
-    // flatten record-ordered sections, title-case (scan.py:248; default
-    // initcap ≈ str.title, pinned divergence SURVEY §7.4.3 — strict
-    // parity swaps in the Python-faithful title-caser), dedup keeping
-    // first occurrence, ""→null.
+    // Sponsors: title-case (scan.py:248; default initcap ≈ str.title,
+    // pinned divergence SURVEY §7.4.3 — strict parity swaps in the
+    // Python-faithful title-caser), dedup keeping first occurrence,
+    // ""→null. Every titled field is a non-null string, so
+    // array_distinct's equality is the reference's tuple equality.
     val titleize: Column => Column =
       if (strictParity) graft.plans.StrictStrings.pyTitleCol else initcap
-    val flatSponsors = flatten(transform(col("sponsor_recs"), r => r.getField("sps")))
-    val titled = transform(flatSponsors, sp => struct(
+    val raw = col("m.sponsors")
+    val titled = array_distinct(transform(raw, sp => struct(
       titleize(sp.getField("name")).as("name"),
       titleize(sp.getField("org")).as("org"),
       titleize(sp.getField("contact")).as("contact"),
-      sp.getField("email").as("email")))
-    val deduped = filter(titled, (x, i) =>
-      !exists(slice(titled, lit(1), i), y => y === x))
-    val sponsors = transform(deduped, sp => struct(
-      Seq("name", "org", "contact", "email")
-        .map(f => nullif(sp.getField(f), lit("")).as(f)): _*))
+      sp.getField("email").as("email"))))
+    val fields = Seq("name", "org", "contact", "email")
+    val sponsors = transform(titled, sp => struct(
+      fields.map(f => nullif(sp.getField(f), lit("")).as(f)): _*))
+    val noSponsor = array(struct(fields.map(lit(null).cast("string").as(_)): _*))
 
-    val withChildren = grouped
-      .withColumn("sponsors",
-        when(size(sponsors) > 0, sponsors)
-          .otherwise(array(struct(
-            lit(null).cast("string").as("name"), lit(null).cast("string").as("org"),
-            lit(null).cast("string").as("contact"), lit(null).cast("string").as("email")))))
-      .withColumn("imps", transform(col("imps"), i => struct(
-        nullif(i.getField("trade"), lit("")).as("trade"),
-        nullif(i.getField("product"), lit("")).as("product"),
-        nullif(i.getField("code"), lit("")).as("code"))))
-      .drop("sponsor_recs")
-
-    // Consistency rewrites (scan.py:103-111) + flag typing (scan.py:115-119).
-    val statusFixed = withChildren
+    merged
+      .select((col("eudract_id") +: FieldSpec.trial.map(f => col(s"m.${f.name}").as(f.name))) ++
+        Seq(col("m.imps").as("imps"), col("m.locations").as("locations"),
+          when(size(raw) > 0, sponsors).otherwise(noSponsor).as("sponsors")): _*)
+      // Consistency rewrites (scan.py:103-111).
       .withColumn("overall_status",
         when(col("completion_date").isNotNull && col("overall_status") === "ongoing",
           lit("not ongoing")).otherwise(col("overall_status")))
       .withColumn("meddra_soc",
         when(col("meddra_soc").isNull && col("meddra_level") === "soc",
           col("meddra_classification")).otherwise(col("meddra_soc")))
-
-    FieldSpec.trial.filter(_.kind == FieldKind.Flag).foldLeft(statusFixed) { (df, f) =>
-      df.withColumn(f.name, (col(f.name) - 1).cast("int")) // 2→1 (yes), 1→0 (no)
-    }
   }
 }
 
@@ -148,8 +104,8 @@ object TrialMerge {
   * `root` is the persisted [[TrialMerge.merge]] frame: the one cache
   * entry this handle owns. `merged` and the views are rooted at that
   * entry's `InMemoryRelation` leaf rather than at `root`'s lineage
-  * (corpus scan, ExtractRecord, the ~60-aggregate groupBy, ~25 chained
-  * projections). Every `where`/`join` a request adds re-analyses its
+  * (corpus scan, ExtractRecord, the collect_list grouping, MergeTrial,
+  * the sponsor and consistency projections). Every `where`/`join` a request adds re-analyses its
   * whole input tree and de-duplicates self-join attributes across it,
   * and the CacheManager then re-canonicalises it to find the cache; on
   * the full lineage that fixed per-request cost was most of a search's

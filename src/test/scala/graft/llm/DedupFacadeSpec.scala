@@ -3,6 +3,7 @@ package graft.llm
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable.ArrayBuffer
 
 /** The unified dedup front door (SURVEY §2.4 A4's north star): each
   * (matchRule, mergeRule) dispatch must equal its DIRECT form — the
@@ -123,7 +124,7 @@ class DedupFacadeSpec extends SparkSpec {
     LlmText.release(spark)
   }
 
-  test("AnyFieldInGroup + FieldMerge == the direct udaf(ImpDedup) q34 surface") {
+  test("AnyFieldInGroup + FieldMerge == ImpDedup.consolidate in (seq, pos) order") {
     import spark.implicits._
     // group g1: entries match transitively through the shared code /
     // trade chain; g2: no match. Schema mirrors rec_imps:
@@ -144,10 +145,17 @@ class DedupFacadeSpec extends SparkSpec {
     val facade = Dedup.dedup(df, "seq",
       Dedup.MatchRule.AnyFieldInGroup("grp", "seq", "imps"),
       Dedup.MergeRule.FieldMerge)
-    val impAgg = udaf(graft.registry.ImpDedup)
-    val direct = df.groupBy("grp")
-      .agg(impAgg(col("seq"), col("imps")).as("merged"))
-    assert(norm(facade.collect()) == norm(direct.collect()))
+    // the reference side, on the driver: each group's entries in
+    // (seq, pos) order through the reference's swap-delete loop
+    val direct = df.collect().groupBy(_.getString(0)).map { case (g, rs) =>
+      val entries = rs.toSeq
+        .flatMap(r => r.getSeq[org.apache.spark.sql.Row](2).map(e =>
+          ((r.getLong(1), e.getInt(0)), Array(e.getString(1), e.getString(2), e.getString(3)))))
+        .sortBy(_._1).map(_._2)
+      g -> graft.registry.ImpDedup.consolidate(ArrayBuffer.from(entries))
+        .map(a => (a(0), a(1), a(2))).toSeq
+    }.toSeq.sortBy(_._1)
+    assert(norm(facade.collect()) == direct)
     // and the merge itself is the reference's: shorter trade 'LT'
     // survives, blank product filled from the duplicate
     val g1 = norm(facade.collect()).find(_._1 == "g1").get._2

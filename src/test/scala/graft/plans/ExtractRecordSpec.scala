@@ -33,4 +33,23 @@ class ExtractRecordSpec extends SparkSpec {
         |FROM corpus_junk""".stripMargin).head()
     assert(r.isNullAt(0) && r.getInt(1) == 0 && r.getInt(2) == 0)
   }
+
+  test("collapse's char loop equals the trim + whitespace-regex form") {
+    val ws = java.util.regex.Pattern.compile("\\s+")
+    val cases = Seq(
+      "", " ", " \t\r\n\u000B\f ", "plain", "  a  b  ",
+      "\u0001a\u0001b\u0001",      // trimmed at the ends, kept inside
+      "a\u00A0 b\u00A0",            // NBSP is not \s and not trimmed
+      "a\u000Bb", "a\fb", "a\rb", "a\tb", "a\u001Fb",
+      "x \t\r\n\u000B\f y", "\t a \u000B\u000B b\f\f c \r",
+      "Trial Status:  Ongoing\r", "\u0001 \u0002")
+    // plus seeded random strings over the same alphabet
+    val alphabet = " \t\n\u000B\f\r\u0001\u001F\u00A0ab"
+    val rnd = new scala.util.Random(42)
+    val random = Seq.fill(2000)(
+      Seq.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    for (c <- cases ++ random)
+      assert(ExtractRecord.collapse(c) == ws.matcher(c.trim).replaceAll(" "),
+        c.map(ch => f"\\u${ch.toInt}%04x").mkString)
+  }
 }
