@@ -4,7 +4,7 @@ import graft.{Caches, Family}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Q, T}
+import graft.core.Q
 import graft.llm.LlmText.{docs, tokens}
 
 /** Corpus mining passes beyond the dedup/quality families: collocation

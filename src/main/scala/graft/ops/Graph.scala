@@ -94,18 +94,14 @@ object Graph {
     * edge list, persisted once: q122 is its top-30, q113's canonical
     * edge set is its key projection (support rows are distinct pairs
     * by construction), q137's cosine numerator is its counts. Built
-    * from [[orderItems]] via per-order part sets (collect_set, bounded
-    * ≤ 7 lineitems per TPC-H order) expanded to ≤ C(7,2) pairs
-    * map-side — order baskets are schema-bounded, so the mega-basket
-    * tiling hedge stays where baskets are unbounded ([[pairCounts]],
-    * q133's customer baskets). */
+    * from [[orderItems]] via per-order sorted part sets ([[basketsOf]],
+    * bounded ≤ 7 lineitems per TPC-H order) expanded to their ≤ C(7,2)
+    * pairs map-side by [[basketPairs]] — order baskets are
+    * schema-bounded, so the mega-basket tiling hedge stays where
+    * baskets are unbounded ([[pairCounts]], q133's customer baskets). */
   private[graft] def pairSupport(s: SparkSession, dir: String): DataFrame =
     Caches.memo(Family.Graph, s, "pairSupport|" + dir) {
-      orderItems(s, dir)
-        .groupBy("k").agg(collect_set(col("p")).as("ps"))
-        .select(explode(col("ps")).as("pa"), col("ps"))
-        .select(col("pa"), explode(col("ps")).as("pb"))
-        .filter(col("pa") < col("pb"))
+      basketPairs(basketsOf(orderItems(s, dir)))
         .groupBy("pa", "pb").agg(count(lit(1)).as("n"))
         .persist()
     }(_.unpersist())
@@ -311,9 +307,10 @@ object Graph {
     // ≤ each sub-pair's) means candidates are exactly the fp×fp×fp
     // closures of the FREQUENT-pair table, which the support
     // threshold makes small-by-construction (8,976 rows at sf0.1
-    // against 12.7M raw pairs) — broadcastable, so the only
-    // corpus-side work after the pair count is three broadcast-pruned
-    // equi-joins and one hash agg. The oracle states the SAME pruned
+    // against 12.7M raw pairs) — broadcastable. Both passes read ONE
+    // persisted sorted part set per customer ([[Graph.frequentTriples]]),
+    // so no join reads the items twice where the SQL form self-joins
+    // them three times. The oracle states the SAME pruned
     // formulation; the pruning is a theorem, not an approximation, so
     // it computes exactly the brute triple counts (FrequentTriplesSpec
     // pins that equivalence on adversarial synthetic baskets where
@@ -334,22 +331,12 @@ object Graph {
         |        GROUP BY 1, 2, 3)
         |SELECT pa, pb, pc, n::BIGINT AS support FROM tri WHERE n >= 3
         |ORDER BY pa, pb, pc""".stripMargin) { (s, dir) =>
-      // DELIBERATELY a fresh fact-scan lineage, NOT the family's
-      // cached (order, part) frame (round 14): frequentTriples
-      // consumes `items` four times, and with identical file-scan
-      // subtrees Spark's exchange reuse + file-stats-driven broadcast
-      // planning keep that cheap — rerooting on the InMemoryRelation
-      // (with or without persisting the derived basket frame) flipped
-      // the downstream join strategies and measured 2× SLOWER
-      // (TripleAb interleaved A/B at sf0.1: direct median 4.4 s vs
-      // cached 9.0 s cold). Cache reuse is not free when it changes
-      // the optimizer's evidence.
+      // no distinct: collect_set dedups each basket
       val items = T.df(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
         .join(T.df(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("k"), col("l_partkey").as("p"))
-        .distinct()
       frequentTriples(items, 3)
     },
 
@@ -513,86 +500,97 @@ object Graph {
     lab
   }
 
-  /** Apriori frequent-3-itemset mining over (basket `k`, item `p`)
-    * rows — see q133's scaladoc for the scale argument. Factored so
-    * FrequentTriplesSpec can drive it with synthetic baskets where
-    * brute C(n,3) enumeration is feasible to compare against. */
-  /** q133's pair-count stage with the mega-basket hedge (round 14 —
-    * VERDICT r13 item 3). The plain self-join `items ⋈ items ON k,
-    * p < p` is per-key quadratic: ONE task materializes C(M,2) rows
-    * for a customer holding M distinct parts, so a single 10⁴-item
-    * basket squares inside one task while 31 cores idle (the round-14
-    * basket sweep measured the cliff). Hedge: tag each row with its
-    * basket size via a window count (same k-shuffle the join needs anyway);
-    * baskets ≤ `threshold` take the direct join unchanged, baskets
-    * above it are bucket-tiled — slice each item by hash(p) mod S,
-    * assign pair (x, y) to the ordered tile (slice(x), slice(y)),
-    * and realize the tiling as a join on the composite key
+  /** Each basket `k`'s distinct non-null items as ONE ascending array
+    * `ps` — collect_set dedups, so callers need no distinct over their
+    * (k, p) rows. */
+  private[graft] def basketsOf(items: DataFrame): DataFrame =
+    items.groupBy("k").agg(array_sort(collect_set(col("p"))).as("ps"))
+
+  /** Every (pa < pb) pair of each basket's sorted set `ps`: item i
+    * pairs with the items after it, so a basket of n emits exactly
+    * C(n,2) rows and none is built to be filtered away. The one basket
+    * → pairs expansion of this file ([[pairSupport]], [[pairCounts]]). */
+  private def basketPairs(baskets: DataFrame): DataFrame =
+    baskets.select(col("ps"), posexplode(col("ps")).as(Seq("i", "pa")))
+      .select(col("pa"),
+        explode(slice(col("ps"), col("i") + 2, size(col("ps")) - col("i") - 1)).as("pb"))
+
+  /** Pair support (pa < pb, n) over [[basketsOf]] rows, with the
+    * mega-basket hedge (round 14 — VERDICT r13 item 3). A basket's
+    * in-row expansion is per-key quadratic: ONE task materializes
+    * C(M,2) rows for a customer holding M distinct parts, so a single
+    * 10⁴-item basket squares inside one task while 31 cores idle (the
+    * round-14 basket sweep measured the cliff). Hedge: baskets ≤
+    * `threshold` expand in-row; baskets above it explode back to
+    * (k, p) rows and are bucket-tiled — slice each item by hash(p)
+    * mod S, assign pair (x, y) to the ordered tile (slice(x),
+    * slice(y)), and realize the tiling as a join on the composite key
     * (k, tileRow, tileCol): x replicates as the LEFT of tiles
     * (sx, *), y as the RIGHT of tiles (*, sy), so each qualifying
     * pair matches in EXACTLY one tile — exact counts, no dedup pass,
     * 2S-fold replication of only the oversized baskets, and the
-    * quadratic work spreads over ~S²/2 tasks of (M/S)² each. When no
-    * basket crosses the threshold the tiled branch is an empty frame
-    * and the hedge's cost is the window count alone
-    * (FrequentTriplesSpec pins brute equality across the boundary). */
-  private[graft] def pairCounts(items: org.apache.spark.sql.DataFrame,
+    * quadratic work spreads over ~S²/2 tasks of (M/S)² each. The tiled
+    * branch enters the plan only when the widest basket crosses the
+    * threshold: one driver scalar over the (cached) baskets, which
+    * also fills the cache before the pair stage reads it. The count
+    * has map-side partials (FrequentTriplesSpec pins brute equality
+    * across the boundary). */
+  private[graft] def pairCounts(baskets: DataFrame,
                                 threshold: Int = 4096,
-                                slices: Int = 16): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Explicit k-repartition at the SESSION's shuffle width (round 21,
-    // guide §2.5's expansion trap): the window's ENSURE_REQUIREMENTS
-    // exchange reads ~11 MB of (k, p) rows, so AQE coalesced it to 10
-    // partitions — but the stage ABOVE it expands each basket to its
-    // C(n,2) pairs (114.8 MB of pair partials, StageProf: 10.8 s over
-    // 10 tasks, the query's single biggest stage), so coalescing by
-    // INPUT size starves exactly the stage that does the work. An
-    // explicit numPartitions pins the exchange against AQE coalescing;
-    // the width is the session's spark.sql.shuffle.partitions (a
-    // deployment's scale dial, 32 = cores locally), never a constant.
-    val nParts = items.sparkSession.sessionState.conf.numShufflePartitions
-    val sized = items.repartition(nParts, col("k")).withColumn("bn",
-      count(lit(1)).over(Window.partitionBy("k")))
-    val small = sized.filter(col("bn") <= threshold).select("k", "p")
-    val smallPairs = small.as("a")
-      .join(small.as("b"),
-        col("a.k") === col("b.k") && col("a.p") < col("b.p"))
-      .select(col("a.p").as("pa"), col("b.p").as("pb"))
-    val big = sized.filter(col("bn") > threshold)
-      .select(col("k"), col("p"),
-        pmod(xxhash64(col("p")), lit(slices)).cast("int").as("sl"))
-    val left = big
-      .withColumn("tc", explode(sequence(lit(0), lit(slices - 1))))
-      .select(col("k"), col("p"), col("sl").as("tr"), col("tc"))
-    val right = big
-      .withColumn("tr", explode(sequence(lit(0), lit(slices - 1))))
-      .select(col("k").as("k2"), col("p").as("p2"), col("tr"), col("sl").as("tc"))
-    val bigPairs = left.join(right,
-        col("k") === col("k2") && left("tr") === right("tr") &&
-          left("tc") === right("tc") && col("p") < col("p2"))
-      .select(col("p").as("pa"), col("p2").as("pb"))
-    smallPairs.unionByName(bigPairs)
-      .groupBy("pa", "pb").agg(count(lit(1)).as("n"))
+                                slices: Int = 16): DataFrame = {
+    val widest = baskets.select(coalesce(max(size(col("ps"))), lit(0))).head().getInt(0)
+    val pairs =
+      if (widest <= threshold) basketPairs(baskets)
+      else {
+        val big = baskets.filter(size(col("ps")) > threshold)
+          .select(col("k"), explode(col("ps")).as("p"))
+          .withColumn("sl", pmod(xxhash64(col("p")), lit(slices)).cast("int"))
+        val left = big
+          .withColumn("tc", explode(sequence(lit(0), lit(slices - 1))))
+          .select(col("k"), col("p"), col("sl").as("tr"), col("tc"))
+        val right = big
+          .withColumn("tr", explode(sequence(lit(0), lit(slices - 1))))
+          .select(col("k").as("k2"), col("p").as("p2"), col("tr"), col("sl").as("tc"))
+        val bigPairs = left.join(right,
+            col("k") === col("k2") && left("tr") === right("tr") &&
+              left("tc") === right("tc") && col("p") < col("p2"))
+          .select(col("p").as("pa"), col("p2").as("pb"))
+        basketPairs(baskets.filter(size(col("ps")) <= threshold)).unionByName(bigPairs)
+      }
+    pairs.groupBy("pa", "pb").agg(count(lit(1)).as("n"))
   }
 
-  private[graft] def frequentTriples(items: org.apache.spark.sql.DataFrame,
-                                     minSup: Int): org.apache.spark.sql.DataFrame = {
-    val pairs = pairCounts(items)
-    // PERSIST the frequent-pair table (round 21, guide §2.4/§5): fp is
-    // consumed THREE times below (f/g sides of the candidate closure
-    // plus the h LeftSemi), and while AQE's exchange reuse already
-    // dedupes the pair-partial SHUFFLE, each consumer re-ran the FINAL
-    // support aggregation over that exchange — StageProf measured the
-    // 114.8 MB pair-partial exchange read + final-agg'd 3× (8.7/8.2/
-    // 8.1 s executor time of a 40.8 s query, ~60% of all executor
-    // work). fp post-filter is support-thresholded small (8,976 rows
-    // at sf0.1 — the same smallness the broadcast hints below already
-    // rely on), so caching it is bounded by the SAME argument; the
-    // round-14 TripleAb finding (caching ITEMS flipped downstream join
-    // strategies 2× slower) does not apply because every downstream
-    // consumer of fp/cand carries an explicit broadcast hint.
-    // Released by the query's own hook (Caches.persistForQuery).
-    val fp = pairs.filter(col("n") >= minSup).select("pa", "pb").transform(Caches.persistForQuery)
+  /** Apriori frequent-3-itemset mining over (basket `k`, item `p`)
+    * rows — see q133's scaladoc for the scale argument. One basket
+    * row per key, persisted for the query, feeds both passes with no
+    * join on the items: pairs come from [[pairCounts]], and a
+    * candidate triple (pa, pb, pc) is supported by a basket when the
+    * basket's exploded `pa` meets the broadcast candidate table and
+    * `ps` contains pb and pc. `array_contains` is O(|basket|) per
+    * candidate row, and it runs on every basket, tiled ones included:
+    * a basket of M items meeting r candidate rows costs O(M·r) probes
+    * plus O(M²) bytes of exploded rows (each carries `ps`), in one
+    * task — the same order as that basket's C(M,2) pair expansion.
+    * `threshold` is [[pairCounts]]'s, a seam for FrequentTriplesSpec. */
+  private[graft] def frequentTriples(items: DataFrame, minSup: Int,
+                                     threshold: Int = 4096): DataFrame = {
+    // Explicit k-repartition at the SESSION's shuffle width (round 21,
+    // guide §2.5's expansion trap): the (k, p) exchange reads a few MB,
+    // so AQE would coalesce it by INPUT size — but the stage above it
+    // expands each basket to its C(n,2) pairs (114.8 MB of pair partials
+    // at sf0.1), so coalescing starves exactly the stage that does the
+    // work. numPartitions pins the exchange against AQE coalescing; the
+    // width is the session's spark.sql.shuffle.partitions, never a
+    // constant. Released by the query's own hook.
+    val nParts = items.sparkSession.sessionState.conf.numShufflePartitions
+    val baskets = basketsOf(items.repartition(nParts, col("k")))
+      .transform(Caches.persistForQuery)
+    // fp is read three times by the candidate closure (f, g and the h
+    // LeftSemi); persisting it runs the support count once. It is
+    // support-thresholded small (8,976 rows at sf0.1), the smallness
+    // the broadcast hints below rely on. Released by the query's hook.
+    val fp = pairCounts(baskets, threshold).filter(col("n") >= minSup)
+      .select("pa", "pb").transform(Caches.persistForQuery)
     val fpH = fp.select(col("pa").as("hpa"), col("pb").as("hpb"))
     val cand = broadcast(fp).as("f")
       .join(broadcast(fp).as("g"),
@@ -600,9 +598,9 @@ object Graph {
       .select(col("f.pa").as("pa"), col("f.pb").as("pb"), col("g.pb").as("pc"))
       .join(broadcast(fpH),
         col("hpa") === col("pb") && col("hpb") === col("pc"), "leftsemi")
-    items.as("x").join(broadcast(cand), col("x.p") === col("pa"))
-      .join(items.as("y"), col("y.k") === col("x.k") && col("y.p") === col("pb"))
-      .join(items.as("z"), col("z.k") === col("x.k") && col("z.p") === col("pc"))
+    baskets.select(col("ps"), explode(col("ps")).as("pa"))
+      .join(broadcast(cand), "pa")
+      .filter(array_contains(col("ps"), col("pb")) && array_contains(col("ps"), col("pc")))
       .groupBy("pa", "pb", "pc").agg(count(lit(1)).as("support"))
       .filter(col("support") >= minSup)
       .orderBy("pa", "pb", "pc")

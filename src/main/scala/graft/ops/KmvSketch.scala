@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** KMV (k-minimum-values) distinct-count sketch as a typed

@@ -1,8 +1,7 @@
 package graft.registry
 
 import graft.Family
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import graft.core.Q
 
 /** The reference-parity pipeline registered as driver-gradable queries.

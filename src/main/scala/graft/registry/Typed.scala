@@ -1,7 +1,6 @@
 package graft.registry
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Typed surface over the merged registry (Dataset[T] with case-class
   * Encoders where type safety helps — compile-checked field access for

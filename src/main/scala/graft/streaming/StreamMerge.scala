@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.registry.{FieldKind, FieldSpec}
 

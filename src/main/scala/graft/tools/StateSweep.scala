@@ -73,7 +73,7 @@ object StateSweep {
       val in = clonedEvents(spark, src, factor).persist()
       val nIn = in.count() // materialize input outside the timed region
       val t0 = System.nanoTime()
-      scd2(spark, in).write.format("noop").mode("overwrite").save()
+      scd2(in).write.format("noop").mode("overwrite").save()
       println(f"== q85 SCD-2, ${factor}x ($nIn%,d events): " +
         f"${(System.nanoTime() - t0) / 1e9}%.2f s ==")
       in.unpersist()
@@ -119,7 +119,7 @@ object StateSweep {
   /** q86's exact topology ([[graft.streaming.Streams.clickPurchaseJoin]])
     * over the staged chunk files; prints per-batch state metrics. */
   private def runJoin(spark: SparkSession, landing: String,
-      joinType: String = "inner"): Unit = {
+      joinType: String): Unit = {
     val q = graft.streaming.Streams.clickPurchaseJoin(chunkStream(spark, landing), joinType)
       .writeStream
       .outputMode("append")
@@ -162,7 +162,7 @@ object StateSweep {
   }
 
   /** q85's SCD-2 build (Extras.scala), parameterized by input frame. */
-  private def scd2(spark: SparkSession, events: DataFrame): DataFrame = {
+  private def scd2(events: DataFrame): DataFrame = {
     val ord = Window.partitionBy("user_id").orderBy("ts", "event_id")
     events
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))

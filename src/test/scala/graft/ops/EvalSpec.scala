@@ -114,7 +114,7 @@ class EvalSpec extends SparkSpec {
     // sim² = 9/9 → 1_000_000 micro; part 30 appears once with them
     val it = Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L),
       (3L, 10L), (3L, 20L), (3L, 30L)).toDF("k", "p")
-    val co = Graph.pairCounts(it).collect()
+    val co = Graph.pairCounts(Graph.basketsOf(it)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(co == Map((10L, 20L) -> 3L, (10L, 30L) -> 1L, (20L, 30L) -> 1L))
     // the q137 scoring formula on the (10,20) edge
